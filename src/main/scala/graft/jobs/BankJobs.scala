@@ -92,22 +92,34 @@ object BankJobs {
     * including the quirks: the `cte_cust_accum_revenue` join on `cust_id`
     * alone (a deliberate fan-out preserved from the reference), the
     * month-of-any-year average join, and the misspelled
-    * `cust_avgerage_daily_spending` column (SURVEY.md §7.4.4). */
+    * `cust_avgerage_daily_spending` column (SURVEY.md §7.4.4).
+    *
+    * The inputs are bound into the parsed plan in place of the SQL's table
+    * names, so no temp view is created: a caller's own views are left
+    * alone and concurrent calls on one session do not interfere. */
   def factDailyTransaction(spark: SparkSession,
                            paymentTransaction: DataFrame, paymentType: DataFrame,
                            dimDate: DataFrame, account: DataFrame,
                            accountType: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
     val pmFull = paymentTransaction
       .join(paymentType, paymentTransaction("payment_code") === paymentType("type_code"))
       .withColumn("transaction_date", to_date(col("transaction_time")))
-    pmFull.createOrReplaceTempView("dim_payment_transaction")
-    dimDate.createOrReplaceTempView("dim_date")
-    account.createOrReplaceTempView("dim_account")
-    accountType.createOrReplaceTempView("dim_account_type")
-    val out = spark.sql(FactSql)
-    Seq("dim_payment_transaction", "dim_date", "dim_account", "dim_account_type")
-      .foreach(spark.catalog.dropTempView)
-    out
+    val inputs = Map("dim_payment_transaction" -> pmFull, "dim_date" -> dimDate,
+      "dim_account" -> account, "dim_account_type" -> accountType)
+    // CTE bodies are inner children of UnresolvedWith, not reached by transformUp
+    def bind(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+      case r: UnresolvedRelation if r.multipartIdentifier.size == 1 &&
+          inputs.contains(r.multipartIdentifier.head) =>
+        val name = r.multipartIdentifier.head
+        SubqueryAlias(name, inputs(name).queryExecution.analyzed)
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { case (n, q, depth) =>
+          (n, bind(q).asInstanceOf[SubqueryAlias], depth) })
+    }
+    org.apache.spark.sql.GraftColumnBridge.dataset(spark,
+      bind(spark.sessionState.sqlParser.parsePlan(FactSql)))
   }
 
   /** DataFrame-DSL formulation of the fact query — same semantics as
@@ -293,15 +305,13 @@ object BankJobs {
     df
   }
 
-  /** Dual-destination write (`r2g_account.py:74-75` etc.) — with a persist
-    * so the plan isn't recomputed for the second write (the reference
+  /** Dual-destination write (`r2g_account.py:74-75` etc.) of a frame the
+    * caller has persisted: golden first, then backup, which reads the cache
+    * the first write filled instead of recomputing the plan (the reference
     * recomputes; SURVEY.md §4). */
-  def dualWrite(df: DataFrame, mainDest: String, backupDest: String): Unit = {
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      cached.write.mode(SaveMode.Overwrite).parquet(mainDest)
-      cached.write.mode(SaveMode.Overwrite).parquet(backupDest)
-    } finally cached.unpersist()
+  def dualWrite(cached: DataFrame, mainDest: String, backupDest: String): Unit = {
+    cached.write.mode(SaveMode.Overwrite).parquet(mainDest)
+    cached.write.mode(SaveMode.Overwrite).parquet(backupDest)
   }
 
   /** Micro-batch raw-zone ingestion (§2.13 tied to the jobs layer): stream
@@ -330,25 +340,59 @@ object BankJobs {
 
   /** The full r2g job (`initEtl`, `r2g_account.py:42-64`): per-table
     * sync/scd2 dims, date dim, fact — reading `<rawDir>/<table>.csv`,
-    * writing `<goldenDir>/kietl_dim_*` (+ backup). */
+    * writing `<goldenDir>/kietl_dim_*` (+ backup).
+    *
+    * Task graph: the five raw tables and the date dim are six independent
+    * tasks, run at once through [[graft.orchestrate.Concurrent.all]]; each
+    * builds its frame, persists it once and [[dualWrite]]s it, golden then
+    * backup. The fact is a seventh task that starts as soon as
+    * payment_transaction, payment_type, account and account_type are
+    * persisted and computes from those caches, not from the CSVs: a cached
+    * partition is computed once, by whichever job reaches it first (the
+    * fact's or the table's own golden write), and read from the cache by
+    * the other. The fact is persisted and dual-written the same way.
+    *
+    * Cache lifetime: every frame this call persists stays cached until all
+    * seven tasks have finished and is released in a `finally`, the fact
+    * first, on success and on failure alike.
+    *
+    * Failure: a failing fact input also fails the fact task waiting on it.
+    * The call returns or throws only after every task has finished, and
+    * throws the first failure in task order (the five raw tables in
+    * [[etlTypeMapping]] order, then the date dim, then the fact). The
+    * returned frames are no longer cached. */
   def runAll(spark: SparkSession, rawDir: String, goldenDir: String,
              backupDir: String, asOf: Option[String] = None): Map[String, DataFrame] = {
-    val dims = etlTypeMapping.map { case (table, etlType) =>
-      val raw = readRawCsv(spark, s"$rawDir/$table.csv")
-      val df = etlType match {
-        case "scd2" => scd2Dim(raw, asOf)
-        case "sync" => syncDim(raw)
+    import scala.concurrent.{Await, Promise}
+    import scala.concurrent.duration.Duration
+    val persisted = new java.util.concurrent.ConcurrentLinkedDeque[DataFrame]()
+    val factInputs = Seq("payment_transaction", "payment_type", "account", "account_type")
+    val cached = factInputs.map(_ -> Promise[DataFrame]()).toMap
+    def task(name: String, dir: String)(build: => DataFrame): () => (String, DataFrame) = () =>
+      try {
+        val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        persisted.push(df)
+        cached.get(name).foreach(_.success(df))
+        dualWrite(df, s"$goldenDir/$dir", s"$backupDir/$dir")
+        name -> df
+      } catch { case e: Throwable => cached.get(name).foreach(_.tryFailure(e)); throw e }
+    val dims = etlTypeMapping.toSeq.map { case (table, etlType) =>
+      task(table, s"kietl_dim_$table") {
+        val raw = readRawCsv(spark, s"$rawDir/$table.csv")
+        etlType match {
+          case "scd2" => scd2Dim(raw, asOf)
+          case "sync" => syncDim(raw)
+        }
       }
-      dualWrite(df, s"$goldenDir/kietl_dim_$table", s"$backupDir/kietl_dim_$table")
-      table -> df
     }
     val dates = dateDim(spark)
-    dualWrite(dates, s"$goldenDir/kietl_dim_date", s"$backupDir/kietl_dim_date")
-    val fact = factDailyTransaction(spark,
-      dims("payment_transaction"), dims("payment_type"), dates,
-      dims("account"), dims("account_type"))
-    dualWrite(fact, s"$goldenDir/kietl_fact_snapshot_daily_transaction",
-      s"$backupDir/kietl_fact_snapshot_daily_transaction")
-    dims ++ Map("dim_date" -> dates, "fact" -> fact)
+    val date = task("dim_date", "kietl_dim_date")(dates)
+    val fact = task("fact", "kietl_fact_snapshot_daily_transaction") {
+      val Seq(pt, ptype, account, accountType) =
+        factInputs.map(t => Await.result(cached(t).future, Duration.Inf))
+      factDailyTransaction(spark, pt, ptype, dates, account, accountType)
+    }
+    try graft.orchestrate.Concurrent.all(dims :+ date :+ fact).toMap
+    finally persisted.forEach(_.unpersist()) // newest first: the fact before its inputs
   }
 }

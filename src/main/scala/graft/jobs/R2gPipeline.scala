@@ -2,7 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.SparkSession
 
-import graft.orchestrate.Pipeline
+import graft.orchestrate.{Concurrent, Pipeline}
 import graft.sources.GraftCatalog
 
 /** The whole reference state machine (SURVEY.md §3.1: Step Function →
@@ -23,21 +23,23 @@ object R2gPipeline {
 
   /** Run extract → transform → catalog-refresh. Returns the stage log. */
   def run(spark: SparkSession, config: Config): Seq[Pipeline.StageStatus] = {
-    var frames: Map[String, org.apache.spark.sql.DataFrame] = Map.empty
     val stages = Seq(
       Pipeline.Stage("extract_raw", Pipeline.RetryPolicy.LambdaTask) { () =>
         config.extract.foreach(_.apply())
       },
       Pipeline.Stage("transform_golden", Pipeline.RetryPolicy.GlueTask) { () =>
-        frames = BankJobs.runAll(spark, config.rawDir, config.goldenDir,
+        BankJobs.runAll(spark, config.rawDir, config.goldenDir,
           config.backupDir, config.asOf)
       },
       Pipeline.Stage("catalog_refresh", Pipeline.RetryPolicy.GlueTask) { () =>
-        // the crawler step: register every golden table in the catalog
+        // the crawler step: register every golden table in the catalog,
+        // the seven crawls at once (the database first, so they do not race
+        // to create it)
         val cat = new GraftCatalog(spark)
+        cat.createDatabase(config.catalogDb)
         val tables = BankJobs.etlTypeMapping.keys.map(t => s"kietl_dim_$t").toSeq ++
           Seq("kietl_dim_date", "kietl_fact_snapshot_daily_transaction")
-        tables.foreach(t => cat.crawl(config.catalogDb, t, s"${config.goldenDir}/$t"))
+        Concurrent.all(tables.map(t => () => cat.crawl(config.catalogDb, t, s"${config.goldenDir}/$t")))
       })
     Pipeline.run(stages)
   }

@@ -152,19 +152,98 @@ class BankJobsSpec extends SparkSpec {
     assert(canon(sqlFact) == canon(dslFact))
   }
 
+  test("factDailyTransaction leaves a caller's views with the input names alone") {
+    val mine = Seq(("x", "y")).toDF("a", "b")
+    mine.createOrReplaceTempView("dim_account")
+    try {
+      val pm = BankJobs.readRawCsv(spark, s"$rawDir/payment_transaction.csv")
+      val ptype = BankJobs.readRawCsv(spark, s"$rawDir/payment_type.csv")
+      val account = BankJobs.readRawCsv(spark, s"$rawDir/account.csv")
+      val accountType = BankJobs.readRawCsv(spark, s"$rawDir/account_type.csv")
+      val fact = BankJobs.factDailyTransaction(spark, pm, ptype,
+        BankJobs.dateDim(spark, "2023-01-01", "2023-03-01"), account, accountType)
+      assert(fact.count() > 0)
+      val view = spark.table("dim_account")
+      assert(view.columns.toSeq == Seq("a", "b"))
+      assert(view.as[(String, String)].collect().toSeq == Seq(("x", "y")))
+      assert(!spark.catalog.tableExists("dim_payment_transaction"))
+    } finally spark.catalog.dropTempView("dim_account")
+  }
+
+  /** Each runAll table computed on its own from the CSV fixtures. The
+    * fact's payment-type list is a set (`collect_list(distinct …)`), whose
+    * element order follows aggregation order, so it is compared sorted. */
+  private def expectedTables(asOf: Option[String]): Map[String, org.apache.spark.sql.DataFrame] = {
+    def raw(t: String) = BankJobs.readRawCsv(spark, s"$rawDir/$t.csv")
+    val dims = BankJobs.etlTypeMapping.map { case (t, etlType) =>
+      s"kietl_dim_$t" -> (if (etlType == "scd2") BankJobs.scd2Dim(raw(t), asOf) else BankJobs.syncDim(raw(t)))
+    }
+    dims ++ Map(
+      "kietl_dim_date" -> BankJobs.dateDim(spark),
+      "kietl_fact_snapshot_daily_transaction" -> BankJobs.factDailyTransaction(spark,
+        raw("payment_transaction"), raw("payment_type"), BankJobs.dateDim(spark),
+        raw("account"), raw("account_type")))
+  }
+
+  private def sortedPaymentTypes(df: org.apache.spark.sql.DataFrame) =
+    if (!df.columns.contains("cust_daily_payment_type")) df
+    else df.withColumn("cust_daily_payment_type", sort_array(col("cust_daily_payment_type")))
+
   test("runAll writes dims + date dim + fact to both destinations") {
     val out = java.nio.file.Files.createTempDirectory("golden").toString
-    val frames = BankJobs.runAll(spark, rawDir, s"$out/golden", s"$out/backup",
-      asOf = Some("2024-08-07 00:00:00"))
+    val asOf = Some("2024-08-07 00:00:00")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val frames = BankJobs.runAll(spark, rawDir, s"$out/golden", s"$out/backup", asOf)
     assert(frames.keySet == Set("account", "account_type", "customer",
       "payment_transaction", "payment_type", "dim_date", "fact"))
-    for (t <- Seq("kietl_dim_account", "kietl_dim_date", "kietl_fact_snapshot_daily_transaction")) {
-      assert(spark.read.parquet(s"$out/golden/$t").count() > 0)
-      assert(spark.read.parquet(s"$out/backup/$t").count() > 0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty)
+    val expected = expectedTables(asOf)
+    assert(expected.size == 7)
+    for ((table, want) <- expected; zone <- Seq("golden", "backup")) {
+      val got = sortedPaymentTypes(spark.read.parquet(s"$out/$zone/$table"))
+      val exp = sortedPaymentTypes(want)
+      assert(got.count() > 0, s"$zone/$table is empty")
+      assert(got.exceptAll(exp).isEmpty && exp.exceptAll(got).isEmpty, s"$zone/$table differs")
     }
     // scd2 dims got the synthetic columns; sync dims stayed verbatim
     assert(spark.read.parquet(s"$out/golden/kietl_dim_account").columns.contains("is_active"))
     assert(!spark.read.parquet(s"$out/golden/kietl_dim_payment_type").columns.contains("is_active"))
+  }
+
+  test("runAll with a raw table missing throws its error after every sibling task ends") {
+    import scala.jdk.CollectionConverters._
+    // the first table in task order: a runAll that rethrew without waiting
+    // would return while every sibling is still running
+    val missing = BankJobs.etlTypeMapping.keys.head
+    val present = BankJobs.etlTypeMapping.keys.filter(_ != missing).toSeq
+    val raw = java.nio.file.Files.createTempDirectory("raw")
+    for (t <- present)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$rawDir/$t.csv"), raw.resolve(s"$t.csv"))
+    val out = java.nio.file.Files.createTempDirectory("golden").toString
+    val jobStarts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobStarts.add(e.time)
+    }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val err = intercept[Exception] {
+        BankJobs.runAll(spark, raw.toString, s"$out/golden", s"$out/backup")
+      }
+      val returnedAt = System.currentTimeMillis()
+      assert(err.getMessage.contains(s"$missing.csv"), err.getMessage)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty)
+      assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName.startsWith("graft-concurrent")))
+      Thread.sleep(2000) // the listener bus delivers events asynchronously
+      assert(!jobStarts.isEmpty, "the sibling tables ran no job")
+      assert(jobStarts.asScala.forall(_ <= returnedAt), "a job started after runAll returned")
+      // every sibling ran to completion; the fact ran only if its inputs were all there
+      def written(t: String) = new java.io.File(s"$out/backup/$t/_SUCCESS").exists()
+      for (t <- present.map(t => s"kietl_dim_$t") :+ "kietl_dim_date") assert(written(t), t)
+      val factInput = Set("payment_transaction", "payment_type", "account", "account_type")(missing)
+      assert(written("kietl_fact_snapshot_daily_transaction") != factInput)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("R2gPipeline: extract -> transform -> catalog refresh end-to-end") {
