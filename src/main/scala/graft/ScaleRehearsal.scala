@@ -459,7 +459,7 @@ object ScaleRehearsal {
             if (!present) {
               if (!killed) {
                 killed = true
-                B.buildIncIndex(batch, "doc_id", "text").postings
+                B.tfRows(B.tokenized(batch, "doc_id", "text"))
                   .write.mode("append").parquet(s"$tmp/index/postings")
                 throw new RuntimeException("simulated kill mid-append")
               }

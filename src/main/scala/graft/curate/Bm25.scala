@@ -13,82 +13,27 @@ import graft.functions.{TextFunctions => T}
   * Okapi BM25: score(q, d) = Σ_{t ∈ q} idf(t) · tf·(k1+1) /
   * (tf + k1·(1 − b + b·dl/avgdl)), idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5)).
   *
-  * Scale shape: the corpus tokenizes ONCE into a (term, doc_id, dl, tf,
-  * df) postings index (one corpus-sized shuffle; document frequency is
-  * folded into the postings at build time on the SAME term partitioning,
-  * so query-time scoring never re-aggregates it); the query term set
-  * rides a BROADCAST onto the postings (queries are seed-sized — the
-  * corpus never shuffles for them), and the per-(query, doc) sum is one
-  * candidate-sized aggregation. Top-k per query runs on the heap plan
+  * Scale shape: the corpus tokenizes ([[tokenized]]) into (doc_id, dl,
+  * term, tf) postings ([[tfRows]]) in one corpus-sized shuffle; the query
+  * term set rides a BROADCAST onto the postings (queries are seed-sized —
+  * the corpus never shuffles for them), and the per-(query, doc) sum is
+  * one candidate-sized aggregation. Top-k per query runs on the heap plan
   * node ([[graft.plan.TopKPerGroup]]) — shuffle bounded at partitions ×
   * queries × k, no per-query sort of the candidate set.
   *
-  * Lifecycle: [[buildIndex]] materializes the index eagerly (via
-  * localCheckpoint — block-manager blocks released by GC when the index
-  * goes unreferenced, never an entry in the cache manager), so nothing a
-  * one-shot [[scores]]/[[topK]] call caches outlives the call. For the
-  * at-scale reuse path, [[saveIndex]]/[[loadIndex]] persist the index as
-  * a table: build once, score every later query batch against storage
-  * without rescanning or re-tokenizing the corpus.
+  * Two entry points share that core:
+  *  - one-shot [[scores]]/[[topK]]: nothing stored, nothing cached after
+  *    the call — the reference every stored path is checked against;
+  *  - the STORED index ([[IncIndex]]): [[buildAndSaveIncIndex]] writes it
+  *    once, [[loadIncIndex]] + [[topKAgainstIncIndex]] serve every later
+  *    query batch from storage without re-tokenizing the corpus, and
+  *    [[appendIncIndex]] / [[deleteFromIncIndex]] / [[compactIncIndex]]
+  *    maintain it in place. [[Bm25Versioned]] keeps the same index under
+  *    snapshot versions and shares the append, removal and derive cores
+  *    below; the two tiers differ only in where they write and how they
+  *    commit ([[swapWrite]] here, `VersionedPool.publishMeta` there).
   */
 object Bm25 {
-
-  /** A built inverted index: `postings` is (term, doc_id, dl, tf, df) —
-    * document frequency pre-joined — plus the corpus stats the score
-    * formula needs. `nDocs`/`avgdl` count only docs with ≥1 token (blank
-    * docs can match nothing and must not dilute avgdl). */
-  final case class Index(postings: DataFrame, nDocs: Double, avgdl: Double)
-
-  /** Tokenize the corpus once and materialize the enriched postings.
-    * The raw (doc, term, tf) frame has two consumers (the df aggregation
-    * and the df join), so it persists for the build and unpersists before
-    * returning; the returned postings are an EAGER localCheckpoint —
-    * scoring reads materialized blocks, and no cache entry survives. An
-    * empty/all-blank corpus yields an empty index (nDocs = 0), which
-    * scores to an empty result downstream. */
-  def buildIndex(docs: DataFrame, docId: String, docText: String): Index = {
-    // Hash-scatter BY doc id at data-derived width before tokenizing
-    // (r14, guide §2.3): a single-file corpus otherwise runs the whole
-    // tokenize+explode+partial-agg stage as ONE task, and the keyed
-    // scatter also lets the (doc_id, dl, term) groupBy ride the
-    // partitioning with no further exchange — one shuffle total, now
-    // placed BELOW the tokenizer. No-op for already-wide inputs.
-    val corpus = graft.dedup.Dedup
-      .ensureParallelism(docs, Seq(col(docId)))
-      .select(col(docId).as("doc_id"), T.tokens(col(docText)).as("__toks"))
-      .filter(size(col("__toks")) > 0)
-    val tfs = corpus
-      .select(col("doc_id"), size(col("__toks")).cast("double").as("dl"),
-        explode(col("__toks")).as("term"))
-      .groupBy("doc_id", "dl", "term")
-      .agg(count(lit(1)).cast("double").as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // 1-row bounded collect: corpus doc count + mean length, computed from
-    // the slim cached index (doc_id is unique per (doc_id, dl) pair);
-    // doubles as the cache materialization
-    val statsRow = tfs.select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).cast("double"), avg(col("dl"))).collect()(0)
-    if (statsRow.isNullAt(1)) { // empty/all-blank corpus: avg(dl) is NULL
-      val empty = tfs.limit(0).withColumn("df", lit(0.0)).localCheckpoint(true).transform(graft.plan.Checkpoints.track)
-      tfs.unpersist(blocking = true)
-      Index(empty, 0.0, 1.0) // avgdl unused at nDocs = 0; 1.0 avoids 0/0
-    } else {
-      val dfs = tfs.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-      // same term partitioning as the tf groupBy — co-partitioned join.
-      // Coalesce the materialized postings to a CORPUS-SIZED partition
-      // count (nDocs is already known): the groupBy inherits the
-      // session-wide shuffle width, the checkpoint freezes it, and every
-      // later scoring job then pays one near-empty task per partition
-      // (measured ~0.4-1.2 s/job of task-launch overhead on small
-      // corpora). ~50k docs/partition ≈ 2M posting rows; narrow
-      // dependency, so the tokenize/shuffle parallelism is unchanged.
-      val parts = postingsParts(statsRow.getDouble(0))
-      val enriched = tfs.join(dfs, Seq("term")).coalesce(parts)
-        .localCheckpoint(true).transform(graft.plan.Checkpoints.track)
-      tfs.unpersist(blocking = true)
-      Index(enriched, statsRow.getDouble(0), statsRow.getDouble(1))
-    }
-  }
 
   /** Scale-adaptive partition count for materialized postings/df frames:
     * one partition per ~50k docs (≈2M posting rows at typical term
@@ -97,64 +42,56 @@ object Bm25 {
   private[curate] def postingsParts(nDocs: Double): Int =
     math.max(1L, (nDocs / 50000.0).toLong).toInt
 
-  /** The one tokenize shape every build/append path shares (keyed scatter
-    * below the tokenizer, blank docs dropped): (doc_id, __toks). Factored
-    * so the versioned tier's write-first paths produce byte-identical
-    * posting rows to the unversioned ones. */
-  private[curate] def tokenized(docs: DataFrame, docId: String,
-                                docText: String): DataFrame =
+  /** The one tokenize shape every BM25 path shares: (doc_id, __toks),
+    * blank docs dropped. Hash-scatters BY doc id at data-derived width
+    * before tokenizing (r14, guide §2.3): a single-file corpus otherwise
+    * runs the whole tokenize+explode+partial-agg stage as ONE task, and
+    * the keyed scatter lets [[tfRows]]' (doc_id, dl, term) groupBy ride
+    * the partitioning with no further exchange. No-op for already-wide
+    * inputs. */
+  private[graft] def tokenized(docs: DataFrame, docId: String,
+                               docText: String): DataFrame =
     graft.dedup.Dedup
       .ensureParallelism(docs, Seq(col(docId)))
       .select(col(docId).as("doc_id"), T.tokens(col(docText)).as("__toks"))
       .filter(size(col("__toks")) > 0)
 
-  /** (doc_id, dl, term, tf) rows of a tokenized corpus — the postings
-    * payload before df enrichment. */
-  private[curate] def tfRows(corpus: DataFrame): DataFrame =
+  /** (doc_id, dl, term, tf) rows of a [[tokenized]] corpus — the stored
+    * postings payload. */
+  private[graft] def tfRows(corpus: DataFrame): DataFrame =
     corpus
       .select(col("doc_id"), size(col("__toks")).cast("double").as("dl"),
         explode(col("__toks")).as("term"))
       .groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).cast("double").as("tf"))
 
-  /** Persist an index: postings as a parquet table, stats as a 1-row
-    * sidecar. Doubles round-trip parquet exactly, so a loaded index
-    * scores bit-identically to the in-memory one. */
-  def saveIndex(index: Index, path: String): Unit = {
-    index.postings.write.mode("overwrite").parquet(s"$path/postings")
-    val spark = index.postings.sparkSession
-    import spark.implicits._
-    Seq((index.nDocs, index.avgdl)).toDF("n_docs", "avgdl")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+  /** (term, df) of a postings frame. */
+  private def dfRows(postings: DataFrame): DataFrame =
+    postings.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
+
+  /** (nDocs, totalDl) of a postings frame — (0, 0) when it is empty. */
+  private def docStats(postings: DataFrame): (Double, Double) = {
+    val st = postings.select(col("doc_id"), col("dl")).distinct()
+      .agg(count(lit(1)).cast("double"), sum(col("dl"))).collect()(0)
+    if (st.isNullAt(1)) (0.0, 0.0) else (st.getDouble(0), st.getDouble(1))
   }
 
-  /** Load an index persisted by [[saveIndex]]. The postings frame is a
-    * plain storage-backed scan — nothing cached, serving-safe in a loop. */
-  def loadIndex(spark: SparkSession, path: String): Index = {
-    // 1-row sidecar: driver-local read, zero Spark jobs
-    val st = graft.sources.Pq.readSmall(spark, s"$path/stats")
-      .select(col("n_docs").cast("double"), col("avgdl").cast("double"))
-      .collect()(0)
-    Index(graft.sources.Pq.read(spark, s"$path/postings"), st.getDouble(0), st.getDouble(1))
-  }
+  private def queryTerms(queries: DataFrame, queryId: String,
+                         queryText: String): DataFrame =
+    queries.select(col(queryId).as("qid"),
+      explode(array_distinct(T.tokens(col(queryText)))).as("term"))
 
-  /** Raw BM25 scores against a built/loaded index for every (query, doc)
-    * pair sharing at least one term: (qid, doc_id, score) — unrounded
-    * doubles. The corpus side is never shuffled: query terms broadcast
-    * onto the postings and only matching rows enter the aggregation. */
-  def scoresAgainstIndex(index: Index, queries: DataFrame,
-                         queryId: String, queryText: String,
-                         k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val qterms = queries
-      .select(col(queryId).as("qid"),
-        explode(array_distinct(T.tokens(col(queryText)))).as("term"))
+  /** The Okapi score of every (qid, doc_id, tf, dl, df) candidate row,
+    * summed per (query, doc): (qid, doc_id, score), unrounded doubles.
+    * The one score expression both [[scores]] and [[scoresAgainstIncIndex]]
+    * use, so equal inputs give bit-identical scores on either path. */
+  private def scoreSums(cand: DataFrame, nDocs: Double, avgdl: Double,
+                        k1: Double, b: Double): DataFrame = {
     val idf = log(lit(1.0) +
-      (lit(index.nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+      (lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val termScore = idf * col("tf") * lit(k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(index.avgdl)))
-    index.postings
-      .join(broadcast(qterms), Seq("term"))
-      .select(col("qid"), col("doc_id"), termScore.as("__s"))
+      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl)))
+    cand.select(col("qid"), col("doc_id"), termScore.as("__s"))
       .groupBy("qid", "doc_id")
       .agg(sum(col("__s")).as("score"))
   }
@@ -164,52 +101,34 @@ object Bm25 {
     * QUERY terms, and the candidate join (postings ⋈ broadcast query
     * terms) already holds every (doc, term) row of those terms — so df
     * comes from a candidate-sized aggregation instead of the full
-    * vocabulary one, and the build's vocab shuffle + df join +
-    * postings checkpoint disappear. Two streaming passes over the
-    * corpus text (stats, then tf+join), nothing corpus-sized
-    * materialized — the shape that scales to corpora far beyond
-    * executor storage. df/nDocs values are the same integers as the
-    * index path's; avgdl is the same mean up to float summation order
-    * (scores are quantized with probed margins downstream). Docs with
-    * no tokens are excluded from the corpus statistics (they can match
-    * nothing). The candidate frame is an eager, tracked localCheckpoint
-    * (two consumers; candidate-sized by query-boundedness). */
+    * vocabulary one. Two streaming passes over the corpus text (stats,
+    * then tf+join), nothing corpus-sized materialized — the shape that
+    * scales to corpora far beyond executor storage. df/nDocs values are
+    * the same integers as the stored index's; avgdl is the same mean up
+    * to float summation order (scores are quantized with probed margins
+    * downstream). Docs with no tokens are excluded from the corpus
+    * statistics (they can match nothing). The candidate frame is an
+    * eager, tracked localCheckpoint (two consumers; candidate-sized by
+    * query-boundedness). */
   def scores(docs: DataFrame, docId: String, docText: String,
              queries: DataFrame, queryId: String, queryText: String,
              k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val corpus = graft.dedup.Dedup
-      .ensureParallelism(docs, Seq(col(docId)))
-      .select(col(docId).as("doc_id"), T.tokens(col(docText)).as("__toks"))
-      .filter(size(col("__toks")) > 0)
+    val corpus = tokenized(docs, docId, docText)
     // pass 1 — corpus stats, no shuffle, nothing cached
     val statsRow = corpus
       .agg(count(lit(1)).cast("double"), avg(size(col("__toks")).cast("double")))
       .collect()(0)
     val nDocs = statsRow.getDouble(0)
     val avgdl = if (statsRow.isNullAt(1)) 1.0 else statsRow.getDouble(1)
-    val tfs = corpus
-      .select(col("doc_id"), size(col("__toks")).cast("double").as("dl"),
-        explode(col("__toks")).as("term"))
-      .groupBy("doc_id", "dl", "term")
-      .agg(count(lit(1)).cast("double").as("tf"))
-    val qterms = queries
-      .select(col(queryId).as("qid"),
-        explode(array_distinct(T.tokens(col(queryText)))).as("term"))
+    val qterms = queryTerms(queries, queryId, queryText)
     // pass 2 — candidate rows: every (doc, term) posting of a query term
     val cand = graft.plan.Checkpoints.track(
-      tfs.join(broadcast(qterms.select("term").distinct()), Seq("term"))
+      tfRows(corpus).join(broadcast(qterms.select("term").distinct()), Seq("term"))
         .localCheckpoint(true))
     // df for query terms alone, from the candidates themselves
-    val dfs = cand.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    val idf = log(lit(1.0) +
-      (lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val termScore = idf * col("tf") * lit(k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl)))
-    cand.join(broadcast(qterms), Seq("term"))
-      .join(broadcast(dfs), Seq("term"))
-      .select(col("qid"), col("doc_id"), termScore.as("__s"))
-      .groupBy("qid", "doc_id")
-      .agg(sum(col("__s")).as("score"))
+    scoreSums(cand.join(broadcast(qterms), Seq("term"))
+        .join(broadcast(dfRows(cand)), Seq("term")),
+      nDocs, avgdl, k1, b)
   }
 
   /** Top `k` docs per query by BM25, with the score QUANTIZED to
@@ -227,17 +146,6 @@ object Bm25 {
       scores(docs, docId, docText, queries, queryId, queryText, k1, b),
       k, scoreDecimals)
 
-  /** [[topK]] served from a built/loaded index — the stored-artifact
-    * path: build once, save, then every query batch ranks against the
-    * index table without touching corpus text. */
-  def topKAgainstIndex(index: Index, queries: DataFrame,
-                       queryId: String, queryText: String,
-                       k: Int, k1: Double = 1.2, b: Double = 0.75,
-                       scoreDecimals: Int = 4): DataFrame =
-    topKFromScores(
-      scoresAgainstIndex(index, queries, queryId, queryText, k1, b),
-      k, scoreDecimals)
-
   private def topKFromScores(sc: DataFrame, k: Int, scoreDecimals: Int): DataFrame =
     graft.plan.TopKPerGroup(
         sc.withColumn("score", round(col("score"), scoreDecimals)),
@@ -245,20 +153,19 @@ object Bm25 {
         Seq(col("score").desc, col("doc_id").asc), k, rankName = "rank")
       .select(col("qid"), col("rank"), col("doc_id"), col("score"))
 
-  // ------------------------------------------------- incremental index
+  // ------------------------------------------------------- stored index
 
-  /** The MAINTAINABLE index format: document frequency lives in a
-    * separate vocabulary-sized `(term, df)` table instead of being folded
-    * into every posting row. The fold ([[Index]]) is the right read
-    * layout for a build-once index, but it makes appends corpus-sized: a
-    * new batch changes df for every term it touches, which under the
-    * folded layout rewrites every posting of those terms — at realistic
-    * vocabulary overlap, most of a 100 TB index. Here an append is
-    * O(batch + vocabulary): batch postings APPEND (stored postings are
+  /** The stored index: (doc_id, dl, term, tf) postings, a separate
+    * vocabulary-sized `(term, df)` table, and the corpus scalars.
+    * `nDocs`/`avgdl` count only docs with ≥1 token (blank docs can match
+    * nothing and must not dilute avgdl). Keeping df out of the posting
+    * rows is what makes the index maintainable: an append is
+    * O(batch + vocabulary) — batch postings APPEND (stored postings are
     * never read, rewritten, or shuffled), the df table merges by term
     * (vocab-sized), and the scalar stats add arithmetically. Scoring
-    * joins df onto the BROADCAST query-term side, so the serving plan
-    * shape is identical to [[scoresAgainstIndex]].
+    * joins df onto the BROADCAST query-term side, so the stored postings
+    * never shuffle at serve time. With no tombstones it is simply the
+    * built index.
     *
     * Exactness contract (the q158 gate): an index built incrementally
     * over any disjoint split of the corpus serves quantized top-k
@@ -291,93 +198,125 @@ object Bm25 {
     def avgdl: Double = if (nDocs == 0) 1.0 else totalDl / nDocs
   }
 
-  /** Build the maintainable index: same one corpus pass as
-    * [[buildIndex]], df kept separate. */
-  def buildIncIndex(docs: DataFrame, docId: String, docText: String): IncIndex = {
-    // keyed scatter below the tokenizer — see [[buildIndex]]
-    val corpus = graft.dedup.Dedup
-      .ensureParallelism(docs, Seq(col(docId)))
-      .select(col(docId).as("doc_id"), T.tokens(col(docText)).as("__toks"))
-      .filter(size(col("__toks")) > 0)
-    val tfs = corpus
-      .select(col("doc_id"), size(col("__toks")).cast("double").as("dl"),
-        explode(col("__toks")).as("term"))
-      .groupBy("doc_id", "dl", "term")
-      .agg(count(lit(1)).cast("double").as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val statsRow = tfs.select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).cast("double"), sum(col("dl"))).collect()(0)
-    val out =
-      if (statsRow.isNullAt(1)) {
-        val empty = tfs.limit(0).localCheckpoint(true).transform(graft.plan.Checkpoints.track)
-        IncIndex(empty,
-          empty.select(col("term"), lit(0.0).as("df")).localCheckpoint(true).transform(graft.plan.Checkpoints.track),
-          0.0, 0.0)
-      } else {
-        // corpus-sized partitioning before the checkpoints (see
-        // [[buildIndex]]): the cached groupBy keeps the session shuffle
-        // width otherwise, and serving/appending then pays a task per
-        // near-empty partition on every job
-        val parts = postingsParts(statsRow.getDouble(0))
-        IncIndex(
-          tfs.coalesce(parts).localCheckpoint(true).transform(graft.plan.Checkpoints.track),
-          tfs.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-            .coalesce(parts)
-            .localCheckpoint(true).transform(graft.plan.Checkpoints.track),
-          statsRow.getDouble(0), statsRow.getDouble(1))
-      }
-    tfs.unpersist(blocking = true)
-    out
+  /** An index's DERIVED state — the df table and the corpus scalars —
+    * as a maintenance op computes it, before its tier commits it. */
+  private[curate] final case class Derived(dfs: DataFrame, nDocs: Double,
+                                           totalDl: Double) {
+    def statsRow: DataFrame = {
+      val spark = dfs.sparkSession
+      import spark.implicits._
+      Seq((nDocs, totalDl)).toDF("n_docs", "total_dl").coalesce(1)
+    }
   }
 
-  /** Build AND persist the maintainable index in ONE corpus
-    * materialization (r15, VERDICT r14 #3): the tf frame writes STRAIGHT
-    * to `$path/postings` — the parquet write IS the materialization (no
-    * corpus-sized cache fill, no postings localCheckpoint, sized by an
-    * AQE rebalance instead of a known-nDocs coalesce) — and dfs/stats
-    * then derive from the WRITTEN files exactly like [[repairIncIndex]]
-    * (they are DERIVED state by contract). Result-equivalent to
-    * `saveIncIndex(buildIncIndex(docs, ...), path)`: same posting rows,
-    * df/doc counts are integer aggregations of the same rows, totalDl a
-    * sum of integer-valued doubles (exact under any order). */
+  /** The derive core both tiers share: dfs and stats recomputed from the
+    * live postings in ONE cached pass (the stats collect fills the cache,
+    * the df aggregation reads it), handed to `commit` while the cache
+    * lives and released (blocking) after. */
+  private[curate] def derive[T](live: DataFrame)(commit: Derived => T): T = {
+    val cached = live.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (nDocs, totalDl) = docStats(cached)
+      commit(Derived(dfRows(cached), nDocs, totalDl))
+    } finally cached.unpersist(blocking = true)
+  }
+
+  /** The batch-append core both tiers share (r15 write-first): one
+    * batch-sized stats pre-pass straight from the batch text (no shuffle,
+    * nothing cached) — an all-blank batch is a no-op (None, nothing
+    * written); the optional duplicate-id probe (one broadcast probe of
+    * `cur`'s postings, batch-id-sized build side, no shuffle; tombstoned
+    * ids count as present); the batch's tf rows, sized by
+    * [[postingsParts]], handed to `write`, which stores them and returns
+    * the rows it wrote; the delta df read back from exactly those files
+    * (a batch-sized re-read instead of a second batch materialization);
+    * and the df merge. Returns the new derived state for the tier to
+    * commit AFTER the postings — the source of truth — are written. */
+  private[curate] def appendCore(cur: IncIndex, root: String, newDocs: DataFrame,
+                                 docId: String, docText: String,
+                                 rejectDuplicateIds: Boolean)(
+      write: DataFrame => DataFrame): Option[Derived] = {
+    val corpus = tokenized(newDocs, docId, docText)
+    val st = corpus
+      .agg(count(lit(1)).cast("double"), sum(size(col("__toks")).cast("double")))
+      .collect()(0)
+    if (st.isNullAt(1)) None
+    else {
+      if (rejectDuplicateIds) {
+        val dup = cur.postings
+          .join(broadcast(corpus.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
+          .select("doc_id").limit(1).collect()
+        require(dup.isEmpty, s"append: batch re-adds doc id ${dup.head.get(0)} " +
+          s"already present under $root — a re-add double-counts df/tf " +
+          "(compact + delete first, or fix the batch)")
+      }
+      val written = write(tfRows(corpus).coalesce(postingsParts(st.getDouble(0))))
+      Some(Derived(
+        cur.dfs.unionByName(dfRows(written)).groupBy("term").agg(sum(col("df")).as("df")),
+        cur.nDocs + st.getDouble(0), cur.totalDl + st.getDouble(1)))
+    }
+  }
+
+  /** The removal core both tiers share: the requested ids not already
+    * tombstoned, the ONE postings scan for their rows (ids broadcast),
+    * and the integer decrements of df/nDocs/totalDl from exactly those
+    * rows. `commit` gets the newly removed ids and the decremented state;
+    * None (no commit) when no requested doc is live. The removed rows
+    * are an EAGER localCheckpoint, NOT a persist: the unversioned commit
+    * appends to the tombstone table this frame's lineage reads, and
+    * Spark's recacheByPath would silently RECOMPUTE a persisted frame
+    * against the grown tombstone set — the anti-join then erases the
+    * docs being deleted and the decrements vanish (the sequential-deletes
+    * corruption the swap-commit spec caught). A checkpoint has no lineage
+    * to recompute. It is released with `Checkpoints.releaseNow(blocking =
+    * true)`: `Dataset.unpersist` only clears CacheManager entries and is a
+    * no-op for the checkpoint RDD's own persist (the q159 leak). */
+  private[curate] def removeCore[T](cur: IncIndex, ids: DataFrame, idCol: String)(
+      commit: (DataFrame, Derived) => T): Option[T] = {
+    val req = cur.tombstones.foldLeft(
+      ids.select(col(idCol).as("doc_id")).distinct())(
+      (r, ts) => r.join(ts, Seq("doc_id"), "left_anti"))
+    val removed = cur.postings.join(broadcast(req), Seq("doc_id"))
+      .localCheckpoint(true)
+    try {
+      val (nDocs, totalDl) = docStats(removed)
+      if (nDocs == 0) None
+      else {
+        val dec = dfRows(removed).select(col("term"), col("df").as("__dec"))
+        // vocab-sized merge; terms whose last doc died leave the table
+        Some(commit(removed.select("doc_id").distinct(), Derived(
+          cur.dfs.join(dec, Seq("term"), "left")
+            .select(col("term"), (col("df") - coalesce(col("__dec"), lit(0.0))).as("df"))
+            .filter(col("df") > 0),
+          cur.nDocs - nDocs, cur.totalDl - totalDl)))
+      }
+    } finally graft.plan.Checkpoints.releaseNow(removed, blocking = true)
+  }
+
+  /** Build and save the index at `path` in ONE corpus materialization
+    * (r15, VERDICT r14 #3): the tf rows write STRAIGHT to `$path/postings`
+    * — the parquet write IS the materialization (no corpus-sized cache
+    * fill, no checkpoints, sized by an AQE rebalance) — and dfs/stats
+    * then derive from the WRITTEN files. A build is a save, not a
+    * commit: it writes the plain `postings`, `dfs` and `stats` dirs
+    * first, then clears any swap pointers and the `tombstones` table of
+    * an index previously maintained at this root, so ids deleted from the
+    * old index do not shadow the rebuilt one. A crash mid-build leaves
+    * the pointers intact, so the committed generation stays resolvable
+    * until the replacement bytes fully exist. */
   def buildAndSaveIncIndex(spark: SparkSession, docs: DataFrame,
                            docId: String, docText: String,
                            path: String): Unit = {
-    val tfs = graft.dedup.Dedup
-      .ensureParallelism(docs, Seq(col(docId)))
-      .select(col(docId).as("doc_id"), T.tokens(col(docText)).as("__toks"))
-      .filter(size(col("__toks")) > 0)
-      .select(col("doc_id"), size(col("__toks")).cast("double").as("dl"),
-        explode(col("__toks")).as("term"))
-      .groupBy("doc_id", "dl", "term")
-      .agg(count(lit(1)).cast("double").as("tf"))
-    tfs.hint("rebalance").write.mode("overwrite").parquet(s"$path/postings")
-    // plain postings dir is now canonical — drop any stale swap pointer
-    // BEFORE repair resolves tables (same re-save contract as
-    // saveIncIndex: plain bytes first, pointer cleanup after)
-    val rootP = new org.apache.hadoop.fs.Path(path)
-    val pfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    pfs.delete(new org.apache.hadoop.fs.Path(s"$path/.ptr_postings"), false)
-    repairIncIndex(spark, path)
-  }
-
-  def saveIncIndex(index: IncIndex, path: String): Unit = {
-    // a re-save over a swap-maintained root must not leave a stale
-    // pointer shadowing the plain dirs (save has no mid-write reader
-    // contract — it is an overwrite, not a commit). Plain dirs write
-    // FIRST, pointers delete LAST (ADVICE r13 #1): a crash mid-save
-    // leaves the pointers intact, so the committed generation stays
-    // resolvable until the replacement bytes fully exist.
-    index.postings.write.mode("overwrite").parquet(s"$path/postings")
-    index.dfs.write.mode("overwrite").parquet(s"$path/dfs")
-    val spark = index.postings.sparkSession
-    import spark.implicits._
-    Seq((index.nDocs, index.totalDl)).toDF("n_docs", "total_dl")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-    val rootP = new org.apache.hadoop.fs.Path(path)
-    val pfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("postings", "dfs", "stats").foreach { n =>
-      pfs.delete(new org.apache.hadoop.fs.Path(s"$path/.ptr_$n"), false) }
+    tfRows(tokenized(docs, docId, docText))
+      .hint("rebalance").write.mode("overwrite").parquet(s"$path/postings")
+    derive(graft.sources.Pq.read(spark, s"$path/postings")) { d =>
+      d.dfs.write.mode("overwrite").parquet(s"$path/dfs")
+      d.statsRow.write.mode("overwrite").parquet(s"$path/stats")
+    }
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(".ptr_postings", ".ptr_dfs", ".ptr_stats", "tombstones").foreach { n =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$n"), true) }
   }
 
   def loadIncIndex(spark: SparkSession, path: String): IncIndex = {
@@ -396,80 +335,44 @@ object Bm25 {
     if (fs.exists(p)) Some(graft.sources.Pq.read(spark, p.toString)) else None
   }
 
-  /** Append a document batch to a stored incremental index —
-    * O(batch + vocabulary), the stored postings are untouched: batch
-    * postings append as new files, the df table and 1-row stats rewrite
-    * via tmp+rename (both vocab-or-smaller). Single-writer maintenance
-    * op; concurrent readers mid-append can see the new postings before
-    * the new stats — version the index directory with
-    * [[graft.sources.Snapshots]] when serving must be isolated from
-    * maintenance. Crash recovery: postings (the source of truth) commit
-    * FIRST, so a crash that leaves dfs/stats stale or mid-swap repairs
-    * with [[repairIncIndex]]. Batch doc ids must be disjoint from the
-    * stored corpus (see [[IncIndex]]); `rejectDuplicateIds` enforces that
-    * precondition with one broadcast probe of the stored postings
-    * (batch-id-sized build side, no shuffle) instead of trusting it. */
+  /** Commit a maintenance op's derived state: dfs, then stats, each by
+    * one [[swapWrite]]. */
+  private def swapDerived(path: String, d: Derived): Unit = {
+    swapWrite(d.dfs, path, "dfs")
+    swapWrite(d.statsRow, path, "stats")
+  }
+
+  /** Append a document batch to a stored index — O(batch + vocabulary),
+    * the stored postings are untouched: batch postings append as new
+    * files, the df table and 1-row stats swap in after them (both
+    * vocab-or-smaller). Single-writer maintenance op; concurrent readers
+    * mid-append can see the new postings before the new stats — use
+    * [[Bm25Versioned]] when serving must be isolated from maintenance.
+    * Crash recovery: postings (the source of truth) commit FIRST, so a
+    * crash that leaves dfs/stats stale or mid-swap repairs with
+    * [[repairIncIndex]]. Batch doc ids must be disjoint from the stored
+    * corpus (see [[IncIndex]]); `rejectDuplicateIds` enforces that
+    * precondition instead of trusting it. */
   def appendIncIndex(spark: SparkSession, path: String, newDocs: DataFrame,
                      docId: String, docText: String,
                      rejectDuplicateIds: Boolean = false): Unit = {
-    // batch-sized pre-pass (r15): stats from the batch text directly —
-    // no shuffle, nothing cached — replaces the delta-index build whose
-    // two localCheckpoints materialized the batch twice before the write
-    val corpus = graft.dedup.Dedup
-      .ensureParallelism(newDocs, Seq(col(docId)))
-      .select(col(docId).as("doc_id"), T.tokens(col(docText)).as("__toks"))
-      .filter(size(col("__toks")) > 0)
-    val statsRow = corpus
-      .agg(count(lit(1)).cast("double"), sum(size(col("__toks")).cast("double")))
-      .collect()(0)
-    if (statsRow.isNullAt(1)) return // empty/all-blank batch: no-op
-    val deltaNDocs = statsRow.getDouble(0)
-    val deltaTotalDl = statsRow.getDouble(1)
-    if (rejectDuplicateIds) {
-      val dup = graft.sources.Pq.read(spark, resolveTable(spark, path, "postings"))
-        .join(broadcast(corpus.select("doc_id").distinct()),
-          Seq("doc_id"), "left_semi")
-        .select("doc_id").limit(1).collect()
-      require(dup.isEmpty, s"appendIncIndex: batch re-adds doc id " +
-        s"${dup.head.get(0)} already present in $path/postings — a re-add " +
-        "double-counts df/tf (compact + delete first, or fix the batch)")
-    }
-    val old = loadIncIndex(spark, path)
-    // postings (the source of truth) commit FIRST, written straight from
-    // the batch text; the delta's df rows then derive from exactly the
-    // files this append added (a batch-sized parquet re-read instead of
-    // a second batch materialization)
-    val postingsDir = resolveTable(spark, path, "postings")
-    val pDir = new org.apache.hadoop.fs.Path(postingsDir)
+    val pDir = new org.apache.hadoop.fs.Path(resolveTable(spark, path, "postings"))
     val pfs = pDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def listing(): Set[String] =
       pfs.listStatus(pDir).map(_.getPath.toString)
         .filterNot(p => { val n = p.split("/").last
           n.startsWith("_") || n.startsWith(".") }).toSet
-    val before = listing()
-    corpus
-      .select(col("doc_id"), size(col("__toks")).cast("double").as("dl"),
-        explode(col("__toks")).as("term"))
-      .groupBy("doc_id", "dl", "term")
-      .agg(count(lit(1)).cast("double").as("tf"))
-      .coalesce(postingsParts(deltaNDocs)) // batch-derived file sizing
-      .write.mode("append").parquet(postingsDir)
-    val newFiles = (listing() -- before).toSeq.sorted
-    val deltaDfs = graft.sources.Pq.read(spark, newFiles: _*)
-      .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    // merged df is materialized by the tmp write BEFORE the old dir is
-    // replaced, so the plan never overwrites its own input
-    val mergedDfs = old.dfs.unionByName(deltaDfs)
-      .groupBy("term").agg(sum(col("df")).as("df"))
-    swapWrite(mergedDfs, path, "dfs")
-    import spark.implicits._
-    swapWrite(Seq((old.nDocs + deltaNDocs, old.totalDl + deltaTotalDl))
-      .toDF("n_docs", "total_dl").coalesce(1), path, "stats")
+    appendCore(loadIncIndex(spark, path), path, newDocs, docId, docText,
+        rejectDuplicateIds) { tf =>
+      val before = listing()
+      tf.write.mode("append").parquet(pDir.toString)
+      graft.sources.Pq.read(spark, (listing() -- before).toSeq.sorted: _*)
+    }.foreach(swapDerived(path, _))
   }
 
-  /** Remove documents from a stored incremental index WITHOUT rewriting
-    * postings — O(ids + one postings scan + vocabulary): the ids actually
-    * present land in the `tombstones` table (consulted at serve time as a
+  /** Remove documents from a stored index WITHOUT rewriting postings —
+    * O(ids + one postings scan + vocabulary): the ids actually present
+    * land in the `tombstones` table (consulted at serve time as a
     * candidate-sized anti-join), and df/nDocs/totalDl decrement from the
     * removed docs' own postings rows, so serving is EXACTLY a rebuild
     * over the reduced corpus (integer decrements — the q159 gate).
@@ -479,69 +382,22 @@ object Bm25 {
     * — already final, and [[repairIncIndex]] rebuilds the rest.
     * Single-writer, like [[appendIncIndex]]. */
   def deleteFromIncIndex(spark: SparkSession, path: String, ids: DataFrame,
-                         idCol: String): Unit = {
-    val old = loadIncIndex(spark, path)
-    val req = old.tombstones.foldLeft(
-      ids.select(col(idCol).as("doc_id")).distinct())(
-      (r, ts) => r.join(ts, Seq("doc_id"), "left_anti"))
-    // the one postings scan: rows of the docs being removed (ids
-    // broadcast). EAGER localCheckpoint, NOT persist: the tombstone
-    // append below writes a path this frame's lineage reads, and
-    // Spark's recacheByPath would silently RECOMPUTE a persisted frame
-    // against the grown tombstone set — the anti-join then erases the
-    // docs being deleted and the df/stats decrements vanish (a
-    // SEQUENTIAL-deletes corruption the swap-commit spec caught;
-    // one-shot deletes never hit it because the tombstone table did
-    // not pre-exist). A checkpoint has no lineage to recompute.
-    val removed = old.postings.join(broadcast(req), Seq("doc_id"))
-      .localCheckpoint(true)
-    try {
-      val st = removed.select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).cast("double"), sum(col("dl"))).collect()(0)
-      if (!st.isNullAt(1)) { // at least one requested doc is present
-        removed.select("doc_id").distinct()
-          .write.mode("append").parquet(s"$path/tombstones")
-        val dec = removed.groupBy("term")
-          .agg(count(lit(1)).cast("double").as("__dec"))
-        // vocab-sized merge; terms whose last doc died leave the table
-        swapWrite(old.dfs.join(dec, Seq("term"), "left")
-          .select(col("term"),
-            (col("df") - coalesce(col("__dec"), lit(0.0))).as("df"))
-          .filter(col("df") > 0), path, "dfs")
-        import spark.implicits._
-        swapWrite(Seq((old.nDocs - st.getDouble(0), old.totalDl - st.getDouble(1)))
-          .toDF("n_docs", "total_dl").coalesce(1), path, "stats")
-      }
-    // `removed` is a localCheckpoint: Dataset.unpersist only clears
-    // CacheManager entries and is a NO-OP for the checkpoint RDD's own
-    // persist — the actual q159 leak (VERDICT r14 #3; the r14 blocking
-    // Dataset.unpersist changed nothing). Release the underlying RDD,
-    // blocking so it cannot race a between-query sweep.
-    } finally graft.plan.Checkpoints.releaseNow(removed, blocking = true)
-  }
+                         idCol: String): Unit =
+    removeCore(loadIncIndex(spark, path), ids, idCol) { (removedIds, d) =>
+      removedIds.write.mode("append").parquet(s"$path/tombstones")
+      swapDerived(path, d)
+    }
 
   /** Recompute the DERIVED tables (dfs, stats) from the source of truth
     * (postings minus tombstones) — ONE aggregation pass; the repair path
     * after a crash mid-[[appendIncIndex]]/[[deleteFromIncIndex]] left
     * them stale or mid-swap (missing). Reads postings directly (not
     * [[loadIncIndex]], which needs the very tables being repaired). */
-  def repairIncIndex(spark: SparkSession, path: String): Unit = {
-    val postings = graft.sources.Pq.read(spark, resolveTable(spark, path, "postings"))
-    val live = tombstonesOpt(spark, path)
-      .foldLeft(postings)((p, ts) => p.join(ts, Seq("doc_id"), "left_anti"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val st = live.select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).cast("double"), sum(col("dl"))).collect()(0)
-      swapWrite(live.groupBy("term")
-        .agg(count(lit(1)).cast("double").as("df")), path, "dfs")
-      import spark.implicits._
-      swapWrite(Seq((
-          if (st.isNullAt(1)) (0.0, 0.0)
-          else (st.getDouble(0), st.getDouble(1))))
-        .toDF("n_docs", "total_dl").coalesce(1), path, "stats")
-    } finally live.unpersist(blocking = true)
-  }
+  def repairIncIndex(spark: SparkSession, path: String): Unit =
+    derive(tombstonesOpt(spark, path).foldLeft(
+        graft.sources.Pq.read(spark, resolveTable(spark, path, "postings")))(
+        (p, ts) => p.join(ts, Seq("doc_id"), "left_anti")))(
+      swapDerived(path, _))
 
   /** Fold tombstones back into storage: the ONE deliberate postings
     * rewrite, run at the operator's chosen cadence (when the tombstone
@@ -561,9 +417,7 @@ object Bm25 {
   /** Resolve the live directory of a swap-managed table: the pointer
     * file `root/.ptr_<name>` names the current generation dir when a
     * [[swapWrite]] has committed one; absent, the table lives at the
-    * legacy plain `root/name` (the layout every index starts with —
-    * saveIncIndex writes plain dirs, so pre-pointer indexes resolve
-    * unchanged). */
+    * plain `root/name` (the layout [[buildAndSaveIncIndex]] writes). */
   private[graft] def resolveTable(spark: SparkSession, root: String,
                                   name: String): String = {
     val ptr = new org.apache.hadoop.fs.Path(s"$root/.ptr_$name")
@@ -619,7 +473,7 @@ object Bm25 {
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(ptr.toUri, conf)
     fc.rename(tmpPtr, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     // reclaim generations OLDER than the one just superseded (and the
-    // legacy plain dir once it is no longer the previous generation)
+    // plain dir once it is no longer the previous generation)
     val keep = Set(gen, currentGen)
     val stale = fs.listStatus(rootP).toSeq.map(_.getPath.getName)
       .filter(n => (n.startsWith(s".gen_${name}_") || n == name) &&
@@ -628,32 +482,23 @@ object Bm25 {
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/$n"), true))
   }
 
-  /** [[scoresAgainstIndex]] for the maintainable format: df joins onto
-    * the query-term side (small), which then broadcasts onto the
-    * postings — same serving plan shape, stored postings never shuffle.
-    * Tombstoned docs drop via an anti-join on the CANDIDATE-sized frame
-    * (after the query-term join — the full postings never pay for
-    * deletes), and since df/nDocs/avgdl were decremented at delete time,
-    * the surviving scores are identical doubles to a rebuild over the
-    * reduced corpus (same inputs, same expression tree), so quantized
-    * rankings agree — the q159 gate. */
+  /** Raw BM25 scores against a stored index for every (query, doc) pair
+    * sharing at least one term: (qid, doc_id, score). df joins onto the
+    * query-term side (small), which then broadcasts onto the postings —
+    * stored postings never shuffle. Tombstoned docs drop via an anti-join
+    * on the CANDIDATE-sized frame (after the query-term join — the full
+    * postings never pay for deletes), and since df/nDocs/avgdl were
+    * decremented at delete time, the surviving scores are identical
+    * doubles to a rebuild over the reduced corpus (same inputs, same
+    * expression tree), so quantized rankings agree — the q159 gate. */
   def scoresAgainstIncIndex(index: IncIndex, queries: DataFrame,
                             queryId: String, queryText: String,
                             k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val qterms = queries
-      .select(col(queryId).as("qid"),
-        explode(array_distinct(T.tokens(col(queryText)))).as("term"))
-      .join(index.dfs, Seq("term"))
-    val idf = log(lit(1.0) +
-      (lit(index.nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val termScore = idf * col("tf") * lit(k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(index.avgdl)))
+    val qterms = queryTerms(queries, queryId, queryText).join(index.dfs, Seq("term"))
     val cand = index.postings.join(broadcast(qterms), Seq("term"))
-    index.tombstones.foldLeft(cand)(
-        (c, ts) => c.join(ts, Seq("doc_id"), "left_anti"))
-      .select(col("qid"), col("doc_id"), termScore.as("__s"))
-      .groupBy("qid", "doc_id")
-      .agg(sum(col("__s")).as("score"))
+    scoreSums(index.tombstones.foldLeft(cand)(
+        (c, ts) => c.join(ts, Seq("doc_id"), "left_anti")),
+      index.nDocs, index.avgdl, k1, b)
   }
 
   def topKAgainstIncIndex(index: IncIndex, queries: DataFrame,

@@ -28,14 +28,13 @@ import graft.sources.VersionedPool
 object Bm25Versioned {
 
   private def publishMeta(spark: SparkSession, root: String,
-                          batches: Seq[String], dfs: DataFrame,
-                          nDocs: Double, totalDl: Double,
+                          batches: Seq[String], d: Bm25.Derived,
                           tombstones: Option[DataFrame],
                           idType: org.apache.spark.sql.types.DataType): Int =
     VersionedPool.publishMeta(spark, root, batches,
-      stats = Seq("n_docs" -> nDocs, "total_dl" -> totalDl),
+      stats = Seq("n_docs" -> d.nDocs, "total_dl" -> d.totalDl),
       tombstones = tombstones, idCol = "doc_id", idType = idType,
-      extra = Some(dfs.select(lit("df").as("kind"), col("term").as("key"),
+      extra = Some(d.dfs.select(lit("df").as("kind"), col("term").as("key"),
         col("df").cast("double").as("num"))))
 
   /** Create version 1 from an initial corpus. The batch dir is written
@@ -45,12 +44,9 @@ object Bm25Versioned {
     * Write-first (r15, guide §8 "the write IS the materialization" — the
     * [[Bm25.buildAndSaveIncIndex]] device at the versioned tier): the tf
     * rows write STRAIGHT to the new pool batch dir — no corpus-sized
-    * cache fill, no postings/df localCheckpoints — and the df rows +
-    * n_docs/total_dl then derive from the WRITTEN files (dfs/stats are
-    * DERIVED state by the [[Bm25.IncIndex]] contract). Result-equivalent
-    * to `buildIncIndex` + batch write: same posting rows, df/doc counts
-    * are integer aggregations of the same rows, totalDl a sum of
-    * integer-valued doubles (exact under any order). */
+    * cache fill, no checkpoints — and the df rows + n_docs/total_dl then
+    * derive from the WRITTEN files (dfs/stats are DERIVED state by the
+    * [[Bm25.IncIndex]] contract). */
   def init(spark: SparkSession, root: String, docs: DataFrame,
            docId: String, docText: String): Int = {
     VersionedPool.requireFresh(spark, root)
@@ -60,14 +56,8 @@ object Bm25Versioned {
       .hint("rebalance") // adaptive file sizing, as buildAndSaveIncIndex
       .write.mode("overwrite").parquet(p)
     val written = graft.sources.Pq.read(spark, p)
-    val st = written.select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).cast("double"), sum(col("dl"))).collect()(0)
-    val (nDocs, totalDl) =
-      if (st.isNullAt(1)) (0.0, 0.0) else (st.getDouble(0), st.getDouble(1))
-    val dfs = written.groupBy("term")
-      .agg(count(lit(1)).cast("double").as("df"))
-    publishMeta(spark, root, Seq(batch), dfs, nDocs, totalDl,
-      None, written.schema("doc_id").dataType)
+    Bm25.derive(written)(d => publishMeta(spark, root, Seq(batch), d,
+      None, written.schema("doc_id").dataType))
   }
 
   /** Load a version (default: the committed latest) as a servable
@@ -89,45 +79,20 @@ object Bm25Versioned {
     * pointer swap. Returns the new version (or the current one for an
     * all-blank no-op batch). `rejectDuplicateIds` as in
     * [[Bm25.appendIncIndex]] (tombstoned ids count as present — revival
-    * requires a compact first). */
+    * requires a compact first). Same write-first core as the unversioned
+    * append; the tf rows land in a fresh pool batch. */
   def append(spark: SparkSession, root: String, newDocs: DataFrame,
              docId: String, docText: String,
              rejectDuplicateIds: Boolean = false): Int = {
-    // write-first, mirroring [[Bm25.appendIncIndex]] (r15): one
-    // batch-sized stats pre-pass (no shuffle, nothing cached) replaces
-    // the delta-index build whose persist + two localCheckpoints
-    // materialized the batch three times before the pool write; the
-    // delta's df rows then derive from exactly the written batch files.
-    val corpus = Bm25.tokenized(newDocs, docId, docText)
-    val statsRow = corpus
-      .agg(count(lit(1)).cast("double"), sum(size(col("__toks")).cast("double")))
-      .collect()(0)
-    if (statsRow.isNullAt(1)) // empty/all-blank batch: no-op, no pool write
-      return VersionedPool.currentVersion(spark, root)
     val cur = load(spark, root)
-    if (rejectDuplicateIds) {
-      val dup = cur.postings
-        .join(broadcast(corpus.select("doc_id").distinct()),
-          Seq("doc_id"), "left_semi")
-        .select("doc_id").limit(1).collect()
-      require(dup.isEmpty, s"versioned append: batch re-adds doc id " +
-        s"${dup.head.get(0)} already present under $root — a re-add " +
-        "double-counts df/tf (compact + delete first, or fix the batch)")
-    }
     val batch = VersionedPool.nextBatch(spark, root)
-    val p = VersionedPool.poolPath(root, batch)
-    Bm25.tfRows(corpus)
-      .coalesce(Bm25.postingsParts(statsRow.getDouble(0))) // batch-derived file sizing
-      .write.mode("overwrite").parquet(p)
-    val written = graft.sources.Pq.read(spark, p)
-    val deltaDfs = written.groupBy("term")
-      .agg(count(lit(1)).cast("double").as("df"))
-    val mergedDfs = cur.dfs.unionByName(deltaDfs)
-      .groupBy("term").agg(sum(col("df")).as("df"))
-    publishMeta(spark, root, VersionedPool.manifestOf(spark, root) :+ batch,
-      mergedDfs, cur.nDocs + statsRow.getDouble(0),
-      cur.totalDl + statsRow.getDouble(1),
-      cur.tombstones, written.schema("doc_id").dataType)
+    Bm25.appendCore(cur, root, newDocs, docId, docText, rejectDuplicateIds) { tf =>
+      val p = VersionedPool.poolPath(root, batch)
+      tf.write.mode("overwrite").parquet(p)
+      graft.sources.Pq.read(spark, p)
+    }.fold(VersionedPool.currentVersion(spark, root))(d =>
+      publishMeta(spark, root, VersionedPool.manifestOf(spark, root) :+ batch,
+        d, cur.tombstones, cur.postings.schema("doc_id").dataType))
   }
 
   /** Remove documents as a new version — NO pool write at all: the new
@@ -139,28 +104,11 @@ object Bm25Versioned {
   def delete(spark: SparkSession, root: String, ids: DataFrame,
              idCol: String): Int = {
     val cur = load(spark, root)
-    val req = cur.tombstones.foldLeft(
-      ids.select(col(idCol).as("doc_id")).distinct())(
-      (r, ts) => r.join(ts, Seq("doc_id"), "left_anti"))
-    val removed = cur.postings.join(broadcast(req), Seq("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val st = removed.select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).cast("double"), sum(col("dl"))).collect()(0)
-      if (st.isNullAt(1))
-        return VersionedPool.currentVersion(spark, root)
-      val dec = removed.groupBy("term")
-        .agg(count(lit(1)).cast("double").as("__dec"))
-      val newDfs = cur.dfs.join(dec, Seq("term"), "left")
-        .select(col("term"),
-          (col("df") - coalesce(col("__dec"), lit(0.0))).as("df"))
-        .filter(col("df") > 0)
-      val newTs = removed.select("doc_id").distinct()
-      publishMeta(spark, root, VersionedPool.manifestOf(spark, root),
-        newDfs, cur.nDocs - st.getDouble(0), cur.totalDl - st.getDouble(1),
-        Some(cur.tombstones.fold(newTs)(_.unionByName(newTs))),
+    Bm25.removeCore(cur, ids, idCol) { (removedIds, d) =>
+      publishMeta(spark, root, VersionedPool.manifestOf(spark, root), d,
+        Some(cur.tombstones.fold(removedIds)(_.unionByName(removedIds))),
         cur.postings.schema("doc_id").dataType)
-    } finally removed.unpersist()
+    }.getOrElse(VersionedPool.currentVersion(spark, root))
   }
 
   /** Fold the current version into ONE fresh pool batch with tombstones
@@ -177,7 +125,7 @@ object Bm25Versioned {
       (p, ts) => p.join(ts, Seq("doc_id"), "left_anti"))
     val batch = VersionedPool.nextBatch(spark, root)
     live.write.mode("overwrite").parquet(VersionedPool.poolPath(root, batch))
-    publishMeta(spark, root, Seq(batch), cur.dfs, cur.nDocs, cur.totalDl,
+    publishMeta(spark, root, Seq(batch), Bm25.Derived(cur.dfs, cur.nDocs, cur.totalDl),
       None, cur.postings.schema("doc_id").dataType)
   }
 

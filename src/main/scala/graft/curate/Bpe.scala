@@ -161,7 +161,7 @@ object Bpe {
 
   /** Persist a learned merge table as a parquet artifact — the tokenizer
     * is a stored artifact in practice (trained once, shipped to every
-    * consumer), the same lifecycle as [[Bm25.saveIndex]] / `Ivf.save`. */
+    * consumer), the same lifecycle as [[Bm25.buildAndSaveIncIndex]] / `Ivf.save`. */
   def saveMerges(merges: DataFrame, path: String): Unit =
     merges.write.mode("overwrite").parquet(path)
 

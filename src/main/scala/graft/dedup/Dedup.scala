@@ -854,27 +854,49 @@ object Dedup {
       .groupBy("new_id", "corpus_id").agg(max("est_jaccard").as("est_jaccard"))
   }
 
-  /** Admission filter for an incremental batch: rows of `newDocs` that are
+  /** An admitted batch: the surviving rows of `newDocs` and their
+    * `(id, sig)` signature rows — what an ingester appends to the corpus
+    * and to the signature index. */
+  final case class Admitted(rows: DataFrame, sigs: DataFrame)
+
+  /** Admission for an incremental batch: rows of `newDocs` that are
     * near-dups of the stored index OR of an earlier row in the same batch
-    * are dropped; the survivors are safe to append to the corpus (and their
-    * signatures to the index). */
-  def admitAgainstIndex(newDocs: DataFrame, index: DataFrame,
-                        idCol: String, textCol: String,
-                        shingleLen: Int = 3, k: Int = 64, bands: Int = 16,
-                        threshold: Double = 0.7,
-                        portable: Boolean = false): DataFrame = {
+    * are dropped; the survivors are safe to append to the corpus, and
+    * their signatures to the index. Signatures are computed ONCE, into an
+    * eager tracked localCheckpoint that both pair generators and the
+    * returned `sigs` read; the (small) rejected-id set is a second tracked
+    * checkpoint that both returned frames read. The in-batch pair
+    * generator's own checkpoints are released before returning (the
+    * rejected set has consumed them). Release the two that remain with
+    * `Checkpoints.releaseInputs(admitted.sigs)` once both frames are
+    * consumed (or `Checkpoints.release()`). */
+  def admit(newDocs: DataFrame, index: DataFrame,
+            idCol: String, textCol: String,
+            shingleLen: Int = 3, k: Int = 64, bands: Int = 16,
+            threshold: Double = 0.7,
+            portable: Boolean = false): Admitted = {
     val sigs = minhashSignatures(newDocs, idCol, textCol, shingleLen, k, portable)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true).transform(graft.plan.Checkpoints.track)
     val vsIndex = minhashPairsAgainstIndex(index, sigs, k, bands, threshold, portable)
       .select(col("new_id").as(idCol))
     val inBatch = minhashPairsFromSignatures(sigs, k, bands, threshold, portable = portable)
       .select(col("id_b").as(idCol))
-    // materialize the (small) rejected-id set so the signature cache can be
-    // released now instead of leaking for the session lifetime
-    val rejected = vsIndex.union(inBatch).distinct().localCheckpoint(true).transform(graft.plan.Checkpoints.track)
-    sigs.unpersist()
-    newDocs.join(rejected, Seq(idCol), "left_anti")
+    val rejected = vsIndex.union(inBatch).distinct()
+      .localCheckpoint(true).transform(graft.plan.Checkpoints.track)
+    // inBatch reads only the pair generator's own checkpoints (candidate
+    // pairs, pruned signatures) — never `sigs`, which the results still read
+    graft.plan.Checkpoints.releaseInputs(inBatch)
+    Admitted(newDocs.join(rejected, Seq(idCol), "left_anti"),
+      sigs.join(rejected.select(col(idCol).as("id")), Seq("id"), "left_anti"))
   }
+
+  /** The admitted rows of [[admit]]. */
+  def admitAgainstIndex(newDocs: DataFrame, index: DataFrame,
+                        idCol: String, textCol: String,
+                        shingleLen: Int = 3, k: Int = 64, bands: Int = 16,
+                        threshold: Double = 0.7,
+                        portable: Boolean = false): DataFrame =
+    admit(newDocs, index, idCol, textCol, shingleLen, k, bands, threshold, portable).rows
 
   /** SEMANTIC admission for an incremental vector batch — SemDeDup at the
     * ingest boundary, the embedding analog of [[admitAgainstIndex]] and

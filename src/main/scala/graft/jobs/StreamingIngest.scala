@@ -9,10 +9,12 @@ import graft.streaming.Streaming
 /** Streaming corpus ingester with dedup-at-ingest — the streaming twin of
   * the batch index→admit→append lifecycle (IngestLifecycleSpec): each
   * micro-batch is admitted against the STORED signature index
-  * ([[Dedup.admitAgainstIndex]]: near-dups of the index and of earlier
-  * rows in the same batch are rejected), survivors append to the corpus
-  * and their signatures to the index, so the NEXT batch is checked
-  * against everything admitted before it.
+  * ([[Dedup.admit]], the admission [[Dedup.admitAgainstIndex]] runs:
+  * near-dups of the index and of earlier rows in the same batch are
+  * rejected), survivors append to the corpus and their signatures to the
+  * index, so the NEXT batch is checked against everything admitted
+  * before it. Every checkpoint a micro-batch creates is released before
+  * the next one starts.
   *
   * Scale shape: the index is only ever read (never shuffled — the batch
   * side broadcasts) and only ever appended; per-batch cost is
@@ -43,37 +45,15 @@ object StreamingIngest {
                 batch.schema(idCol).dataType),
               org.apache.spark.sql.types.StructField("sig",
                 org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)))))
-      // One signature pass per batch (r15, guide §2.4 share-one-pass):
-      // this is admitAgainstIndex's exact admit logic inlined so the
-      // index append can reuse the SAME cached signatures — the old body
-      // re-tokenized and re-minhashed every admitted row a second time.
-      // Admitted (id, sig) values are identical by construction (the
-      // signature of a row does not depend on which frame computes it).
-      import org.apache.spark.sql.functions.col
-      val sigs = Dedup.minhashSignatures(batch, idCol, textCol,
-          portable = portable)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val vsIndex = Dedup.minhashPairsAgainstIndex(index, sigs,
-          threshold = threshold, portable = portable)
-        .select(col("new_id").as(idCol))
-      val inBatch = Dedup.minhashPairsFromSignatures(sigs, k = 64, bands = 16,
-          threshold = threshold, portable = portable)
-        .select(col("id_b").as(idCol))
-      // materialize the (small) rejected-id set so the pair generators run
-      // once; the admitted anti-joins below are then cache/checkpoint reads
-      val rejected = vsIndex.union(inBatch).distinct().localCheckpoint(true)
-      val admitted = batch.join(rejected, Seq(idCol), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // one signature pass per batch: the index append writes the same
+      // signatures the admission computed
+      val admitted = Dedup.admit(batch, index, idCol, textCol,
+        threshold = threshold, portable = portable)
       try {
-        if (admitted.count() > 0) {
-          admitted.write.mode("append").parquet(corpusPath)
-          sigs.join(rejected.select(col(idCol).as("id")), Seq("id"), "left_anti")
-            .write.mode("append").parquet(indexPath)
+        if (!admitted.sigs.isEmpty) {
+          admitted.rows.write.mode("append").parquet(corpusPath)
+          admitted.sigs.write.mode("append").parquet(indexPath)
         }
-      } finally {
-        admitted.unpersist()
-        sigs.unpersist(blocking = true)
-        graft.plan.Checkpoints.releaseNow(rejected, blocking = true)
-      }
+      } finally graft.plan.Checkpoints.releaseInputs(admitted.sigs)
     }
 }

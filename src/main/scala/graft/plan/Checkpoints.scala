@@ -59,6 +59,16 @@ object Checkpoints {
   def releaseNow(df: DataFrame, blocking: Boolean = false): Unit =
     rddOf(df).foreach(_.unpersist(blocking))
 
+  /** Blocking-unpersist every checkpoint `df` reads — the RDD-backed
+    * leaves of its plan, tracked or not — and stop tracking them: for an
+    * operator (or its caller) that has consumed every frame built on
+    * those checkpoints. Unlike [[releaseNow]], `df` may be any frame
+    * derived from them; every checkpoint under it is released. */
+  def releaseInputs(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectLeaves()
+      .collect { case l: LogicalRDD => l.rdd }.distinct
+      .foreach { r => live.remove(r); r.unpersist(blocking = true) }
+
   /** Blocking-unpersist every tracked checkpoint. Safe to call any time
     * AFTER the frames depending on them have been materialized (written,
     * collected, counted); the frames cannot be re-executed afterwards. */

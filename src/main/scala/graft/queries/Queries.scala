@@ -2649,14 +2649,16 @@ object Queries {
       .agg(count(lit(1)).as("n_kept"),
         sum(length(col("text")).cast("long")).as("kept_chars"))
 
-  /** BM25 served from a STORED index ([[graft.curate.Bm25.saveIndex]] /
-    * loadIndex / topKAgainstIndex — the at-scale reuse path: build the
-    * inverted index once, persist it as a parquet table, and rank every
-    * later query batch against the artifact without rescanning or
-    * re-tokenizing the corpus). Runs q96's exact query set against the
-    * reloaded index; save/load must be score-invisible (doubles
-    * round-trip parquet exactly, and ranking on the 4dp-quantized score
-    * + doc-id tie-break pins any ulp drift), so the oracle IS q96's. */
+  /** BM25 served from a STORED index ([[graft.curate.Bm25
+    * .buildAndSaveIncIndex]] / loadIncIndex / topKAgainstIncIndex — the
+    * at-scale reuse path: build the inverted index once as parquet
+    * tables, and rank every later query batch against the artifact
+    * without rescanning or re-tokenizing the corpus). Runs q96's exact
+    * query set against the reloaded index; save/load must be
+    * score-invisible (df/doc counts are integers, dl sums exact
+    * integer-valued doubles, and ranking on the 4dp-quantized score +
+    * doc-id tie-break pins any ulp drift), so the oracle IS q96's — the
+    * same one q158 matches through this path. */
   def q150Bm25StoredIndex(s: SparkSession, dir: String): DataFrame = {
     val B = graft.curate.Bm25
     val tmpRoot = java.nio.file.Files.createTempDirectory("q150_bm25")
@@ -2666,8 +2668,8 @@ object Queries {
       .filter(col("doc_id") % 125 === 3 && size(T.tokens(col("text"))) > 0)
       .select(col("doc_id").as("qid"),
         concat_ws(" ", slice(T.tokens(col("text")), 1, 5)).as("qtext"))
-    B.saveIndex(B.buildIndex(docs, "doc_id", "text"), tmpRoot)
-    val res = B.topKAgainstIndex(B.loadIndex(s, tmpRoot),
+    B.buildAndSaveIncIndex(s, docs, "doc_id", "text", tmpRoot)
+    val res = B.topKAgainstIncIndex(B.loadIncIndex(s, tmpRoot),
       queries, "qid", "qtext", k = 5)
     materializeAndCleanup(s, res, tmpRoot)
   }
@@ -3855,7 +3857,7 @@ object Queries {
           if (crashAppend()) {
             // the documented crash window: delta postings committed,
             // dfs/stats never updated — then the process dies
-            B.buildIncIndex(batch, "doc_id", "text").postings
+            B.tfRows(B.tokenized(batch, "doc_id", "text"))
               .write.mode("append").parquet(s"$work/index/postings")
             throw new RuntimeException("simulated kill mid-append")
           }

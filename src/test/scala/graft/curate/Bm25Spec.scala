@@ -65,9 +65,9 @@ class Bm25Spec extends SparkSpec {
       .as[(Long, Int, Long, Double)].collect().toSet
     val tmp = java.nio.file.Files.createTempDirectory("bm25_idx").toString
     try {
-      Bm25.saveIndex(Bm25.buildIndex(docs, "doc_id", "text"), tmp)
-      val served = Bm25.topKAgainstIndex(
-          Bm25.loadIndex(spark, tmp), queries, "qid", "qtext", k = 3)
+      Bm25.buildAndSaveIncIndex(spark, docs, "doc_id", "text", tmp)
+      val served = Bm25.topKAgainstIncIndex(
+          Bm25.loadIncIndex(spark, tmp), queries, "qid", "qtext", k = 3)
         .as[(Long, Int, Long, Double)].collect().toSet
       // doubles round-trip parquet exactly; quantized ranking pins the rest
       assert(served == direct, s"served=$served direct=$direct")
@@ -101,8 +101,7 @@ class Bm25Spec extends SparkSpec {
       .as[(Long, Int, Long, Double)].collect().toSet
     val tmp = java.nio.file.Files.createTempDirectory("bm25_inc").toString
     try {
-      Bm25.saveIncIndex(
-        Bm25.buildIncIndex(all.filter($"doc_id" <= 2), "doc_id", "text"), tmp)
+      Bm25.buildAndSaveIncIndex(spark, all.filter($"doc_id" <= 2), "doc_id", "text", tmp)
       Bm25.appendIncIndex(spark, tmp,
         all.filter($"doc_id" > 2 && $"doc_id" <= 5), "doc_id", "text")
       Bm25.appendIncIndex(spark, tmp, all.filter($"doc_id" > 5), "doc_id", "text")
@@ -126,7 +125,7 @@ class Bm25Spec extends SparkSpec {
     val queries = Seq((9L, "aa cc")).toDF("qid", "qtext")
     val tmp = java.nio.file.Files.createTempDirectory("bm25_inc2").toString
     try {
-      Bm25.saveIncIndex(Bm25.buildIncIndex(docs.filter($"doc_id" === 1L), "doc_id", "text"), tmp)
+      Bm25.buildAndSaveIncIndex(spark, docs.filter($"doc_id" === 1L), "doc_id", "text", tmp)
       (2L to 3L).foreach { i =>
         Bm25.appendIncIndex(spark, tmp, docs.filter($"doc_id" === i), "doc_id", "text")
       }
@@ -153,7 +152,7 @@ class Bm25Spec extends SparkSpec {
       .toDF("qid", "qtext")
     val tmp = java.nio.file.Files.createTempDirectory("bm25_del").toString
     try {
-      Bm25.saveIncIndex(Bm25.buildIncIndex(all, "doc_id", "text"), tmp)
+      Bm25.buildAndSaveIncIndex(spark, all, "doc_id", "text", tmp)
       Bm25.deleteFromIncIndex(spark, tmp,
         Seq(2L, 5L, 99L).toDF("doc_id"), "doc_id") // 99 absent: no-op
       val servedDf = Bm25.topKAgainstIncIndex(Bm25.loadIncIndex(spark, tmp),
@@ -206,12 +205,11 @@ class Bm25Spec extends SparkSpec {
       .toDF("qid", "qtext")
     val tmp = java.nio.file.Files.createTempDirectory("bm25_crash").toString
     try {
-      Bm25.saveIncIndex(
-        Bm25.buildIncIndex(all.filter($"doc_id" <= 2), "doc_id", "text"), tmp)
+      Bm25.buildAndSaveIncIndex(spark, all.filter($"doc_id" <= 2), "doc_id", "text", tmp)
       // simulated crash between appendIncIndex's postings commit and the
       // dfs/stats swaps: batch postings land, derived tables stay stale
-      Bm25.buildIncIndex(all.filter($"doc_id" > 2), "doc_id", "text")
-        .postings.write.mode("append").parquet(s"$tmp/postings")
+      Bm25.tfRows(Bm25.tokenized(all.filter($"doc_id" > 2), "doc_id", "text"))
+        .write.mode("append").parquet(s"$tmp/postings")
       // a swap crash can also leave dfs mid-rename (missing entirely)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(s"$tmp/dfs"))
@@ -249,7 +247,7 @@ class Bm25Spec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("bm25_swap").toString
     def exists(n: String) = new java.io.File(s"$tmp/$n").exists()
     try {
-      Bm25.saveIncIndex(Bm25.buildIncIndex(all, "doc_id", "text"), tmp)
+      Bm25.buildAndSaveIncIndex(spark, all, "doc_id", "text", tmp)
       // swap 1 (delete doc 2): dfs/stats commit to .gen_*_1 via ONE
       // pointer rename; the plain dirs stay as the PREVIOUS generation,
       // so a reader that resolved pre-swap keeps streaming them
@@ -288,13 +286,62 @@ class Bm25Spec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
+  test("rebuilding a maintained root serves the new corpus, not the old tombstones") {
+    val all = Seq(
+      (1L, "apple banana apple"),
+      (2L, "apple cherry"),
+      (3L, "durian durian banana durian"),
+      (4L, "cherry apple banana")).toDF("doc_id", "text")
+    val queries = Seq((100L, "apple banana"), (101L, "cherry durian"))
+      .toDF("qid", "qtext")
+    val tmp = java.nio.file.Files.createTempDirectory("bm25_rebuild").toString
+    try {
+      Bm25.buildAndSaveIncIndex(spark, all, "doc_id", "text", tmp)
+      Bm25.deleteFromIncIndex(spark, tmp, Seq(2L).toDF("doc_id"), "doc_id")
+      assert(Bm25.loadIncIndex(spark, tmp).tombstones.nonEmpty)
+      // rebuild the same root from the full corpus: doc 2 is back
+      Bm25.buildAndSaveIncIndex(spark, all, "doc_id", "text", tmp)
+      val idx = Bm25.loadIncIndex(spark, tmp)
+      assert(idx.tombstones.isEmpty)
+      assert(idx.nDocs == 4.0 && idx.totalDl == 3 + 2 + 4 + 3)
+      val served = Bm25.topKAgainstIncIndex(idx, queries, "qid", "qtext", k = 4)
+        .as[(Long, Int, Long, Double)].collect().toSet
+      val direct = Bm25.topK(all, "doc_id", "text", queries, "qid", "qtext", k = 4)
+        .as[(Long, Int, Long, Double)].collect().toSet
+      assert(served == direct, s"served=$served direct=$direct")
+      assert(served.exists(_._3 == 2L))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+  }
+
+  test("delete on either tier leaves no persisted RDD and no live checkpoint") {
+    val docs = Seq((1L, "aa bb"), (2L, "bb cc"), (3L, "cc dd"))
+      .toDF("doc_id", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("bm25_del_leak").toString
+    try {
+      Bm25.buildAndSaveIncIndex(spark, docs, "doc_id", "text", s"$tmp/plain")
+      Bm25Versioned.init(spark, s"$tmp/versioned", docs, "doc_id", "text")
+      def leaks(op: => Unit): (Set[Int], Int) = {
+        val rdds = spark.sparkContext.getPersistentRDDs.keySet
+        val live = graft.plan.Checkpoints.liveCount
+        op
+        (spark.sparkContext.getPersistentRDDs.keySet.toSet -- rdds,
+          graft.plan.Checkpoints.liveCount - live)
+      }
+      assert(leaks(Bm25.deleteFromIncIndex(spark, s"$tmp/plain",
+        Seq(2L).toDF("doc_id"), "doc_id")) == ((Set.empty[Int], 0)))
+      assert(Bm25.loadIncIndex(spark, s"$tmp/plain").nDocs == 2.0)
+      assert(leaks(assert(Bm25Versioned.delete(spark, s"$tmp/versioned",
+        Seq(2L).toDF("doc_id"), "doc_id") == 2)) == ((Set.empty[Int], 0)))
+      assert(Bm25Versioned.load(spark, s"$tmp/versioned").nDocs == 2.0)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+  }
+
   test("guarded append rejects a batch that re-adds an indexed doc id") {
     val docs = Seq((1L, "aa bb"), (2L, "bb cc"), (3L, "cc dd"))
       .toDF("doc_id", "text")
     val tmp = java.nio.file.Files.createTempDirectory("bm25_guard").toString
     try {
-      Bm25.saveIncIndex(
-        Bm25.buildIncIndex(docs.filter($"doc_id" <= 2), "doc_id", "text"), tmp)
+      Bm25.buildAndSaveIncIndex(spark, docs.filter($"doc_id" <= 2), "doc_id", "text", tmp)
       val e = intercept[IllegalArgumentException] {
         Bm25.appendIncIndex(spark, tmp, docs.filter($"doc_id" >= 2),
           "doc_id", "text", rejectDuplicateIds = true)

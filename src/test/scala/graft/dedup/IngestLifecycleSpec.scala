@@ -116,4 +116,69 @@ class IngestLifecycleSpec extends SparkSpec {
     // index grew by exactly the admitted set
     assert(spark.read.parquet(s"$root/index").count() == 52)
   }
+
+  test("streaming admission equals the batch-by-batch admitAgainstIndex replay, without leaks") {
+    import graft.jobs.StreamingIngest
+    import graft.streaming.Streaming
+    val root = java.nio.file.Files.createTempDirectory("singest3").toString
+    val corpus = (0L until 50L).map(i =>
+        (i, s"stored corpus document $i on topic t$i with words w${i}a w${i}b w${i}c w${i}d"))
+      .toDF("doc_id", "text")
+    Dedup.minhashSignatures(corpus, "doc_id", "text").write.parquet(s"$root/index")
+    Dedup.minhashSignatures(corpus, "doc_id", "text").write.parquet(s"$root/replay")
+    val corpusDup = corpus.filter(col("doc_id") === 0).select("text").as[String].head()
+    val fresh = Seq(
+      "completely new first document streaming in with plenty of unique words",
+      "another different second document also unique enough to be admitted now",
+      "a third arrival about river boats and lanterns drifting past the old mill",
+      "the fourth text lists quarterly ledger entries for a small coastal bakery")
+    // three single-file micro-batches; near-dups within a batch, of the
+    // stored corpus, and of docs admitted by an EARLIER batch
+    val batches = Seq(
+      Seq((1000L, corpusDup), (1001L, fresh(0)), (1002L, fresh(1)), (1003L, fresh(1) + " y")),
+      Seq((1004L, fresh(0) + " x"), (1005L, fresh(2))),
+      Seq((1006L, fresh(2) + " z"), (1007L, fresh(1) + " w"), (1008L, fresh(3))))
+    val in = s"$root/arrivals"
+    val now = System.currentTimeMillis()
+    batches.zipWithIndex.foreach { case (rows, i) =>
+      rows.toDF("doc_id", "text").coalesce(1).write.parquet(s"$in/f$i")
+      new java.io.File(s"$in/f$i").listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach(_.setLastModified(now - 10000 + 1000 * i))
+    }
+    val stream = spark.readStream
+      .schema(corpus.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$in/*")
+    val rdds0 = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val live0 = graft.plan.Checkpoints.liveCount
+    StreamingIngest.run(spark, stream, s"$root/index", s"$root/corpus",
+      threshold = 0.5,
+      opts = Streaming.ForEachBatchOptions(availableNow = true,
+        checkpointLocation = Some(s"$root/ckpt"))).awaitTermination()
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet -- rdds0 == Set.empty[Int])
+    assert(graft.plan.Checkpoints.liveCount == live0)
+
+    val streamed = spark.read.parquet(s"$root/corpus")
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    val replayed = batches.flatMap { rows =>
+      val adm = Dedup.admitAgainstIndex(rows.toDF("doc_id", "text"),
+          spark.read.parquet(s"$root/replay"), "doc_id", "text", threshold = 0.5)
+        .localCheckpoint(true)
+      Dedup.minhashSignatures(adm, "doc_id", "text").write.mode("append").parquet(s"$root/replay")
+      val ids = adm.select("doc_id").as[Long].collect().toSeq
+      graft.plan.Checkpoints.releaseNow(adm, blocking = true)
+      graft.plan.Checkpoints.release()
+      ids
+    }.sorted
+    assert(streamed == replayed, s"streamed=$streamed replayed=$replayed")
+    assert(streamed == Seq(1001L, 1002L, 1005L, 1008L), streamed)
+    // the index grew by exactly the admitted docs' signatures
+    def sigs(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Seq[Long])].collect().toSet
+    val grown = sigs(spark.read.parquet(s"$root/index")) --
+      sigs(Dedup.minhashSignatures(corpus, "doc_id", "text"))
+    assert(grown == sigs(Dedup.minhashSignatures(
+      spark.read.parquet(s"$root/corpus"), "doc_id", "text")))
+    assert(spark.read.parquet(s"$root/index").count() == 50 + streamed.size)
+  }
 }
