@@ -67,6 +67,7 @@ import graft.sources.{Snapshots, VersionedPool}
   * joined metas `kind='key'`/`'dimfile'`, star metas
   * `kind='keyI'`/`'dimfileI'`. */
 object RollupVersioned {
+  import RollupRewrite.{filesOf, resolveRemoved}
 
   /** The summary layout, fixed at [[init]] and carried in every
     * version's meta. */
@@ -230,26 +231,6 @@ object RollupVersioned {
     }
   }
 
-  private def filesOf(entries: Set[String]): Seq[String] =
-    entries.toSeq.sorted.map(_.split("\\|")(0))
-
-  private def starJoin(fact: DataFrame, dims: Dims): DataFrame =
-    dims.foldLeft(fact) { case (acc, (d, keys)) =>
-      acc.join(d, keys.map { case (fk, dk) =>
-        fact(fk) === d(dk) }.reduce(_ && _))
-    }
-
-  private def resolveTrash(spark: SparkSession, removed: Set[String],
-      trashDirs: Seq[String]): Option[Seq[String]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val resolved = removed.toSeq.sorted.map(_.split("\\|")(0)).map { p =>
-      trashDirs.iterator.map { td =>
-        new org.apache.hadoop.fs.Path(td, RollupRewrite.trashFileName(p))
-      }.find(dst => dst.getFileSystem(conf).exists(dst)).map(_.toString)
-    }
-    if (resolved.exists(_.isEmpty)) None else Some(resolved.flatten)
-  }
-
   private def writeBatch(spark: SparkSession, root: String,
                          summary: DataFrame): String = {
     val batch = VersionedPool.nextBatch(spark, root)
@@ -263,6 +244,9 @@ object RollupVersioned {
       factEntries: Seq[String],
       dims: Seq[(Seq[(String, String)], Seq[String])]): Int = {
     val batch = writeBatch(spark, root, summary)
+    // the batch holds the summary now: release the retraction
+    // checkpoints it was computed from
+    Checkpoints.releaseInputs(summary)
     VersionedPool.publishMeta(spark, root, Seq(batch),
       Seq("sketch_k" -> sketchK.toDouble), None, "doc_id",
       org.apache.spark.sql.types.LongType,
@@ -279,7 +263,7 @@ object RollupVersioned {
                        dims: Dims, layout: Layout): Int = {
     VersionedPool.requireFresh(spark, root)
     publishState(spark, root, layout, layout.sketchK,
-      Rollup.materialize(starJoin(fact, dims), layout.groupCols,
+      Rollup.materialize(Rollup.starJoin(fact, dims), layout.groupCols,
         layout.measures, layout.distinctCols, layout.sketchK,
         layout.histCols),
       baseEntries(fact),
@@ -341,7 +325,7 @@ object RollupVersioned {
     if (fApp.nonEmpty) {
       val deltaFact = graft.sources.Pq.read(spark, filesOf(fApp): _*)
       if (!st.neededFact.subsetOf(deltaFact.columns.toSet)) return None
-      parts += agg(starJoin(deltaFact, dimCur))
+      parts += agg(Rollup.starJoin(deltaFact, dimCur))
     }
     if (dApps.exists(_.nonEmpty)) {
       val savedFact = graft.sources.Pq.read(spark, filesOf(st.savedF): _*)
@@ -360,7 +344,7 @@ object RollupVersioned {
           }
           // prune the saved-fact read to ΔDi's join keys (exact inner-
           // join semi-filter, parquet-pushed — Rollup.semiPruneByKeys)
-          parts += agg(starJoin(
+          parts += agg(Rollup.starJoin(
             Rollup.semiPruneByKeys(savedFact, deltaDim, st.keys(i)), sides))
         }
       }
@@ -391,22 +375,23 @@ object RollupVersioned {
     val remSides = (if (fRem.nonEmpty) 1 else 0) + dRems.count(_.nonEmpty)
     if (remSides != 1) return None
     val rem = if (fRem.nonEmpty) fRem else dRems.find(_.nonEmpty).get
-    val trash = resolveTrash(spark, rem, trashDirs).getOrElse(return None)
+    val trash = resolveRemoved(spark, rem, trashDirs).map(_._2)
+      .getOrElse(return None)
     val removedDf = graft.sources.Pq.read(spark, trash: _*)
     val dimCur = (0 until n).map(i => dims(i)._1 -> st.keys(i))
     val removedJoined =
       if (fRem.nonEmpty) {
         if (!st.neededFact.subsetOf(removedDf.columns.toSet) ||
             !st.neededFact.subsetOf(fact.columns.toSet)) return None
-        starJoin(removedDf, dimCur)
+        Rollup.starJoin(removedDf, dimCur)
       } else {
         val i = dRems.indexWhere(_.nonEmpty)
         if (!st.neededDim(i).subsetOf(removedDf.columns.toSet)) return None
-        starJoin(fact, (0 until n).map(j =>
+        Rollup.starJoin(fact, (0 until n).map(j =>
           if (j == i) removedDf -> st.keys(i) else dimCur(j)))
       }
     val retracted = Rollup.retract(summaryOf(spark, root, None),
-      removedJoined, starJoin(fact, dimCur),
+      removedJoined, Rollup.starJoin(fact, dimCur),
       st.layout.groupCols.map(g => g -> col(g)), st.layout.measures,
       st.layout.distinctCols, st.sketchK, st.layout.histCols)
     Some(publishState(spark, root, st.layout, st.sketchK, retracted,
@@ -442,7 +427,7 @@ object RollupVersioned {
       return None // pure delete → refreshRemoved*
     def trashFrame(rem: Set[String]): Option[Option[DataFrame]] =
       if (rem.isEmpty) Some(None)
-      else resolveTrash(spark, rem, trashDirs)
+      else resolveRemoved(spark, rem, trashDirs).map(_._2)
         .map(t => Some(graft.sources.Pq.read(spark, t: _*)))
     val remFactOpt = trashFrame(fRem).getOrElse(return None)
     val remDims = (0 until n).map(i =>
@@ -477,8 +462,8 @@ object RollupVersioned {
     var summary = summaryOf(spark, root, None)
     remFactOpt.foreach { rf =>
       val savedSides: Dims = (0 until n).map(i => dimSaved(i) -> st.keys(i))
-      summary = Rollup.retract(summary, starJoin(rf, savedSides),
-        starJoin(retF, savedSides),
+      summary = Rollup.retract(summary, Rollup.starJoin(rf, savedSides),
+        Rollup.starJoin(retF, savedSides),
         st.layout.groupCols.map(g => g -> col(g)), st.layout.measures,
         st.layout.distinctCols, st.sketchK, st.layout.histCols)
     }
@@ -489,8 +474,8 @@ object RollupVersioned {
            else if (j == i) dimI
            else dimSaved(j)) -> st.keys(j)
         }
-        summary = Rollup.retract(summary, starJoin(retF, mixSides(rd)),
-          starJoin(retF, mixSides(retDsFrames(i))),
+        summary = Rollup.retract(summary, Rollup.starJoin(retF, mixSides(rd)),
+          Rollup.starJoin(retF, mixSides(retDsFrames(i))),
           st.layout.groupCols.map(g => g -> col(g)), st.layout.measures,
           st.layout.distinctCols, st.sketchK, st.layout.histCols)
       }
@@ -499,7 +484,7 @@ object RollupVersioned {
     if (fApp.nonEmpty) {
       val deltaFact = graft.sources.Pq.read(spark, filesOf(fApp): _*)
       if (!st.neededFact.subsetOf(deltaFact.columns.toSet)) return None
-      parts += agg(starJoin(deltaFact, dimCur))
+      parts += agg(Rollup.starJoin(deltaFact, dimCur))
     }
     (0 until n).foreach { i =>
       if (dApps(i).nonEmpty) {
@@ -510,7 +495,7 @@ object RollupVersioned {
           else if (j == i) deltaDim -> st.keys(i)
           else dimCur(j)
         }
-        parts += agg(starJoin(
+        parts += agg(Rollup.starJoin(
           Rollup.semiPruneByKeys(retF, deltaDim, st.keys(i)), sides))
       }
     }

@@ -165,9 +165,7 @@ object SummaryDesigner {
       else {
         val reqOf: RollupRewrite.JoinedCaptureEntry => Set[String] =
           e => e.grain ++ e.filterCols ++ e.distinctCols
-        val cond = keys.map { case (f, d) => fact(f) === dim(d) }
-          .reduce(_ && _)
-        val joined = fact.join(dim, cond)
+        val joined = Rollup.starJoin(fact, Seq(dim -> keys))
         val joinedCols = joined.columns.toSet
         val tokens = entries.flatMap(reqOf).distinct.sorted
         // expression grain tokens synthesize __g columns over the JOIN
@@ -220,9 +218,7 @@ object SummaryDesigner {
       val out = s"$outDir/designj_${i}_$digest"
       val grainExprs = sp.grainCols.map(g =>
         g -> sp.grainExprSql.get(g).map(expr).getOrElse(col(g)))
-      val joined = fact.join(dim, keys.map { case (f, d) =>
-        fact(f) === dim(d) }.reduce[Column](_ && _))
-      Rollup.materializeExpr(joined, grainExprs, sp.measures,
+      Rollup.materializeExpr(Rollup.starJoin(fact, Seq(dim -> keys)), grainExprs, sp.measures,
           sp.distinctCols, sp.sketchK, sp.histCols)
         .write.mode("overwrite").parquet(out)
       RollupRewrite.registerJoined(fact, dim, keys, graft.sources.Pq.read(spark, out),
@@ -250,10 +246,7 @@ object SummaryDesigner {
       else {
         val reqOf: RollupRewrite.StarCaptureEntry => Set[String] =
           e => e.grain ++ e.filterCols ++ e.distinctCols
-        val joined = dims.foldLeft(fact) { case (acc, (d, keys)) =>
-          acc.join(d, keys.map { case (f, dk) =>
-            fact(f) === d(dk) }.reduce(_ && _))
-        }
+        val joined = Rollup.starJoin(fact, dims)
         val joinedCols = joined.columns.toSet
         val tokens = entries.flatMap(reqOf).distinct.sorted
         // expression grain tokens synthesize __g columns (r13)
@@ -514,14 +507,12 @@ object SummaryDesigner {
     val baseCards: Seq[Map[Set[String], Long]] =
       bases.indices.map(i => cardsOf(bases(i), baseTokens(i)))
     val joinFrames = joins.map { case (f, d, keys) =>
-      f.join(d, keys.map { case (fk, dk) => f(fk) === d(dk) }.reduce(_ && _)) }
+      Rollup.starJoin(f, Seq(d -> keys)) }
     val joinCards: Seq[Map[Set[String], Long]] = joins.indices.map { j =>
       cardsOf(joinFrames(j),
         joinQs.filter(_.join == j).flatMap(_.req).distinct.sorted)
     }
-    val starFrames = stars.map { case (f, ds) =>
-      ds.foldLeft(f) { case (acc, (d, keys)) =>
-        acc.join(d, keys.map { case (fk, dk) => f(fk) === d(dk) }.reduce(_ && _)) } }
+    val starFrames = stars.map { case (f, ds) => Rollup.starJoin(f, ds) }
     val starCards: Seq[Map[Set[String], Long]] = stars.indices.map { si =>
       cardsOf(starFrames(si),
         starQs.filter(_.star == si).flatMap(_.req).distinct.sorted)
@@ -817,9 +808,7 @@ object SummaryDesigner {
       val j = design.joined.zipWithIndex.map { case ((ji, sp), i) =>
         val (f, d, keys) = joins(ji)
         val out = s"$outDir/crossj_${i}"
-        val joined = f.join(d, keys.map { case (fk, dk) =>
-          f(fk) === d(dk) }.reduce[Column](_ && _))
-        Rollup.materializeExpr(joined, grainExprsOf(sp), sp.measures,
+        Rollup.materializeExpr(Rollup.starJoin(f, Seq(d -> keys)), grainExprsOf(sp), sp.measures,
             sp.distinctCols, sp.sketchK, sp.histCols)
           .write.mode("overwrite").parquet(out)
         RollupRewrite.registerJoined(f, d, keys, graft.sources.Pq.read(spark, out),
@@ -830,11 +819,7 @@ object SummaryDesigner {
       val st = design.star.zipWithIndex.map { case ((si, sp), i) =>
         val (f, ds) = stars(si)
         val out = s"$outDir/crosss_${i}"
-        val starJoined = ds.foldLeft(f) { case (acc, (d, keys)) =>
-          acc.join(d, keys.map { case (fk, dk) =>
-            f(fk) === d(dk) }.reduce[Column](_ && _))
-        }
-        Rollup.materializeExpr(starJoined, grainExprsOf(sp), sp.measures,
+        Rollup.materializeExpr(Rollup.starJoin(f, ds), grainExprsOf(sp), sp.measures,
             sp.distinctCols, sp.sketchK, sp.histCols)
           .write.mode("overwrite").parquet(out)
         RollupRewrite.registerStar(f, ds, graft.sources.Pq.read(spark, out),
@@ -859,11 +844,7 @@ object SummaryDesigner {
       val out = s"$outDir/designs_${i}_$digest"
       val grainExprs = sp.grainCols.map(g =>
         g -> sp.grainExprSql.get(g).map(expr).getOrElse(col(g)))
-      val starJoined = dims.foldLeft(fact) { case (acc, (d, keys)) =>
-        acc.join(d, keys.map { case (f, dk) =>
-          fact(f) === d(dk) }.reduce[Column](_ && _))
-      }
-      Rollup.materializeExpr(starJoined, grainExprs, sp.measures,
+      Rollup.materializeExpr(Rollup.starJoin(fact, dims), grainExprs, sp.measures,
           sp.distinctCols, sp.sketchK, sp.histCols)
         .write.mode("overwrite").parquet(out)
       RollupRewrite.registerStar(fact, dims, graft.sources.Pq.read(spark, out),

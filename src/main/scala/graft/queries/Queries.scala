@@ -5733,7 +5733,7 @@ object Queries {
   }
 
   /** STAR DIM-APPEND REFRESH ([[graft.plan.RollupRewrite]]'s
-    * `refreshStaleStar` — VERDICT r12 #1, q206's join-distributivity
+    * `refreshStale` — VERDICT r12 #1, q206's join-distributivity
     * device generalized to N dims): the fact AND one dim are appended
     * in ONE stale window, and the star summary delta-refreshes via the
     * TELESCOPING decomposition — `ΔF ⋈ dims_current` (the fact term)

@@ -3560,4 +3560,248 @@ class RollupRewriteSpec extends SparkSpec {
         .queryExecution.logical eq fact.queryExecution.logical)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
+
+  // ---- one side list: plain, joined and star share register, refresh,
+  // serve and persistence -------------------------------------------------
+
+  /** A star-schema fixture: `fact(fk1, fk2, m)` written as one file per
+    * batch, `d1(d1k, g1)`, `d2(d2k, g2)`. */
+  private def starFixture(dir: String): Unit = {
+    Seq((1L, 10L, 100L), (2L, 20L, 200L)).toDF("fk1", "fk2", "m")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/fact")
+    Seq((1L, 10L, 300L), (2L, 10L, 400L)).toDF("fk1", "fk2", "m")
+      .coalesce(1).write.mode("append").parquet(s"$dir/fact")
+    Seq((2L, 20L, 500L), (1L, 20L, 600L)).toDF("fk1", "fk2", "m")
+      .coalesce(1).write.mode("append").parquet(s"$dir/fact")
+    Seq((1L, "a"), (2L, "b")).toDF("d1k", "g1")
+      .write.mode("overwrite").parquet(s"$dir/d1")
+    Seq((10L, "x"), (20L, "y")).toDF("d2k", "g2")
+      .write.mode("overwrite").parquet(s"$dir/d2")
+  }
+
+  private def parquetFiles(path: String): Seq[String] =
+    new java.io.File(path).listFiles().toSeq.map(_.getPath)
+      .filter(_.endsWith(".parquet")).sorted
+
+  test("summary maintenance releases its retraction checkpoints: refreshStale over every side list, and the versioned refreshes") {
+    val dir = java.nio.file.Files.createTempDirectory("rollup_leak").toString
+    def noLeaks[A](what: String)(body: => A): A = {
+      val rdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val live = Checkpoints.liveCount
+      val out = body
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet -- rdds ==
+        Set.empty[Int], s"$what left persisted RDDs")
+      assert(Checkpoints.liveCount == live, s"$what left tracked checkpoints")
+      out
+    }
+    try {
+      starFixture(dir)
+      def fact() = spark.read.parquet(s"$dir/fact")
+      def dims() = Seq(spark.read.parquet(s"$dir/d1") -> Seq("fk1" -> "d1k"),
+        spark.read.parquet(s"$dir/d2") -> Seq("fk2" -> "d2k"))
+      def appendDay(rows: Seq[(Long, Long, Long)]): Unit =
+        rows.toDF("fk1", "fk2", "m").coalesce(1).write.mode("append")
+          .parquet(s"$dir/fact")
+      val trash = s"$dir/trash"
+      // part 1: refreshStale over a plain, a joined and a star registration
+      Rollup.materialize(fact(), Seq("fk1"), Seq("m"))
+        .write.parquet(s"$dir/plain")
+      RollupRewrite.register(fact(), spark.read.parquet(s"$dir/plain"),
+        Seq("fk1"), Seq("m"))
+      Rollup.materializeJoined(fact(), dims().head._1, dims().head._2,
+          Seq("g1"), Seq("m"))
+        .write.parquet(s"$dir/joined")
+      RollupRewrite.registerJoined(fact(), dims().head._1, dims().head._2,
+        spark.read.parquet(s"$dir/joined"), Seq("g1"), Seq("m"))
+      Rollup.materializeStar(fact(), dims(), Seq("g1", "g2"), Seq("m"))
+        .write.parquet(s"$dir/star")
+      RollupRewrite.registerStar(fact(), dims(),
+        spark.read.parquet(s"$dir/star"), Seq("g1", "g2"), Seq("m"))
+      // delete window: the oldest day moves to the trash
+      RollupRewrite.deleteFiles(spark, parquetFiles(s"$dir/fact").take(1), trash)
+      val rep1 = noLeaks("refreshStale (delete)") {
+        RollupRewrite.refreshStale(spark, s"$dir/r1", Seq(trash))
+      }
+      assert(rep1.size == 3 && rep1.forall(r => r.refreshed && r.removedFiles.size == 1),
+        s"every side list must retract the delete: $rep1")
+      // mixed window: a new day lands while another moves to the trash
+      val oldest = parquetFiles(s"$dir/fact").head
+      appendDay(Seq((1L, 20L, 700L), (2L, 10L, 800L)))
+      RollupRewrite.deleteFiles(spark, Seq(oldest), trash)
+      val rep2 = noLeaks("refreshStale (mixed)") {
+        RollupRewrite.refreshStale(spark, s"$dir/r2", Seq(trash))
+      }
+      assert(rep2.size == 3 && rep2.forall(r => r.refreshed &&
+          r.removedFiles.size == 1 && r.deltaFiles.size == 1),
+        s"every side list must fold the mixed diff: $rep2")
+      RollupRewrite.enable(spark)
+      val want = fact().groupBy("fk1").agg(sum("m").as("s")).collect().toSet
+      val served = fact().groupBy("fk1").agg(sum("m").as("s"))
+      assert(scanPaths(served).forall(_.contains("/r2/")),
+        s"the twice-refreshed plain summary must serve: ${scanPaths(served)}")
+      RollupRewrite.disable(spark)
+      assert(served.collect().toSet == want)
+      // part 2: the versioned tier's delete and mixed refreshes
+      val layoutP = RollupVersioned.Layout(Seq("fk1"), Seq("m"))
+      val layoutJ = RollupVersioned.Layout(Seq("g1"), Seq("m"))
+      val layoutS = RollupVersioned.Layout(Seq("g1", "g2"), Seq("m"))
+      RollupVersioned.init(spark, s"$dir/vp", fact(), layoutP)
+      RollupVersioned.initJoined(spark, s"$dir/vj", fact(), dims().head._1,
+        dims().head._2, layoutJ)
+      RollupVersioned.initStar(spark, s"$dir/vs", fact(), dims(), layoutS)
+      RollupRewrite.deleteFiles(spark, parquetFiles(s"$dir/fact").take(1), trash)
+      noLeaks("RollupVersioned.refreshRemoved*") {
+        assert(RollupVersioned.refreshRemoved(spark, s"$dir/vp", fact(),
+          Seq(trash)).isDefined)
+        assert(RollupVersioned.refreshRemovedJoined(spark, s"$dir/vj", fact(),
+          dims().head._1, Seq(trash)).isDefined)
+        assert(RollupVersioned.refreshRemovedStar(spark, s"$dir/vs", fact(),
+          dims(), Seq(trash)).isDefined)
+      }
+      val oldest2 = parquetFiles(s"$dir/fact").head
+      appendDay(Seq((2L, 20L, 900L)))
+      RollupRewrite.deleteFiles(spark, Seq(oldest2), trash)
+      noLeaks("RollupVersioned.refreshMixed*") {
+        assert(RollupVersioned.refreshMixed(spark, s"$dir/vp", fact(),
+          Seq(trash)).isDefined)
+        assert(RollupVersioned.refreshMixedJoined(spark, s"$dir/vj", fact(),
+          dims().head._1, Seq(trash)).isDefined)
+        assert(RollupVersioned.refreshMixedStar(spark, s"$dir/vs", fact(),
+          dims(), Seq(trash)).isDefined)
+      }
+      assert(RollupVersioned.summaryOf(spark, s"$dir/vs", None)
+          .groupBy().agg(sum("__sum_m")).head().getLong(0) ==
+        fact().agg(sum("m")).head().getLong(0))
+    } finally {
+      RollupRewrite.disable(spark)
+      RollupRewrite.clear()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  test("restore reads every manifest dialect (v1 v2 v3 j1 j2 s1 s2); save → restore → save is byte-identical for each side list") {
+    val dir = java.nio.file.Files.createTempDirectory("rollup_dialects").toString
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    try {
+      starFixture(dir)
+      val fact = spark.read.parquet(s"$dir/fact")
+      val d1 = spark.read.parquet(s"$dir/d1")
+      val d2 = spark.read.parquet(s"$dir/d2")
+      val dims = Seq(d1 -> Seq("fk1" -> "d1k"), d2 -> Seq("fk2" -> "d2k"))
+      def uri(p: String) = new org.apache.hadoop.fs.Path(p).makeQualified(
+        java.net.URI.create("file:///"), null).toString
+      // the saved staleness state, in the `path|len|mtime` form registration takes
+      def manifestOf(p: String): Seq[String] = {
+        val path = new org.apache.hadoop.fs.Path(uri(p))
+        path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(path).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+          .map(st => s"${st.getPath}|${st.getLen}|${st.getModificationTime}")
+          .sorted
+      }
+      def fpOf(p: String): String = {
+        val md = java.security.MessageDigest.getInstance("MD5")
+        manifestOf(p).foreach(e => md.update(e.getBytes("UTF-8")))
+        java.util.Base64.getEncoder.encodeToString(md.digest)
+      }
+      def state(p: String) =
+        Seq(enc(fpOf(p)), manifestOf(p).map(enc).mkString(",")).mkString("|")
+      def dimGroup(p: String, k: String, dk: String) =
+        Seq(enc(uri(p)), s"${enc(k)}:${enc(dk)}", enc(fpOf(p)),
+          manifestOf(p).map(enc).mkString(",")).mkString("~")
+      def summary(name: String, df: DataFrame): String = {
+        df.write.parquet(s"$dir/$name")
+        enc(uri(s"$dir/$name"))
+      }
+      val (f, j, s) = (enc(uri(s"$dir/fact")), enc(uri(s"$dir/d1")),
+        dimGroup(s"$dir/d1", "fk1", "d1k") + ";" + dimGroup(s"$dir/d2", "fk2", "d2k"))
+      val lines = Seq(
+        s"v1|$f|${summary("v1", Rollup.materialize(fact, Seq("fk1"), Seq("m")))}|fk1|m||64",
+        s"v2|$f|${summary("v2", Rollup.materializeExpr(fact,
+          Seq("b" -> expr("fk2 % 3")), Seq("m")))}|b|m||64|b:${enc("(fk2 % 3)")}",
+        s"v3|$f|${summary("v3", Rollup.materialize(fact, Seq("fk1", "fk2"),
+          Seq("m")))}|fk1,fk2|m||64|||" + state(s"$dir/fact"),
+        s"j1|$f|$j|fk1:d1k|${summary("j1", Rollup.materializeJoined(fact, d1,
+          Seq("fk1" -> "d1k"), Seq("g1"), Seq("m")))}|g1|m||64||" +
+          state(s"$dir/fact") + "|" + state(s"$dir/d1"),
+        s"j2|$f|$j|fk1:d1k|${summary("j2", Rollup.materializeJoined(fact, d1,
+          Seq("fk1" -> "d1k"), Seq("g1", "fk2"), Seq("m")))}|g1,fk2|m||64||" +
+          state(s"$dir/fact") + "|" + state(s"$dir/d1") + "|",
+        s"s1|$f|$s|${summary("s1", Rollup.materializeStar(fact, dims,
+          Seq("g1", "g2"), Seq("m")))}|g1,g2|m||64||" + state(s"$dir/fact"),
+        s"s2|$f|$s|${summary("s2", Rollup.materializeStar(fact, dims,
+          Seq("g2"), Seq("m")))}|g2|m||64||" + state(s"$dir/fact") + "|")
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/old.manifest"),
+        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      assert(RollupRewrite.restore(spark, s"$dir/old.manifest") == 7)
+      val described = RollupRewrite.describeRegistrations(spark).collect()
+      assert(described.length == 7 && described.forall(_.getAs[Boolean]("fresh")),
+        s"every dialect must restore one fresh registration: ${described.toSeq}")
+      RollupRewrite.enable(spark)
+      val plainQ = fact.groupBy(expr("fk2 % 3")).agg(sum("m"))
+      val joinedQ = fact.join(d1, col("fk1") === col("d1k"))
+        .groupBy("g1").agg(sum("m"))
+      val starQ = fact.join(d1, col("fk1") === col("d1k"))
+        .join(d2, col("fk2") === col("d2k")).groupBy("g2").agg(sum("m"))
+      for ((q, name) <- Seq(plainQ -> "v2", joinedQ -> "j1", starQ -> "s2"))
+        assert(scanPaths(q) == Set(uri(s"$dir/$name")),
+          s"restored $name line must serve: ${scanPaths(q)}")
+      // one registration of each side list: save → clear → restore → save
+      RollupRewrite.clear()
+      RollupRewrite.registerStar(fact, dims, spark.read.parquet(s"$dir/s1"),
+        Seq("g1", "g2"), Seq("m"))
+      RollupRewrite.register(fact, spark.read.parquet(s"$dir/v2"), Seq("b"),
+        Seq("m"), groupExprOf = Map("b" -> expr("fk2 % 3")))
+      RollupRewrite.registerJoined(fact, d1, Seq("fk1" -> "d1k"),
+        spark.read.parquet(s"$dir/j1"), Seq("g1"), Seq("m"))
+      RollupRewrite.save(spark, s"$dir/a.manifest")
+      RollupRewrite.clear()
+      assert(RollupRewrite.restore(spark, s"$dir/a.manifest") == 3)
+      RollupRewrite.save(spark, s"$dir/b.manifest")
+      def bytes(p: String) = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)).toSeq
+      assert(bytes(s"$dir/a.manifest") == bytes(s"$dir/b.manifest"),
+        s"round trip changed the manifest:\n${new String(bytes(s"$dir/a.manifest").toArray, "UTF-8")}" +
+          s"\n---\n${new String(bytes(s"$dir/b.manifest").toArray, "UTF-8")}")
+      assert(new String(bytes(s"$dir/a.manifest").toArray, "UTF-8").split("\n")
+        .map(_.takeWhile(_ != '|')).toSeq == Seq("v3", "j2", "s2"),
+        "lines group plain → joined → star")
+    } finally {
+      RollupRewrite.disable(spark)
+      RollupRewrite.clear()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  test("star summary serves a star query whose dim key reaches the join through a rename") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
+    val dir = java.nio.file.Files.createTempDirectory("star_rename").toString
+    try {
+      starFixture(dir)
+      val fact = spark.read.parquet(s"$dir/fact")
+      val d1 = spark.read.parquet(s"$dir/d1")
+      val d2 = spark.read.parquet(s"$dir/d2")
+      val dims = Seq(d1 -> Seq("fk1" -> "d1k"), d2 -> Seq("fk2" -> "d2k"))
+      Rollup.materializeStar(fact, dims, Seq("g1", "g2"), Seq("m"))
+        .write.parquet(s"$dir/star")
+      RollupRewrite.registerStar(fact, dims, spark.read.parquet(s"$dir/star"),
+        Seq("g1", "g2"), Seq("m"))
+      RollupRewrite.enable(spark)
+      val renamed = spark.read.parquet(s"$dir/d1")
+        .select(col("d1k").as("k2"), col("g1"))
+      val q = spark.read.parquet(s"$dir/fact")
+        .join(renamed, col("fk1") === col("k2"))
+        .join(spark.read.parquet(s"$dir/d2"), col("fk2") === col("d2k"))
+        .groupBy("g1", "g2").agg(count(lit(1)).as("n"), sum("m").as("s"))
+      assert(scanPaths(q) == Set(s"file:$dir/star") &&
+          q.queryExecution.optimizedPlan.collect { case j: LJoin => j }.isEmpty,
+        s"a renamed dim key must still serve from the star summary:\n" +
+          q.queryExecution.optimizedPlan)
+      val got = q.collect().toSet
+      RollupRewrite.disable(spark)
+      assert(got == q.collect().toSet && got.nonEmpty)
+    } finally {
+      RollupRewrite.disable(spark)
+      RollupRewrite.clear()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
 }
