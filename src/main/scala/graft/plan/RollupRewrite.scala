@@ -1069,10 +1069,9 @@ object RollupRewrite {
     * registration; every field URL-encoded (paths legitimately contain
     * `=` in partition directories, so the catalog sidecar's
     * validate-no-delimiters approach cannot work here — encoding can
-    * never round-trip wrong). Commits by tmp + FileContext atomic
-    * OVERWRITE rename (the Snapshots pointer protocol): a concurrent
-    * [[restore]] sees either the old or the new manifest, never a
-    * truncated one.
+    * never round-trip wrong). Commits through
+    * [[graft.sources.AtomicFile.write]]: a concurrent [[restore]] sees
+    * either the old or the new manifest, never a truncated one.
     *
     * One dialect per side count, lines grouped plain → joined → star:
     * `v3` (0 dims), `j2` (1 dim), `s2` (N dims — each dim one
@@ -1124,17 +1123,8 @@ object RollupRewrite {
     // a manifest without plain registrations starts with an empty line,
     // as every earlier save wrote it (restore skips blank lines)
     val text = (if (snapshot.exists(_.dims.isEmpty)) "" else "\n") + lines.mkString
-    val p = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    val parent = p.getParent
-    fs.mkdirs(parent)
-    val tmp = new org.apache.hadoop.fs.Path(parent, s".${p.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-    fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    graft.sources.AtomicFile.write(spark.sparkContext.hadoopConfiguration,
+      path, text)
   }
 
   /** Re-register every lattice entry from a [[save]]d manifest (additive
@@ -1148,13 +1138,9 @@ object RollupRewrite {
     * a malformed line throws rather than restoring a partial tier. */
   def restore(spark: SparkSession, path: String): Int = {
     def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val text =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
+    val text = graft.sources.AtomicFile.read(
+        spark.sparkContext.hadoopConfiguration, path).getOrElse(
+      throw new java.io.FileNotFoundException(s"no lattice manifest at $path"))
     def list(field: String): Seq[String] =
       if (field.isEmpty) Nil else field.split(",", -1).toSeq.map(dec)
     def pairs(field: String): Seq[(String, String)] =

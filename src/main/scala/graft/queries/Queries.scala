@@ -3422,8 +3422,8 @@ object Queries {
     * story applied to the optimizer tier): registrations are JVM state,
     * so without a manifest the whole scan-avoidance tier dies with the
     * session. The gate registers two summaries (one sketch-carrying),
-    * saves the manifest (URL-encoded fields, tmp + FileContext atomic
-    * OVERWRITE rename), CLEARS the registry — the restart — then
+    * saves the manifest (URL-encoded fields, one `AtomicFile` commit),
+    * CLEARS the registry — the restart — then
     * restores and serves both legs from the restored tier: a classic
     * aggregate from the status summary and a KMV distinct estimate from
     * the priority summary (whose hash shape had to be RE-SNAPSHOTTED

@@ -26,8 +26,9 @@ class GraftCatalog(spark: SparkSession) {
     * location replaced, not LOCATION_ALREADY_EXISTS. Deletes ONLY
     * directories that verifiably look like Spark table output (part
     * files / underscore+dot metadata / key=value partition dirs, checked
-    * recursively): with a shared or persistent warehouse dir, the default
-    * table path can hold another process's live non-table data, and
+    * recursively / the `_temporary` or `.spark-staging-*` dir a write
+    * that died leaves behind): with a shared or persistent warehouse
+    * dir, the default table path can hold another process's live non-table data, and
     * silently destroying it on a name collision would be far worse than
     * failing this save with an explicit error. */
   private def clearOrphanedLocation(db: String, table: String, mode: SaveMode): Unit =
@@ -50,7 +51,9 @@ class GraftCatalog(spark: SparkSession) {
       dir: org.apache.hadoop.fs.Path): Boolean =
     fs.listStatus(dir).forall { st =>
       val n = st.getPath.getName
-      if (st.isDirectory) n.contains("=") && looksLikeSparkTableOutput(fs, st.getPath)
+      if (st.isDirectory)
+        n == "_temporary" || n.startsWith(".spark-staging-") ||
+          n.contains("=") && looksLikeSparkTableOutput(fs, st.getPath)
       else n.startsWith("part-") || n.startsWith("_") || n.startsWith(".")
     }
 
@@ -93,13 +96,6 @@ class GraftCatalog(spark: SparkSession) {
       "sortCols" -> sortCols.mkString(",")))
   }
 
-  /** Layout metadata that is CATALOG state, not file state (bucket spec,
-    * partition keys), persisted as an underscore-prefixed sidecar IN the
-    * table directory — parquet readers ignore `_*` files, and a fresh
-    * catalog (new JVM, in-memory metastore) can [[crawl]] the directory
-    * back to a fully-functional table, bucket layout included. The write
-    * goes through the Hadoop FileSystem (tmp + atomic rename, the
-    * Snapshots pointer protocol) so it works on object stores too. */
   /** `_GRAFT_META` is a line-oriented `k=v` sidecar with comma-joined
     * column lists; a layout column name containing a delimiter would
     * round-trip SILENTLY wrong through [[crawl]] (the restored table gets
@@ -113,37 +109,33 @@ class GraftCatalog(spark: SparkSession) {
           "catalog partition/bucket/sort key")
     }
 
+  /** Layout metadata that is CATALOG state, not file state (bucket spec,
+    * partition keys), persisted as an underscore-prefixed sidecar IN the
+    * table directory — parquet readers ignore `_*` files, and a fresh
+    * catalog (new JVM, in-memory metastore) can [[crawl]] the directory
+    * back to a fully-functional table, bucket layout included. Commits
+    * through [[AtomicFile.write]] (Hadoop FileSystem, so it works on
+    * object stores too): a crash mid-commit leaves an append's committed
+    * sidecar in place. An Overwrite drops the old table, sidecar and
+    * all, before its data write, so a crash before this commit leaves a
+    * directory without one, which [[crawl]] refuses. */
   private def writeMeta(db: String, table: String, kv: Map[String, String]): Unit = {
     // the table's ACTUAL resolved location (an Overwrite onto an existing
     // external table keeps its location — defaultTablePath would miss it)
     val loc = new org.apache.hadoop.fs.Path(
       spark.sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db))).location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(loc, s".tmp.$MetaFile")
-    val out = fs.create(tmp, true)
-    try out.write(kv.map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(loc, MetaFile)
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"failed to commit $dst")
+    AtomicFile.write(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(loc, MetaFile).toString,
+      kv.map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n"))
   }
 
-  private def readMeta(path: String): Map[String, String] = {
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      text.linesIterator.filter(_.contains("="))
+  private def readMeta(path: String): Map[String, String] =
+    AtomicFile.read(spark.sparkContext.hadoopConfiguration,
+        new org.apache.hadoop.fs.Path(path, MetaFile).toString)
+      .fold(Map.empty[String, String])(_.linesIterator.filter(_.contains("="))
         .map { l => val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1) }
-        .toMap
-    }
-  }
+        .toMap)
 
   /** Catalog source (`create_dynamic_frame_from_catalog`,
     * `context.py:158-188`); `pushDownPredicate` becomes a plan filter that
@@ -176,13 +168,31 @@ class GraftCatalog(spark: SparkSession) {
     * (GraftCatalogSpec pins it against a from-scratch catalog). Bucketed
     * DDL requires an explicit schema, which is read from the parquet
     * footers (exactly what the files say, not what a previous session
-    * remembered). */
+    * remembered). A directory without the sidecar that holds no data,
+    * Spark's bucket-numbered part files, or the `_temporary` dir of a
+    * write that never committed is what a save leaves when it dies
+    * before committing its layout: crawl refuses it rather than register
+    * its rows without their layout, or only some of them. */
   def crawl(db: String, tableName: String, path: String): Unit = {
     createDatabase(db)
     spark.sql(s"DROP TABLE IF EXISTS `$db`.`$tableName`")
     val meta = readMeta(path)
-    if (meta.isEmpty) spark.catalog.createTable(s"`$db`.`$tableName`", path, "parquet")
-    else {
+    if (meta.isEmpty) {
+      val dir = new org.apache.hadoop.fs.Path(path)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(dir)) {
+        val names = fs.listStatus(dir).map(_.getPath.getName).toSeq
+        (if (names.forall(n => n.startsWith("_") || n.startsWith("."))) Some("no data")
+         else names.find(n => n == "_temporary" || n.startsWith("part-") &&
+           org.apache.spark.sql.execution.datasources.BucketingUtils
+             .getBucketId(n).isDefined))
+          .foreach(n => throw new IllegalStateException(
+            s"refusing to crawl $path: it holds $n but no $MetaFile to " +
+              "restore its layout from, as a save leaves it when it dies " +
+              "before committing its layout; re-run the save"))
+      }
+      spark.catalog.createTable(s"`$db`.`$tableName`", path, "parquet")
+    } else {
       val schema = spark.read.parquet(path).schema.toDDL
       val parts = meta.get("partitionKeys").map(_.split(",").filter(_.nonEmpty)).getOrElse(Array.empty)
       val partDdl =

@@ -44,6 +44,18 @@ object Pq {
     * lets a retired session's entries age out with the bound below. */
   private val dfMemo = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
+  /** Whether directory `path` exists and holds a visible file (hidden
+    * `_`/`.` entries skipped, as below): a parquet write that died
+    * before its job commit leaves none. */
+  def holdsData(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+  }
+
   /** Visible-file manifest under `paths` (hidden `_`/`.` entries skipped,
     * matching Spark's own file-source visibility rule) plus the first
     * visible parquet file (the cold-read footer probe target). */

@@ -14,15 +14,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout under `dir`:
   * {{{
   *   v=00001/ v=00002/ ...   immutable parquet version directories
-  *   _LATEST                 the committed version number (atomic rename)
+  *   _LATEST                 the committed version number
   *   _PINS/<name>            reader pins: versions vacuum must not touch
   * }}}
   *
-  * Scale shape: the commit is O(1) regardless of table size — one rename
-  * of a bytes-sized pointer (rename is atomic on HDFS-like filesystems;
-  * an object store would use a conditional put of the same pointer key).
-  * Old versions stay readable until [[vacuum]] reclaims them, which is
-  * what makes long-running 100 TB readers safe against concurrent
+  * Scale shape: the commit is O(1) regardless of table size — one
+  * [[AtomicFile.write]] of a bytes-sized pointer. Old versions stay
+  * readable until [[vacuum]] reclaims them, which is what makes long-running 100 TB readers safe against concurrent
   * publishes: a reader that resolved v=N keeps scanning v=N's files even
   * after v=N+1 commits. Single-writer by contract (a real lake format
   * adds a lock/CAS for writer-writer races; readers need none).
@@ -45,37 +43,17 @@ object Snapshots {
     * before it leaves the table at the previous version with only an
     * orphan directory to vacuum, never a torn table. */
   def publish(spark: SparkSession, dir: String, df: DataFrame): Int = {
-    val (f, root) = fs(spark, dir)
+    val (_, root) = fs(spark, dir)
     val v = nextVersion(spark, dir)
     df.write.mode("error").parquet(versionDir(root, v).toString)
-    commitPointer(f, root, v)
+    commitPointer(spark, root, v)
     v
   }
 
   /** The committed version, if any. */
-  def latestVersion(spark: SparkSession, dir: String): Option[Int] = {
-    val (f, root) = fs(spark, dir)
-    val ptr = new Path(root, Pointer)
-    if (!f.exists(ptr)) None
-    else {
-      val buf = new Array[Byte](f.getFileStatus(ptr).getLen.toInt)
-      val in = f.open(ptr)
-      try { in.readFully(0, buf); Some(new String(buf, "UTF-8").trim.toInt) }
-      finally in.close()
-    }
-  }
-
-  /** Schema memo keyed by immutable version directory (r14, guide §7.3
-    * driver overhead): a committed version's files never change (the
-    * publish contract — writers only ever create NEW `v=` dirs), so its
-    * parquet schema is a constant; without the memo EVERY
-    * `spark.read.parquet` of a version pays a 1-task footer-inference
-    * JOB, and the versioned-index/summary gates schedule 20+ such jobs
-    * per lifecycle (measured as a dominant driver-gap component).
-    * Metadata only — row data is never cached; the existence `require`
-    * in [[readVersion]] still guards vacuumed versions. */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+  def latestVersion(spark: SparkSession, dir: String): Option[Int] =
+    AtomicFile.read(spark.sparkContext.hadoopConfiguration,
+      new Path(dir, Pointer).toString).map(_.trim.toInt)
 
   /** Cheap existence probe for a committed version dir — what memo
     * layers above ([[graft.plan.RollupVersioned]]'s MetaL memo) must
@@ -87,19 +65,14 @@ object Snapshots {
     f.exists(versionDir(root, v))
   }
 
-  /** Read a pinned version — time travel. */
+  /** Read a pinned version — time travel. A committed version's files
+    * never change, so the manifest-keyed [[Pq.read]] memo serves every
+    * repeated read of it without a schema-inference job. */
   def readVersion(spark: SparkSession, dir: String, v: Int): DataFrame = {
     val (f, root) = fs(spark, dir)
     val p = versionDir(root, v)
     require(f.exists(p), s"snapshot version $v does not exist under $dir")
-    val cached = schemaMemo.get(p.toString)
-    if (cached != null) spark.read.schema(cached).parquet(p.toString)
-    else {
-      val df = spark.read.parquet(p.toString)
-      if (schemaMemo.size > 1024) schemaMemo.clear() // bound the memo
-      schemaMemo.putIfAbsent(p.toString, df.schema)
-      df
-    }
+    Pq.read(spark, p.toString)
   }
 
   /** [[readVersion]] for METADATA-BOUNDED snapshot tables (version meta,
@@ -137,7 +110,7 @@ object Snapshots {
   def rollback(spark: SparkSession, dir: String, v: Int): Unit = {
     val (f, root) = fs(spark, dir)
     require(f.exists(versionDir(root, v)), s"cannot roll back to missing version $v")
-    commitPointer(f, root, v)
+    commitPointer(spark, root, v)
   }
 
   /** All version numbers present on disk (committed or orphaned), ascending. */
@@ -149,17 +122,19 @@ object Snapshots {
   }
 
   /** Delete all versions strictly older than the newest `keepLast` —
-    * never the committed one, and never a [[pin]]ned one. Returns the
-    * versions deleted. Readers that outlive the retention window MUST
-    * register via [[pin]] before resolving their version; unpinned
+    * never the committed one, and never a [[pin]]ned one — plus any
+    * uncommitted version dir without a data file (a publish that died
+    * mid-write: nothing can resolve it). Returns the versions deleted.
+    * Readers that outlive the retention window MUST register via [[pin]] before resolving their version; unpinned
     * readers are only safe within the newest `keepLast`. */
   def vacuum(spark: SparkSession, dir: String, keepLast: Int): Seq[Int] = {
     require(keepLast >= 1, "keepLast must be >= 1")
     val (f, root) = fs(spark, dir)
     val all = versions(spark, dir)
     val current = latestVersion(spark, dir)
-    val keep = all.takeRight(keepLast).toSet ++ current ++
-      pinnedVersions(spark, dir).values
+    val keep = all.takeRight(keepLast)
+      .filter(v => Pq.holdsData(spark, versionDir(root, v).toString)).toSet ++
+      current ++ pinnedVersions(spark, dir).values
     val drop = all.filterNot(keep)
     drop.foreach(v => f.delete(versionDir(root, v), true))
     drop
@@ -180,7 +155,7 @@ object Snapshots {
     * [[unpin]]s when done — the lock-free reader contract extended past
     * the retention window. Pin creation is a one-file write under
     * `_PINS/`; re-pinning an existing name moves it. The pin file commits
-    * by the same tmp+atomic-rename protocol as the `_LATEST` pointer: a
+    * through [[AtomicFile.write]], like the `_LATEST` pointer: a
     * [[vacuum]] listing `_PINS/` concurrently with registration must see
     * either no pin or the complete pin — never an empty or truncated
     * file, which would abort the vacuum (or worse, pin the wrong
@@ -188,14 +163,8 @@ object Snapshots {
   def pin(spark: SparkSession, dir: String, v: Int, name: String): Unit = {
     val (f, root) = fs(spark, dir)
     require(f.exists(versionDir(root, v)), s"cannot pin missing version $v")
-    val pins = new Path(root, PinsDir)
-    f.mkdirs(pins)
-    val tmp = new Path(pins, s".${pinName(name)}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, f.getConf)
-    fc.rename(tmp, new Path(pins, pinName(name)),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    AtomicFile.write(spark.sparkContext.hadoopConfiguration,
+      new Path(new Path(root, PinsDir), pinName(name)).toString, v.toString)
   }
 
   /** Remove a named pin (idempotent — a finished reader's cleanup must
@@ -207,7 +176,8 @@ object Snapshots {
 
   /** All registered pins, name → version. In-flight `.name.tmp` files
     * from a concurrent [[pin]] (or a crash before its rename) are not
-    * pins and are skipped; a COMMITTED pin that doesn't parse is a hard
+    * pins and are skipped, as is a pin [[unpin]]ned between the listing
+    * and its read; a COMMITTED pin that doesn't parse is a hard
     * error with the offending path named — silently ignoring it would
     * let [[vacuum]] delete the version that reader intended to hold. */
   def pinnedVersions(spark: SparkSession, dir: String): Map[String, Int] = {
@@ -215,36 +185,24 @@ object Snapshots {
     val pins = new Path(root, PinsDir)
     if (!f.exists(pins)) Map.empty
     else f.listStatus(pins).toSeq
-      .filterNot(_.getPath.getName.startsWith("."))
-      .map { st =>
-        val buf = new Array[Byte](st.getLen.toInt)
-        val in = f.open(st.getPath)
-        try { in.readFully(0, buf) } finally in.close()
-        val txt = new String(buf, "UTF-8").trim
-        val v = try txt.toInt catch {
-          case _: NumberFormatException => throw new IllegalStateException(
-            s"unparsable pin file ${st.getPath} (content '${txt.take(40)}') — " +
-              "refusing to vacuum/resolve against a corrupt pin registry")
-        }
-        st.getPath.getName -> v
+      .map(_.getPath).filterNot(_.getName.startsWith("."))
+      .flatMap { p =>
+        AtomicFile.read(spark.sparkContext.hadoopConfiguration, p.toString)
+          .map { raw =>
+            val txt = raw.trim
+            val v = try txt.toInt catch {
+              case _: NumberFormatException => throw new IllegalStateException(
+                s"unparsable pin file $p (content '${txt.take(40)}') — " +
+                  "refusing to vacuum/resolve against a corrupt pin registry")
+            }
+            p.getName -> v
+          }
       }.toMap
   }
 
-  private def commitPointer(f: FileSystem, root: Path, v: Int): Unit = {
-    f.mkdirs(root)
-    val tmp = new Path(root, s".$Pointer.tmp")
-    val out = f.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    val ptr = new Path(root, Pointer)
-    // ATOMIC overwrite rename (FileContext supports Rename.OVERWRITE where
-    // FileSystem.rename does not): a delete-then-rename pair would leave a
-    // window with NO pointer on disk, during which a concurrent reader —
-    // promised lock-freedom in the class contract — would see a missing
-    // table, and a crash inside the window would strand it that way.
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      root.toUri, f.getConf)
-    fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private def commitPointer(spark: SparkSession, root: Path, v: Int): Unit =
+    AtomicFile.write(spark.sparkContext.hadoopConfiguration,
+      new Path(root, Pointer).toString, v.toString)
 
   /** `publish` always allocates past every DIRECTORY on disk, not just the
     * committed pointer — so publish-after-rollback never overwrites the

@@ -222,16 +222,15 @@ object PathLifecycle {
   }
 
   /** Write the reference's manifest shape: `Success.csv` (one source path
-    * per line) and, only if any, `Failed.csv`. Driver-side metadata write —
-    * lifecycle ops are maintenance, the listing is already driver-side. */
-  private def writeManifest(fs: FileSystem, dir: String,
+    * per line) and, only if any, `Failed.csv`, each committed whole by
+    * [[AtomicFile.write]]. Driver-side metadata write — lifecycle ops are
+    * maintenance, the listing is already driver-side. */
+  private def writeManifest(spark: SparkSession, dir: String,
                             ok: Seq[String], failed: Seq[String]): Unit = {
-    def put(name: String, lines: Seq[String]): Unit = {
-      val out = fs.create(new Path(dir, name), true)
-      val payload = if (lines.isEmpty) "" else lines.mkString("", "\n", "\n")
-      try out.write(payload.getBytes("UTF-8"))
-      finally out.close()
-    }
+    def put(name: String, lines: Seq[String]): Unit =
+      AtomicFile.write(spark.sparkContext.hadoopConfiguration,
+        new Path(dir, name).toString,
+        if (lines.isEmpty) "" else lines.mkString("", "\n", "\n"))
     put("Success.csv", ok)
     if (failed.nonEmpty) put("Failed.csv", failed)
   }
@@ -279,7 +278,7 @@ object PathLifecycle {
       }
     }
     val failures = failed.result()
-    manifestFilePath.foreach(writeManifest(fs, _, ok.result(), failures))
+    manifestFilePath.foreach(writeManifest(spark, _, ok.result(), failures))
     require(failures.isEmpty, s"transition failed for ${failures.size} files" +
       manifestFilePath.fold("")(m => s" (see $m/Failed.csv)"))
     LifecycleResult(moved, retained)
@@ -344,7 +343,8 @@ object PathLifecycle {
     graft.sources.Pq.read(spark, dir).repartition(nFiles.toInt)
       .write.mode("overwrite").parquet(tmp.toString)
     fs.delete(p, true)
-    fs.rename(tmp, p)
+    require(fs.rename(tmp, p),
+      s"could not move the compacted files into $dir: they remain in $tmp")
     val files = fs.listFiles(p, true)
     var n = 0L
     while (files.hasNext) { if (files.next().getPath.getName.endsWith(".parquet")) n += 1 }
@@ -423,7 +423,7 @@ object PathLifecycle {
         deleted += 1
       }
     }
-    manifestFilePath.foreach(writeManifest(fs, _, ok.result(), Nil))
+    manifestFilePath.foreach(writeManifest(spark, _, ok.result(), Nil))
     deleted
   }
 }

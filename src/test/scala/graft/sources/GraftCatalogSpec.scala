@@ -58,6 +58,21 @@ class GraftCatalogSpec extends SparkSpec {
     cat.dropTable("graft_db", "orphan")
   }
 
+  test("Overwrite save replaces an orphaned location holding a dead write's _temporary dir") {
+    // a save that died mid-write (its tasks still writing when the job
+    // aborted) leaves the committer's `_temporary` tree behind: that is
+    // Spark table output too, and must not block every later save
+    cat.createDatabase("graft_db")
+    val loc = spark.sessionState.catalog.defaultTablePath(
+      org.apache.spark.sql.catalyst.TableIdentifier("dead_write", Some("graft_db")))
+    val attempt = java.nio.file.Paths.get(loc).resolve("_temporary/0/_temporary/attempt_0")
+    java.nio.file.Files.createDirectories(attempt)
+    java.nio.file.Files.writeString(attempt.resolve("part-00000-x.snappy.parquet"), "junk")
+    cat.saveTable("graft_db", "dead_write", Seq((1, "a")).toDF("id", "v"))
+    assert(cat.table("graft_db", "dead_write").as[(Int, String)].collect().toSeq == Seq((1, "a")))
+    cat.dropTable("graft_db", "dead_write")
+  }
+
   test("Overwrite save REFUSES to clear foreign (non-table) content at the default location") {
     // a shared/persistent warehouse can hold another process's live data
     // at the colliding default path — deleting it silently would be data

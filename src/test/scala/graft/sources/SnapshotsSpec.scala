@@ -72,6 +72,19 @@ class SnapshotsSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Snapshots.pin(spark, dir, 4, "bad/name") }
   }
 
+  test("one meta publish writes one parquet file") {
+    // the local batch/stat/extra relations union into defaultParallelism
+    // slices: without the coalesce, a 40-row meta version wrote ~35
+    // near-empty files that every later meta read listed and opened
+    val root = java.nio.file.Files.createTempDirectory("graft_meta").toString
+    val v = VersionedPool.publishMeta(spark, root, Seq("b00001"),
+      Seq("sketch_k" -> 64.0), None, "doc_id", org.apache.spark.sql.types.LongType,
+      Some((1 to 40).map(i => ("grain", s"k$i", i.toDouble)).toDF("kind", "key", "num")))
+    val files = new java.io.File(f"$root/meta/v=$v%05d").list()
+      .filter(_.endsWith(".parquet"))
+    assert(files.length == 1, files.toSeq)
+  }
+
   test("crash before commit leaves the previous version live") {
     val dir = freshDir()
     Snapshots.publish(spark, dir, Seq(1, 2).toDF("k"))

@@ -186,6 +186,28 @@ class SourcesSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 10000)
   }
 
+  test("compactParquet names the tmp dir holding the compacted rows when its swap rename fails") {
+    FaultFs.install(spark.sparkContext.hadoopConfiguration)
+    val root = java.nio.file.Files.createTempDirectory("compact_fail").toString
+    def table(name: String): String = {
+      spark.range(0, 1000).repartition(4).write.parquet(s"$root/$name")
+      FaultFs.path(s"$root/$name")
+    }
+    // the swap rename is the op's last create-or-rename event
+    val counted = table("counted")
+    val n = FaultFs.count(root)(PathLifecycle.compactParquet(spark, counted))
+    val dir = table("t")
+    val thrown = FaultFs.failing(root, n, quiet = true)(
+      PathLifecycle.compactParquet(spark, dir))
+    val tmp = new org.apache.hadoop.fs.Path(dir + "__compact_tmp").toString
+    thrown match {
+      case Some(e: IllegalArgumentException) =>
+        assert(e.getMessage.contains(s"they remain in $tmp"), e.getMessage)
+      case other => fail(s"expected the failed rename to be reported, got $other")
+    }
+    assert(spark.read.parquet(tmp).count() == 1000)
+  }
+
   test("purgePath deletes files recursively and reports count") {
     val out = java.nio.file.Files.createTempDirectory("purge")
     java.nio.file.Files.writeString(out.resolve("a.txt"), "x")
