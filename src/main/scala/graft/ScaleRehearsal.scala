@@ -45,6 +45,20 @@ object ScaleRehearsal {
     System.gc()
   }
 
+  /** `details` with its BM25 serve regimes checked: no driver-local
+    * serve and exactly `distributed` distributed ones — these scenarios
+    * measure the distributed plan, whatever the local regime's cap. */
+  private def servedDistributed(distributed: Long)(
+      details: => (Boolean, String)): (Boolean, String) = {
+    val c0 = graft.curate.Bm25.serveCounters
+    val (ok, info) = details
+    val c1 = graft.curate.Bm25.serveCounters
+    val (l, d) = (c1.localServes - c0.localServes,
+      c1.distributedServes - c0.distributedServes)
+    (ok && l == 0 && d == distributed,
+      s"$info bm25_serves local=$l distributed=$d (expect 0/$distributed)")
+  }
+
   /** 420 clusters × 52 near-identical docs (+30k unique): the LSH pair
     * graph alone exceeds 2^20 directed edges, so duplicateClusters takes
     * the distributed min-label path with NO threshold override. */
@@ -302,7 +316,7 @@ object ScaleRehearsal {
     })
 
     if (enabled("bm25")) scenario("bm25-1m-docs",
-        "inverted index + broadcast queries", {
+        "inverted index + broadcast queries", servedDistributed(0) {
       // 1M docs × 20 globally-UNIQUE words (word = doc*20+slot), so every
       // term has df=1 and each query's ONLY candidate is its source doc —
       // the expected result set is provable, not probabilistic: 100
@@ -325,7 +339,7 @@ object ScaleRehearsal {
     })
 
     if (enabled("bm25inc")) scenario("bm25-inc-append",
-        "stored-index append is batch-sized, not corpus-sized", {
+        "stored-index append is batch-sized, not corpus-sized", servedDistributed(1) {
       // 1M-doc base (the bm25-1m construction: globally-unique words, so
       // every expected hit is provable) + a 10k-doc APPEND batch with a
       // disjoint word space. The scale contract is self-checking: the
@@ -365,7 +379,8 @@ object ScaleRehearsal {
     })
 
     if (enabled("bm25del")) scenario("bm25-inc-delete",
-        "tombstone delete is ids-sized; serving rebuild-equal on the reduced corpus", {
+        "tombstone delete is ids-sized; serving rebuild-equal on the reduced corpus",
+        servedDistributed(2) {
       // the bm25-inc construction (1M docs, globally-unique words) with a
       // 10k-doc takedown (doc_id % 100 = 7). Self-checking: live queries
       // (% 20000 = 0, never ≡ 7 mod 100) must stay self-top1; queries
@@ -422,7 +437,8 @@ object ScaleRehearsal {
     })
 
     if (enabled("pipeline")) scenario("pipeline-kill-restart",
-        "ledger-committed pipeline: kill mid-append, restart skips, repairs, serves rebuild-equal", {
+        "ledger-committed pipeline: kill mid-append, restart skips, repairs, serves rebuild-equal",
+        servedDistributed(1) {
       // The q182 choreography at 1M docs (the bm25-1m provable
       // construction): ingest → base build (2/3 slice) → append (1/3
       // slice), with the append KILLED in appendIncIndex's documented

@@ -32,6 +32,31 @@ import graft.functions.{TextFunctions => T}
   *    snapshot versions and shares the append, removal and derive cores
   *    below; the two tiers differ only in where they write and how they
   *    commit ([[swapWrite]] here, `VersionedPool.publishMeta` there).
+  *
+  * Serving a stored index has two regimes, chosen per request and
+  * returning the same rows:
+  *  - driver-local ([[Bm25Local]]): when the query side is a local
+  *    relation, every postings/dfs/tombstones frame is a parquet or local
+  *    relation, and the index files' visible bytes are under
+  *    `Bm25Local.MaxIndexBytes` (16 MB, from a measured crossover), the
+  *    request scores on the driver with zero Spark jobs. Each index file
+  *    is decoded once into a term-grouped columnar segment and held in one
+  *    bounded store keyed by file identity (path, length, mtime), so an
+  *    unchanged index is never re-read: an append loads only its new
+  *    files, a delete only its tombstone file and the new dfs generation;
+  *    only the first request and a compaction pay a full load;
+  *  - distributed: everything else — big indexes, distributed query
+  *    sides — runs the broadcast-join plan below, unchanged.
+  * Exactness contract between them: the local regime evaluates the same
+  * query-term projection, the same Okapi expression in the same
+  * association order (`StrictMath.log`, as Spark's `Log`), the same
+  * tombstone anti-join, Spark's `round` quantization and the same
+  * (score desc, doc_id asc) ranking; only the per-(query, doc) summation
+  * order is free, as it is between two partitionings of the distributed
+  * plan. `Bm25ServePropertySpec` pins local ≡ distributed ≡ one-shot
+  * [[topK]] over random maintenance sequences on both tiers. Every
+  * regime decision is logged with its inputs and counted
+  * ([[serveCounters]]).
   */
 object Bm25 {
 
@@ -191,7 +216,16 @@ object Bm25 {
     * and [[compactIncIndex]] eventually folds tombstones back into
     * storage. Consistency model: (postings, tombstones) is the source of
     * truth; dfs/stats are DERIVED and [[repairIncIndex]] recomputes them
-    * after any crash mid-maintenance. */
+    * after any crash mid-maintenance.
+    *
+    * SERVING: [[topKAgainstIncIndex]] / [[scoresAgainstIncIndex]] serve a
+    * small index (files under `Bm25Local.MaxIndexBytes`) against a local
+    * query batch on the driver, from decoded segments resident across
+    * requests and keyed by the identity of each file in these frames'
+    * frozen listings, so a request reads exactly the files its loaded
+    * index names; larger indexes or distributed query sides take the
+    * distributed plan. Both regimes return identical rows (see
+    * [[Bm25]]). */
   final case class IncIndex(postings: DataFrame, dfs: DataFrame,
                             nDocs: Double, totalDl: Double,
                             tombstones: Option[DataFrame] = None) {
@@ -465,17 +499,27 @@ object Bm25 {
   }
 
   /** Raw BM25 scores against a stored index for every (query, doc) pair
-    * sharing at least one term: (qid, doc_id, score). df joins onto the
-    * query-term side (small), which then broadcasts onto the postings —
-    * stored postings never shuffle. Tombstoned docs drop via an anti-join
-    * on the CANDIDATE-sized frame (after the query-term join — the full
-    * postings never pay for deletes), and since df/nDocs/avgdl were
-    * decremented at delete time, the surviving scores are identical
-    * doubles to a rebuild over the reduced corpus (same inputs, same
-    * expression tree), so quantized rankings agree — the q159 gate. */
+    * sharing at least one term: (qid, doc_id, score). A small index and
+    * a local query side are served on the driver ([[Bm25Local]], zero
+    * Spark jobs, same rows); otherwise the distributed plan below. */
   def scoresAgainstIncIndex(index: IncIndex, queries: DataFrame,
                             queryId: String, queryText: String,
-                            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                            k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    Bm25Local.serve(index, queries, queryId, queryText, k1, b, None)
+      .getOrElse(scoresDistributed(index, queries, queryId, queryText, k1, b))
+
+  /** The distributed plan of [[scoresAgainstIncIndex]]: df joins onto
+    * the query-term side (small), which then broadcasts onto the
+    * postings — stored postings never shuffle. Tombstoned docs drop via
+    * an anti-join on the CANDIDATE-sized frame (after the query-term
+    * join — the full postings never pay for deletes), and since
+    * df/nDocs/avgdl were decremented at delete time, the surviving
+    * scores are identical doubles to a rebuild over the reduced corpus
+    * (same inputs, same expression tree), so quantized rankings agree —
+    * the q159 gate. */
+  private[curate] def scoresDistributed(index: IncIndex, queries: DataFrame,
+                                        queryId: String, queryText: String,
+                                        k1: Double, b: Double): DataFrame = {
     val qterms = queryTerms(queries, queryId, queryText).join(index.dfs, Seq("term"))
     val cand = index.postings.join(broadcast(qterms), Seq("term"))
     scoreSums(index.tombstones.foldLeft(cand)(
@@ -483,11 +527,26 @@ object Bm25 {
       index.nDocs, index.avgdl, k1, b)
   }
 
+  /** Top `k` docs per query against a stored index, ranked as [[topK]]
+    * ranks: (qid, rank, doc_id, score). Driver-local for a small index
+    * and a local query side ([[Bm25Local]]), distributed otherwise. */
   def topKAgainstIncIndex(index: IncIndex, queries: DataFrame,
                           queryId: String, queryText: String,
                           k: Int, k1: Double = 1.2, b: Double = 0.75,
                           scoreDecimals: Int = 4): DataFrame =
+    Bm25Local.serve(index, queries, queryId, queryText, k1, b, Some((k, scoreDecimals)))
+      .getOrElse(topKDistributed(index, queries, queryId, queryText, k, k1, b, scoreDecimals))
+
+  /** The distributed plan of [[topKAgainstIncIndex]]. */
+  private[curate] def topKDistributed(index: IncIndex, queries: DataFrame,
+                                      queryId: String, queryText: String,
+                                      k: Int, k1: Double = 1.2, b: Double = 0.75,
+                                      scoreDecimals: Int = 4): DataFrame =
     topKFromScores(
-      scoresAgainstIncIndex(index, queries, queryId, queryText, k1, b),
+      scoresDistributed(index, queries, queryId, queryText, k1, b),
       k, scoreDecimals)
+
+  /** Serve-regime telemetry: local and distributed serves, segment
+    * loads and reuses, resident bytes ([[Bm25Local]]). */
+  private[graft] def serveCounters: Bm25Local.Counters = Bm25Local.counters
 }

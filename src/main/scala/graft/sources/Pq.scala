@@ -136,7 +136,6 @@ object Pq {
   def readLocal(spark: SparkSession, maxBytes: Long,
                 paths: String*): Option[DataFrame] =
     try {
-      import org.apache.spark.sql.types._
       val conf = spark.sparkContext.hadoopConfiguration
       val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
       var total = 0L
@@ -155,60 +154,120 @@ object Pq {
       }
       if (files.isEmpty || total > maxBytes) return None
       val schema = footerSchema(spark, files.head).getOrElse(return None)
-      def primOk(dt: DataType): Boolean = dt match {
-        case StringType | DoubleType | LongType | IntegerType |
-             BooleanType | FloatType => true
-        case _ => false
-      }
-      val supported = schema.fields.forall(f => f.dataType match {
-        case ArrayType(et, _) => primOk(et)
-        case dt => primOk(dt)
-      })
-      if (!supported) return None
+      if (!decodable(schema)) return None
       val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      files.foreach { file =>
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), file)
-          .withConf(conf).build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            // a file written from a projected frame could order fields
-            // differently; resolve by NAME against this file's schema
-            def prim(eg: org.apache.parquet.example.data.Group, i: Int,
-                     dt: DataType): Any = dt match {
-              case StringType => eg.getString(i, 0)
-              case DoubleType => eg.getDouble(i, 0)
-              case LongType => eg.getLong(i, 0)
-              case IntegerType => eg.getInteger(i, 0)
-              case BooleanType => eg.getBoolean(i, 0)
-              case FloatType => eg.getFloat(i, 0)
-              case _ => return None
-            }
-            val vals = schema.fields.map { f =>
-              val i = g.getType.getFieldIndex(f.name)
-              if (g.getFieldRepetitionCount(i) == 0) null
-              else f.dataType match {
-                case ArrayType(et, _) =>
-                  // Spark's 3-level LIST shape: field -> repeated "list"
-                  // group -> "element"
-                  val lg = g.getGroup(i, 0)
-                  val n = lg.getFieldRepetitionCount(0)
-                  (0 until n).map { j =>
-                    val eg = lg.getGroup(0, j)
-                    if (eg.getFieldRepetitionCount(0) == 0) null
-                    else prim(eg, 0, et)
-                  }
-                case dt => prim(g, i, dt)
-              }
-            }
-            rows.add(org.apache.spark.sql.Row(vals: _*))
-            g = reader.read()
-          }
-        } finally reader.close()
-      }
+      files.foreach(decodeLocal(conf, _, schema)(
+        vals => rows.add(org.apache.spark.sql.Row(vals.toIndexedSeq: _*))))
       Some(spark.createDataFrame(rows, schema))
     } catch { case _: Throwable => None }
+
+  /** Whether [[decodeLocal]] reads every field of `schema`: flat
+    * primitives and arrays of them. */
+  private def decodable(schema: StructType): Boolean = {
+    import org.apache.spark.sql.types._
+    def primOk(dt: DataType): Boolean = dt match {
+      case StringType | DoubleType | LongType | IntegerType |
+           BooleanType | FloatType => true
+      case _ => false
+    }
+    schema.fields.forall(f => f.dataType match {
+      case ArrayType(et, _) => primOk(et)
+      case dt => primOk(dt)
+    })
+  }
+
+  /** The one driver-side parquet decoder — [[readLocal]] and the BM25
+    * resident segments ([[graft.curate.Bm25Local]]) both read through
+    * it: `emit` receives every record of `file` as the values of
+    * `schema`'s fields (a [[decodable]] schema), null where a value is
+    * absent. Fields resolve by NAME against the file's own schema: a
+    * file written from a projected frame can order them differently.
+    * Each row group decodes column by column straight off parquet's
+    * column readers (no record assembly); arrays are Spark's 3-level
+    * LIST shape. No Spark job; the array passed to `emit` is fresh per
+    * record. */
+  private[graft] def decodeLocal(conf: org.apache.hadoop.conf.Configuration,
+                                 file: org.apache.hadoop.fs.Path,
+                                 schema: StructType)(emit: Array[Any] => Unit): Unit = {
+    import org.apache.spark.sql.types._
+    import org.apache.parquet.column.ColumnReader
+    def value(cr: ColumnReader, dt: DataType): Any = dt match {
+      case StringType => cr.getBinary.toStringUsingUTF8
+      case DoubleType => cr.getDouble
+      case LongType => cr.getLong
+      case IntegerType => cr.getInteger
+      case BooleanType => cr.getBoolean
+      case FloatType => cr.getFloat
+      case other => throw new IllegalArgumentException(s"not decodable: $other")
+    }
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try {
+      val meta = reader.getFooter.getFileMetaData
+      val fileSchema = meta.getSchema
+      val root = new org.apache.parquet.example.data.simple.convert
+        .GroupRecordConverter(fileSchema).getRootConverter
+      val fields = schema.fields
+      val descs = fields.map(f => fileSchema.getColumnDescription(f.dataType match {
+        case _: ArrayType => Array(f.name, "list", "element")
+        case _ => Array(f.name)
+      }))
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val n = pages.getRowCount.toInt
+        val store = new org.apache.parquet.column.impl.ColumnReadStoreImpl(
+          pages, root, fileSchema, meta.getCreatedBy)
+        val cols = fields.indices.map { c =>
+          val cr = store.getColumnReader(descs(c))
+          val maxDef = descs(c).getMaxDefinitionLevel
+          val out = new Array[Any](n)
+          fields(c).dataType match {
+            case ArrayType(et, _) =>
+              // definition levels: below the list's own → null list; below
+              // its repeated group's → empty list; maxDef → a value
+              val listDef = fileSchema.getMaxDefinitionLevel(fields(c).name)
+              val entryDef = fileSchema.getMaxDefinitionLevel(fields(c).name, "list")
+              val total = pages.getPageReader(descs(c)).getTotalValueCount
+              var read = 0L
+              var r = 0
+              while (r < n) {
+                val d = cr.getCurrentDefinitionLevel
+                if (d < listDef) { out(r) = null; cr.consume(); read += 1 }
+                else if (d < entryDef) { out(r) = Vector.empty; cr.consume(); read += 1 }
+                else {
+                  val buf = Vector.newBuilder[Any]
+                  var more = true
+                  while (more) {
+                    buf += (if (cr.getCurrentDefinitionLevel == maxDef) value(cr, et) else null)
+                    cr.consume(); read += 1
+                    more = read < total && cr.getCurrentRepetitionLevel > 0
+                  }
+                  out(r) = buf.result()
+                }
+                r += 1
+              }
+            case dt =>
+              var r = 0
+              while (r < n) {
+                if (cr.getCurrentDefinitionLevel == maxDef) out(r) = value(cr, dt)
+                cr.consume()
+                r += 1
+              }
+          }
+          out
+        }
+        var r = 0
+        while (r < n) {
+          val vals = new Array[Any](cols.length)
+          var c = 0
+          while (c < cols.length) { vals(c) = cols(c)(r); c += 1 }
+          emit(vals)
+          r += 1
+        }
+        pages = reader.readNextRowGroup()
+      }
+    } finally reader.close()
+  }
 
   /** [[readLocal]] with the metadata-table default cap, falling back to
     * the memoized cluster read. */

@@ -20,12 +20,21 @@ class EntrySpec extends SparkSpec {
 
   test("every declared query executes on sf0.001") {
     // `sbt test` alone should catch a query that crashes at runtime —
-    // without this, breakage only surfaces in the out-of-band Verify run
+    // without this, breakage only surfaces in the out-of-band Verify run.
+    // Leak gate: a query leaves no persisted RDD and no tracked
+    // checkpoint behind once its result is consumed and the SQL cache
+    // cleared — measured against the state before THAT query, since the
+    // suites share one SparkContext
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val rdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val live = graft.plan.Checkpoints.liveCount
       val r = try { fn(spark, "/root/testdata/sf0.001").count(); None }
               catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
       spark.catalog.clearCache()
-      r
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- rdds
+      val grew = graft.plan.Checkpoints.liveCount - live
+      r.toSeq ++ (if (leaked.isEmpty && grew <= 0) None else Some(
+        s"$name: leaked ${leaked.size} persisted RDDs, $grew more live checkpoints"))
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }

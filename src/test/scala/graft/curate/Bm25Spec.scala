@@ -1,5 +1,7 @@
 package graft.curate
 
+import org.apache.spark.sql.functions.lit
+
 import graft.SparkSpec
 
 /** Pins [[Bm25]] against the Okapi formula computed by hand, the
@@ -129,7 +131,9 @@ class Bm25Spec extends SparkSpec {
       (2L to 3L).foreach { i =>
         Bm25.appendIncIndex(spark, tmp, docs.filter($"doc_id" === i), "doc_id", "text")
       }
-      val served = Bm25.topKAgainstIncIndex(Bm25.loadIncIndex(spark, tmp),
+      // the distributed regime's plan (a local query side against this
+      // small index is otherwise served driver-side, see below)
+      val served = Bm25.topKDistributed(Bm25.loadIncIndex(spark, tmp),
         queries, "qid", "qtext", k = 2)
       val plan = served.queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin"),
@@ -155,7 +159,7 @@ class Bm25Spec extends SparkSpec {
       Bm25.buildAndSaveIncIndex(spark, all, "doc_id", "text", tmp)
       Bm25.deleteFromIncIndex(spark, tmp,
         Seq(2L, 5L, 99L).toDF("doc_id"), "doc_id") // 99 absent: no-op
-      val servedDf = Bm25.topKAgainstIncIndex(Bm25.loadIncIndex(spark, tmp),
+      val servedDf = Bm25.topKDistributed(Bm25.loadIncIndex(spark, tmp),
         queries, "qid", "qtext", k = 4)
       // serve-time plan: tombstones drop via an equi-key LeftAnti on the
       // candidate-sized frame (hash-joined, never a nested loop), and the
@@ -171,6 +175,8 @@ class Bm25Spec extends SparkSpec {
           "doc_id", "text", queries, "qid", "qtext", k = 4)
         .as[(Long, Int, Long, Double)].collect().toSet
       assert(served == rebuilt, s"served=$served rebuilt=$rebuilt")
+      assert(Bm25.topKAgainstIncIndex(Bm25.loadIncIndex(spark, tmp), queries,
+          "qid", "qtext", k = 4).as[(Long, Int, Long, Double)].collect().toSet == rebuilt)
       // the format's contract: postings were never rewritten
       assert(spark.read.parquet(Bm25.resolveTable(spark, tmp, "postings"))
         .select("doc_id").distinct().count() == 6)
@@ -365,5 +371,97 @@ class Bm25Spec extends SparkSpec {
     val plan = Bm25.topK(docs, "doc_id", "text", queries, "qid", "qtext", k = 3)
       .queryExecution.executedPlan.toString
     assert(plan.contains("TopKPerGroup"), s"heap node missing:\n$plan")
+  }
+
+  test("a small index serves a local query batch on the driver: zero Spark jobs, resident segments, the distributed rows") {
+    val docs = Seq(
+      (1L, "apple banana apple"),
+      (2L, "apple cherry"),
+      (3L, "durian durian banana durian"),
+      (4L, "cherry apple banana"),
+      (5L, "banana banana")).toDF("doc_id", "text")
+    val queries = Seq((100L, "apple banana"), (101L, "cherry durian"), (101L, "fig"))
+      .toDF("qid", "qtext")
+    val tmp = java.nio.file.Files.createTempDirectory("bm25_local").toString
+    // jobs counted by a job group set around the serves only
+    val group = s"bm25-local-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    try {
+      Bm25.buildAndSaveIncIndex(spark, docs.filter($"doc_id" <= 3), "doc_id", "text", tmp)
+      Bm25.deleteFromIncIndex(spark, tmp, Seq(2L).toDF("doc_id"), "doc_id")
+      val idx = Bm25.loadIncIndex(spark, tmp)
+      spark.sparkContext.addSparkListener(listener)
+      val c0 = Bm25.serveCounters
+      spark.sparkContext.setJobGroup(group, "local serve")
+      val served = try Bm25.topKAgainstIncIndex(idx, queries, "qid", "qtext", k = 3)
+        finally spark.sparkContext.clearJobGroup()
+      spark.sparkContext.setJobGroup(group, "local serve")
+      val (rows, scores) = try (served.as[(Long, Int, Long, Double)].collect().toSet,
+          Bm25.scoresAgainstIncIndex(idx, queries, "qid", "qtext").collect())
+        finally spark.sparkContext.clearJobGroup()
+      Thread.sleep(1000) // the listener bus delivers events asynchronously
+      assert(jobs.get == 0, s"the default serve of a small index ran ${jobs.get} Spark jobs")
+      val c1 = Bm25.serveCounters
+      assert(c1.localServes == c0.localServes + 2 && c1.distributedServes == c0.distributedServes)
+      // the second serve decoded nothing: every file was resident
+      val dist = Bm25.topKDistributed(idx, queries, "qid", "qtext", k = 3)
+      assert(served.schema == dist.schema)
+      assert(rows == dist.as[(Long, Int, Long, Double)].collect().toSet)
+      val dScores = Bm25.scoresDistributed(idx, queries, "qid", "qtext", 1.2, 0.75)
+      assert(Bm25.scoresAgainstIncIndex(idx, queries, "qid", "qtext").schema == dScores.schema)
+      assert(scores.map(_.toString).toSet == dScores.collect().map(_.toString).toSet)
+      // an append loads only the new postings file and the new dfs
+      Bm25.appendIncIndex(spark, tmp, docs.filter($"doc_id" > 3), "doc_id", "text")
+      val c2 = Bm25.serveCounters
+      val after = Bm25.topKAgainstIncIndex(Bm25.loadIncIndex(spark, tmp), queries,
+        "qid", "qtext", k = 3).as[(Long, Int, Long, Double)].collect().toSet
+      val c3 = Bm25.serveCounters
+      assert(c3.localServes == c2.localServes + 1)
+      assert(c3.segmentReuses - c2.segmentReuses >= 2, s"$c2 -> $c3") // old postings + tombstones
+      assert(after == Bm25.topK(docs.filter($"doc_id" =!= 2L), "doc_id", "text",
+        queries, "qid", "qtext", k = 3).as[(Long, Int, Long, Double)].collect().toSet)
+      graft.plan.Checkpoints.release()
+      // a query side that is not local takes the distributed plan
+      val c4 = Bm25.serveCounters
+      Bm25.topKAgainstIncIndex(Bm25.loadIncIndex(spark, tmp),
+        spark.range(100, 101).select($"id".as("qid"), lit("apple").as("qtext")),
+        "qid", "qtext", k = 3).collect()
+      assert(Bm25.serveCounters.distributedServes == c4.distributedServes + 1)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    }
+  }
+
+  test("concurrent local serves of a cold index share the segment store and agree") {
+    val docs = (1L to 60L).map(i => (i, Seq.tabulate(6)(j => s"w${(i * 7 + j * 3) % 23}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("bm25_conc").toString
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      Bm25.buildAndSaveIncIndex(spark, docs.repartition(4), "doc_id", "text", tmp)
+      val idx = Bm25.loadIncIndex(spark, tmp)
+      val queries = (0 until 8).map(q => (q.toLong, s"w$q w${q + 5}"))
+      val want = Bm25.topKDistributed(idx, queries.toDF("qid", "qtext"), "qid", "qtext", k = 5)
+        .as[(Long, Int, Long, Double)].collect().toSet
+      val c0 = Bm25.serveCounters
+      val tasks = (0 until 16).map { i =>
+        pool.submit(new java.util.concurrent.Callable[Set[(Long, Int, Long, Double)]] {
+          def call(): Set[(Long, Int, Long, Double)] =
+            Bm25.topKAgainstIncIndex(idx, queries.toDF("qid", "qtext"), "qid", "qtext", k = 5)
+              .as[(Long, Int, Long, Double)].collect().toSet
+        })
+      }
+      tasks.foreach(t => assert(t.get() == want))
+      assert(Bm25.serveCounters.localServes == c0.localServes + 16)
+    } finally {
+      pool.shutdown()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    }
   }
 }

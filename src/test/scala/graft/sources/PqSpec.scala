@@ -90,6 +90,24 @@ class PqSpec extends SparkSpec {
     assert(got == Seq((0, Seq(1.0, 2.0)), (1, Seq(3.0, 4.5))))
   }
 
+  test("readLocal decodes null, empty and null-element arrays across row groups as the cluster read does") {
+    val dir = s"${tmp()}/arrays"
+    (0 until 3000).map { i =>
+      (i, i % 4 match {
+        case 0 => null
+        case 1 => Seq.empty[java.lang.Double]
+        case 2 => Seq[java.lang.Double](null, i * 0.5)
+        case _ => Seq[java.lang.Double](i.toDouble, i + 0.25, i + 0.5)
+      }, if (i % 5 == 0) null else s"t$i")
+    }.toDF("cell", "v", "name")
+      .coalesce(1).write.option("parquet.block.size", "4096").parquet(dir)
+    val local = Pq.readLocal(spark, 16L << 20, dir).get
+    val bare = spark.read.parquet(dir)
+    assert(local.schema == bare.schema)
+    assert(local.collect().map(_.toString).sorted.toSeq ==
+      bare.collect().map(_.toString).sorted.toSeq)
+  }
+
   test("readLocal refuses unsupported shapes; readSmall falls back") {
     val dir = s"${tmp()}/nested"
     Seq((1L, (2L, "x"))).toDF("id", "s").write.parquet(dir)
