@@ -1409,7 +1409,7 @@ object ScaleRehearsal {
           specs.filter(_.grainCols == Seq("k1"))
             .forall(s => s.histCols == Seq("v") && s.measures == Seq("m"))
         val t1 = System.nanoTime()
-        SummaryDesigner.buildAndRegister(spark, base, specs, s"$tmp/designed")
+        SummaryDesigner.buildAndRegister(spark, base, Nil, specs, s"$tmp/designed")
         val buildWall = (System.nanoTime() - t1) / 1e9
         val servedOk = Seq(w1(base), w2(base), w3(base)).forall { q =>
           val scans = RollupRewrite.scanRootPaths(q)

@@ -119,11 +119,15 @@ object IvfVersioned {
       (r, ts) => r.join(ts, Seq("nid"), "left_anti"))
     val present = req.join(cur.index.select("nid"), Seq("nid"), "left_semi")
       .localCheckpoint(true) // takedown-sized; two consumers below
-    if (present.limit(1).collect().isEmpty)
-      return VersionedPool.currentVersion(spark, root)
-    publishMeta(spark, root, VersionedPool.manifestOf(spark, root),
-      Some(cur.tombstones.fold(present: DataFrame)(_.unionByName(present))),
-      cur.index.schema("nid").dataType)
+    // released once the publish has written it: left to GC, its blocks
+    // stay persisted for an arbitrary time after the call
+    try {
+      if (present.limit(1).collect().isEmpty)
+        VersionedPool.currentVersion(spark, root)
+      else publishMeta(spark, root, VersionedPool.manifestOf(spark, root),
+        Some(cur.tombstones.fold(present: DataFrame)(_.unionByName(present))),
+        cur.index.schema("nid").dataType)
+    } finally graft.plan.Checkpoints.releaseNow(present, blocking = true)
   }
 
   /** Fold the current version into ONE fresh pool batch with tombstones

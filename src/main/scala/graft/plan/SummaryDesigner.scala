@@ -53,243 +53,118 @@ object SummaryDesigner {
       .digest(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString.take(8)
 
-  /** Design a k-summary lattice for `base` from the current capture log
-    * (see [[RollupRewrite.startWorkloadCapture]]). `sketchCardK = Some(k)`
-    * switches the advisor's cardinality pass to the approx (cube-free)
-    * mode — the 100-TB path. Returns Nil when nothing servable was
-    * captured for this base. */
-  def design(base: DataFrame, k: Int,
+  /** Design a k-summary lattice for `fact ⋈ dims` — plain rollups over
+    * `fact` with no dims, join or star summaries with one or more — from
+    * the current capture log (see
+    * [[RollupRewrite.startWorkloadCapture]]; a one-dim lookup matches
+    * either orientation). Grain cardinalities come from one advisor pass
+    * over the joined frame; `sketchCardK = Some(k)` switches it to the
+    * approx (cube-free) mode — the 100-TB path. Grains are plain columns
+    * from any side, or EXPRESSION grains captured by resolved SQL and
+    * synthesized as `__g` columns over the joined output (r13). Returns
+    * Nil when nothing servable was captured for this side list. */
+  def design(fact: DataFrame,
+             dims: Seq[(DataFrame, Seq[(String, String)])] = Nil, k: Int,
              sketchCardK: Option[Int] = None): Seq[SummarySpec] =
-    RollupRewrite.withCaptureSuspended(designInner(base,
-      (dims, wl) => LatticeAdvisor.advise(base, dims, wl,
-        math.min(k, 1 << dims.size), sketchCardK)))
+    designWith(fact, dims)((frame, cols, wl) => LatticeAdvisor.advise(frame,
+      cols, wl, math.min(k, 1 << cols.size), sketchCardK))
 
-  /** [[design]] under a TOTAL ROW budget instead of a view count — the
-    * HRU resource-bounded mode ([[LatticeAdvisor.adviseUnderBudget]]):
-    * grains are admitted while their summary rows fit the remaining
-    * budget and stop at zero benefit, so the design never commits to
-    * more summary storage than `maxRows` rows across the lattice. */
+  /** [[design]] of plain rollups under a TOTAL ROW budget instead of a
+    * view count — the HRU resource-bounded mode
+    * ([[LatticeAdvisor.adviseUnderBudget]]): grains are admitted while
+    * their summary rows fit the remaining budget and stop at zero
+    * benefit, so the design never commits to more summary storage than
+    * `maxRows` rows across the lattice. */
   def designUnderBudget(base: DataFrame, maxRows: Long,
                         sketchCardK: Option[Int] = None): Seq[SummarySpec] =
-    RollupRewrite.withCaptureSuspended(designInner(base,
-      (dims, wl) => LatticeAdvisor.adviseUnderBudget(base, dims, wl,
-        maxRows, sketchCardK)))
+    designWith(base, Nil)((frame, cols, wl) =>
+      LatticeAdvisor.adviseUnderBudget(frame, cols, wl, maxRows, sketchCardK))
 
-  private def designInner(base: DataFrame,
-      adviseFn: (Seq[(String, Column)], Seq[Set[String]]) =>
-        Seq[LatticeAdvisor.Advice]): Seq[SummarySpec] = {
-    val paths = RollupRewrite.scanRootPaths(base)
-    val all = RollupRewrite.capturedEntries(paths)
-    // one sketch k per design: conflicting-k sketch entries are skipped
-    val ks = all.filter(_.servable).flatMap(_.sketchKs).distinct
-    val sketchK = ks.headOption.getOrElse(64)
-    val entries = all.filter(e => e.servable &&
-      (e.sketchKs.isEmpty || e.sketchKs == Set(sketchK)))
-    if (entries.isEmpty) return Nil
-    val reqOf: RollupRewrite.CaptureEntry => Set[String] =
-      e => e.grain ++ e.filterCols ++ e.distinctCols
-    val plainCols = base.columns.toSet
-    val tokens = entries.flatMap(reqOf).distinct.sorted
-    val dims: Seq[(String, Column)] = tokens.map { t =>
-      dimName(t, plainCols) -> (if (plainCols.contains(t)) col(t) else expr(t))
+  /** The one design core: requirement sets of the servable captured
+    * entries (one sketch k per design — conflicting-k sketch entries are
+    * skipped), advised over `Rollup.starJoin(fact, dims)`, each advised
+    * grain carrying the union of the needs of the entries it serves.
+    * Join designs leave global (empty-grain) entries out of the workload
+    * while plain designs keep them; their requirement tokens still
+    * become advisor dims either way. */
+  private def designWith(fact: DataFrame,
+      dims: Seq[(DataFrame, Seq[(String, String)])])(
+      adviseFn: (DataFrame, Seq[(String, Column)], Seq[Set[String]]) =>
+        Seq[LatticeAdvisor.Advice]): Seq[SummarySpec] =
+    RollupRewrite.withCaptureSuspended {
+      val all = RollupRewrite.capturedEntries(RollupRewrite.scanRootPaths(fact),
+        dims.map { case (d, keys) => (RollupRewrite.scanRootPaths(d), keys.toSet) }.toSet)
+      val sketchK = all.filter(_.servable).flatMap(_.sketchKs).headOption.getOrElse(64)
+      val entries = all.filter(e => e.servable &&
+        (e.sketchKs.isEmpty || e.sketchKs == Set(sketchK)))
+      val designable = if (dims.isEmpty) entries else entries.filter(_.grain.nonEmpty)
+      if (designable.isEmpty) Nil
+      else {
+        val reqOf: RollupRewrite.CaptureEntry => Set[String] =
+          e => e.grain ++ e.filterCols ++ e.distinctCols
+        val frame = Rollup.starJoin(fact, dims)
+        val frameCols = frame.columns.toSet
+        val tokens = entries.flatMap(reqOf).distinct.sorted
+        val nameOf = tokens.map(t => t -> dimName(t, frameCols)).toMap
+        val cols: Seq[(String, Column)] = tokens.map(t =>
+          nameOf(t) -> (if (frameCols.contains(t)) col(t) else expr(t)))
+        adviseFn(frame, cols, designable.map(e => reqOf(e).map(nameOf))).flatMap { a =>
+          val served = designable.filter(e => reqOf(e).map(nameOf).subsetOf(a.grain.toSet))
+          if (served.isEmpty) None
+          else Some(SummarySpec(a.grain,
+            a.grain.collect {
+              case n if !frameCols.contains(n) => n -> tokens.find(t => nameOf(t) == n).get
+            }.toMap,
+            served.flatMap(_.measures).distinct.sorted,
+            served.flatMap(_.sketchCols).distinct.sorted,
+            served.flatMap(_.histCols).distinct.sorted,
+            sketchK))
+        }
+      }
     }
-    val nameOf: Map[String, String] =
-      tokens.map(t => t -> dimName(t, plainCols)).toMap
-    val workload = entries.map(e => reqOf(e).map(nameOf))
-    val advice = adviseFn(dims, workload)
-    advice.flatMap { a =>
-      val g = a.grain.toSet
-      val served = entries.filter(e => reqOf(e).map(nameOf).subsetOf(g))
-      if (served.isEmpty) None
-      else Some(SummarySpec(
-        a.grain,
-        a.grain.collect {
-          case n if !plainCols.contains(n) =>
-            n -> tokens.find(t => nameOf(t) == n).get
-        }.toMap,
-        served.flatMap(_.measures).distinct.sorted,
-        served.flatMap(_.sketchCols).distinct.sorted,
-        served.flatMap(_.histCols).distinct.sorted,
-        sketchK))
-    }
-  }
 
-  /** Materialize + register every designed spec under `outDir`
-    * (`design_<i>_<grain digest>` parquet each) — after this, the
-    * captured workload re-serves from the designed lattice with no base
-    * scans. Returns the summary paths in spec order. */
-  def buildAndRegister(spark: SparkSession, base: DataFrame,
+  /** Materialize + register every designed spec over `fact ⋈ dims`
+    * under `outDir` (`design<tag>_<i>_<grain digest>` parquet each, tag
+    * "", "j" or "s" for 0, 1 or N dims) — after this, the captured
+    * workload re-serves from the designed summaries with no base scans
+    * and no serve-time joins. Returns the summary paths in spec order. */
+  def buildAndRegister(spark: SparkSession, fact: DataFrame,
+                       dims: Seq[(DataFrame, Seq[(String, String)])],
                        specs: Seq[SummarySpec], outDir: String): Seq[String] =
-    RollupRewrite.withCaptureSuspended(specs.zipWithIndex.map { case (sp, i) =>
-      val grainExprs = sp.grainCols.map(g =>
-        g -> sp.grainExprSql.get(g).map(expr).getOrElse(col(g)))
+    specs.zipWithIndex.map { case (sp, i) =>
       val digest = java.security.MessageDigest.getInstance("MD5")
         .digest(sp.grainCols.mkString(",")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         .map("%02x".format(_)).mkString.take(8)
-      val out = s"$outDir/design_${i}_$digest"
-      Rollup.materializeExpr(base, grainExprs, sp.measures, sp.distinctCols,
-          sp.sketchK, sp.histCols)
-        .write.mode("overwrite").parquet(out)
-      RollupRewrite.register(base, graft.sources.Pq.read(spark, out), sp.grainCols,
-        sp.measures, sp.distinctCols, sp.sketchK,
-        sp.grainExprSql.map { case (n, sql) => n -> expr(sql) }, sp.histCols)
-      out
-    })
-
-  /** [[design]] for the JOIN shape — the q201 self-tuning loop closed
-    * for aggregate join summaries: captured JOIN-AGGREGATE observations
-    * over `(fact, dim, keys)` ([[RollupRewrite.capturedJoinedEntries]],
-    * either orientation) feed the same HRU advisor, with grain
-    * cardinalities computed over the JOINED frame (one join-sized
-    * advisor pass — approx mode via `sketchCardK` keeps it cube-free),
-    * and each advised grain carries the union of the needs of the
-    * queries it serves. Grains are plain columns from either
-    * side, or EXPRESSION grains captured by resolved SQL and
-    * synthesized as `__g` columns over the join output (r13 — the
-    * q191 machinery at join width). Deterministic
-    * like [[design]]. Returns Nil when nothing servable was captured
-    * for this join. */
-  def designJoined(fact: DataFrame, dim: DataFrame,
-                   keys: Seq[(String, String)], k: Int,
-                   sketchCardK: Option[Int] = None): Seq[SummarySpec] =
-    RollupRewrite.withCaptureSuspended {
-      val fPaths = RollupRewrite.scanRootPaths(fact)
-      val dPaths = RollupRewrite.scanRootPaths(dim)
-      val all = RollupRewrite.capturedJoinedEntries(fPaths, dPaths, keys)
-      val ks = all.filter(_.servable).flatMap(_.sketchKs).distinct
-      val sketchK = ks.headOption.getOrElse(64)
-      val entries = all.filter(e => e.servable &&
-        (e.sketchKs.isEmpty || e.sketchKs == Set(sketchK)))
-      if (entries.isEmpty) Nil
-      else {
-        val reqOf: RollupRewrite.JoinedCaptureEntry => Set[String] =
-          e => e.grain ++ e.filterCols ++ e.distinctCols
-        val joined = Rollup.starJoin(fact, Seq(dim -> keys))
-        val joinedCols = joined.columns.toSet
-        val tokens = entries.flatMap(reqOf).distinct.sorted
-        // expression grain tokens synthesize __g columns over the JOIN
-        // output — the q191/designInner machinery at join width (r13);
-        // filter columns are always plain reference names
-        val designable = entries.filter(_.grain.nonEmpty)
-        if (designable.isEmpty) Nil
-        else {
-          val dims: Seq[(String, Column)] = tokens.map { t =>
-            dimName(t, joinedCols) ->
-              (if (joinedCols.contains(t)) col(t) else expr(t))
-          }
-          val nameOf: Map[String, String] =
-            tokens.map(t => t -> dimName(t, joinedCols)).toMap
-          val workload = designable.map(e => reqOf(e).map(nameOf))
-          val advice = LatticeAdvisor.advise(joined, dims, workload,
-            math.min(k, 1 << dims.size), sketchCardK)
-          advice.flatMap { a =>
-            val g = a.grain.toSet
-            val served = designable.filter(e =>
-              reqOf(e).map(nameOf).subsetOf(g))
-            if (served.isEmpty) None
-            else Some(SummarySpec(a.grain,
-              a.grain.collect {
-                case n if !joinedCols.contains(n) =>
-                  n -> tokens.find(t => nameOf(t) == n).get
-              }.toMap,
-              served.flatMap(_.measures).distinct.sorted,
-              served.flatMap(_.sketchCols).distinct.sorted,
-              served.flatMap(_.histCols).distinct.sorted,
-              sketchK))
-          }
-        }
-      }
+      val tag = Seq("", "j", "s")(math.min(dims.size, 2))
+      build(spark, fact, dims, sp, s"$outDir/design${tag}_${i}_$digest")
     }
 
-  /** Materialize + register every designed JOINED spec under `outDir`
-    * (`designj_<i>_<grain digest>` parquet each) — after this, the
-    * captured join workload re-serves from the designed AJIs with zero
-    * Join nodes. Returns the summary paths in spec order. */
-  def buildAndRegisterJoined(spark: SparkSession, fact: DataFrame,
-                             dim: DataFrame, keys: Seq[(String, String)],
-                             specs: Seq[SummarySpec], outDir: String)
-      : Seq[String] =
-    RollupRewrite.withCaptureSuspended(specs.zipWithIndex.map { case (sp, i) =>
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(sp.grainCols.mkString(",")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString.take(8)
-      val out = s"$outDir/designj_${i}_$digest"
-      val grainExprs = sp.grainCols.map(g =>
-        g -> sp.grainExprSql.get(g).map(expr).getOrElse(col(g)))
-      Rollup.materializeExpr(Rollup.starJoin(fact, Seq(dim -> keys)), grainExprs, sp.measures,
-          sp.distinctCols, sp.sketchK, sp.histCols)
-        .write.mode("overwrite").parquet(out)
-      RollupRewrite.registerJoined(fact, dim, keys, graft.sources.Pq.read(spark, out),
-        sp.grainCols, sp.measures, sp.distinctCols, sp.sketchK, sp.histCols,
-        groupExprOf = sp.grainExprSql.map { case (n, sql) => n -> expr(sql) })
-      out
-    })
-
-  /** [[designJoined]] at STAR width: captured star-join observations
-    * over `(fact, dims)` feed the same HRU advisor with grain
-    * cardinalities computed over the flattened star join. */
-  def designStar(fact: DataFrame,
-                 dims: Seq[(DataFrame, Seq[(String, String)])], k: Int,
-                 sketchCardK: Option[Int] = None): Seq[SummarySpec] =
+  /** The one build: materialize `sp` over `fact ⋈ dims` at `out` and
+    * register it, capture suspended. */
+  private def build(spark: SparkSession, fact: DataFrame,
+                    dims: Seq[(DataFrame, Seq[(String, String)])],
+                    sp: SummarySpec, out: String): String =
     RollupRewrite.withCaptureSuspended {
-      val fPaths = RollupRewrite.scanRootPaths(fact)
-      val dimSides = dims.map { case (d, keys) =>
-        (RollupRewrite.scanRootPaths(d), keys.toSet) }.toSet
-      val all = RollupRewrite.capturedStarEntries(fPaths, dimSides)
-      val ks = all.filter(_.servable).flatMap(_.sketchKs).distinct
-      val sketchK = ks.headOption.getOrElse(64)
-      val entries = all.filter(e => e.servable &&
-        (e.sketchKs.isEmpty || e.sketchKs == Set(sketchK)))
-      if (entries.isEmpty) Nil
-      else {
-        val reqOf: RollupRewrite.StarCaptureEntry => Set[String] =
-          e => e.grain ++ e.filterCols ++ e.distinctCols
-        val joined = Rollup.starJoin(fact, dims)
-        val joinedCols = joined.columns.toSet
-        val tokens = entries.flatMap(reqOf).distinct.sorted
-        // expression grain tokens synthesize __g columns (r13)
-        val designable = entries.filter(_.grain.nonEmpty)
-        if (designable.isEmpty) Nil
-        else {
-          val dcols: Seq[(String, Column)] = tokens.map { t =>
-            dimName(t, joinedCols) ->
-              (if (joinedCols.contains(t)) col(t) else expr(t))
-          }
-          val nameOf: Map[String, String] =
-            tokens.map(t => t -> dimName(t, joinedCols)).toMap
-          val workload = designable.map(e => reqOf(e).map(nameOf))
-          val advice = LatticeAdvisor.advise(joined, dcols, workload,
-            math.min(k, 1 << dcols.size), sketchCardK)
-          advice.flatMap { a =>
-            val g = a.grain.toSet
-            val served = designable.filter(e =>
-              reqOf(e).map(nameOf).subsetOf(g))
-            if (served.isEmpty) None
-            else Some(SummarySpec(a.grain,
-              a.grain.collect {
-                case n if !joinedCols.contains(n) =>
-                  n -> tokens.find(t => nameOf(t) == n).get
-              }.toMap,
-              served.flatMap(_.measures).distinct.sorted,
-              served.flatMap(_.sketchCols).distinct.sorted,
-              served.flatMap(_.histCols).distinct.sorted,
-              sketchK))
-          }
-        }
-      }
+      Rollup.materializeExpr(Rollup.starJoin(fact, dims),
+          sp.grainCols.map(g => g -> sp.grainExprSql.get(g).map(expr).getOrElse(col(g))),
+          sp.measures, sp.distinctCols, sp.sketchK, sp.histCols)
+        .write.mode("overwrite").parquet(out)
+      RollupRewrite.registerSides(fact, dims, graft.sources.Pq.read(spark, out),
+        sp.grainCols, sp.measures, sp.distinctCols, sp.sketchK, sp.histCols,
+        sp.grainExprSql.map { case (n, sql) => n -> expr(sql) })
+      out
     }
 
   /** CROSS-TIER design under ONE row budget (VERDICT r12 #2): where
-    * [[design]] / [[designJoined]] / [[designStar]] each optimize their
-    * own tier — a mixed workload over SHARED bases gets three
-    * independent designs that double-spend the budget — this runs ONE
+    * [[design]] optimizes one side list at a time — a mixed workload
+    * over SHARED bases gets independent plain, join and star designs
+    * that double-spend the budget — this runs ONE
     * HRU greedy over the UNION of candidate structures across tiers,
     * with the shared-benefit dedupe the per-tier split cannot see: a
     * join-aggregate is servable EITHER by an AJI (one summary, cost =
-    * its rows) OR by a PAIR of plain summaries through two-summary
-    * navigation (q197 — fact grain ⊇ fact-side requirements ∪ join
+    * its rows) OR by a PAIR of plain summaries through navigation over
+    * one dim (q197 — fact grain ⊇ fact-side requirements ∪ join
     * keys, dim grain ⊇ dim-side requirements ∪ keys; cost = the two
     * summaries' rows), and the plain summaries that serve the join
     * ALSO serve the plain queries — so their benefit absorbs both and
@@ -351,13 +226,13 @@ object SummaryDesigner {
     case class PlainQ(base: Int, req: Set[String], e: RollupRewrite.CaptureEntry)
     case class JoinQ(join: Int, req: Set[String], factReq: Set[String],
                      dimReq: Set[String], pairable: Boolean,
-                     e: RollupRewrite.JoinedCaptureEntry)
+                     e: RollupRewrite.CaptureEntry)
     // sideReqs: per-side (base index, side requirements ∪ that side's
     // key columns) — center first — when the query is NAV-TUPLABLE
     // (no distinct/sketch/hist needs, every side a designable base)
     case class StarQ(star: Int, req: Set[String],
                      sideReqs: Option[Seq[(Int, Set[String])]],
-                     e: RollupRewrite.StarCaptureEntry)
+                     e: RollupRewrite.CaptureEntry)
     val plainQs: Seq[PlainQ] = bases.zipWithIndex.flatMap { case (b, i) =>
       val cols = b.columns.toSet
       // grain tokens may be EXPRESSION SQL (r13) — their references are
@@ -395,8 +270,8 @@ object SummaryDesigner {
     val joinQs: Seq[JoinQ] = joins.zipWithIndex.flatMap { case ((f, d, keys), j) =>
       val fCols = f.columns.toSet
       val dCols = d.columns.toSet
-      RollupRewrite.capturedJoinedEntries(
-          RollupRewrite.scanRootPaths(f), RollupRewrite.scanRootPaths(d), keys)
+      RollupRewrite.capturedEntries(RollupRewrite.scanRootPaths(f),
+          Set((RollupRewrite.scanRootPaths(d), keys.toSet)))
         .filter(_.servable).flatMap { e =>
           val req = e.grain ++ e.filterCols ++ e.distinctCols
           if (!(e.filterCols ++ e.distinctCols).subsetOf(fCols ++ dCols))
@@ -419,7 +294,7 @@ object SummaryDesigner {
       val centerIdx = baseIdx(RollupRewrite.scanRootPaths(f))
       val dimIdxs = ds.map { case (d, _) =>
         baseIdx(RollupRewrite.scanRootPaths(d)) }
-      RollupRewrite.capturedStarEntries(RollupRewrite.scanRootPaths(f),
+      RollupRewrite.capturedEntries(RollupRewrite.scanRootPaths(f),
           ds.map { case (d, keys) =>
             (RollupRewrite.scanRootPaths(d), keys.toSet) }.toSet)
         .filter(_.servable).flatMap { e =>
@@ -781,8 +656,8 @@ object SummaryDesigner {
       kept.filter(_.tier == 2).map(c => c.owner -> specOf(c)))
   }
 
-  /** Materialize + register a [[designCrossTier]] result — plain specs
-    * through [[buildAndRegister]]'s layout, joined/star through theirs.
+  /** Materialize + register a [[designCrossTier]] result through the
+    * one build (`crossp_<i>`, `crossj_<i>`, `crosss_<i>` per tier).
     * Returns the summary paths per tier, index-aligned with the design. */
   def buildAndRegisterCrossTier(spark: SparkSession,
       bases: Seq[DataFrame],
@@ -790,66 +665,12 @@ object SummaryDesigner {
       stars: Seq[(DataFrame, Seq[(DataFrame, Seq[(String, String)])])],
       design: CrossDesign, outDir: String)
       : (Seq[String], Seq[String], Seq[String]) =
-    RollupRewrite.withCaptureSuspended {
-      def grainExprsOf(sp: SummarySpec) = sp.grainCols.map(g =>
-        g -> sp.grainExprSql.get(g).map(expr).getOrElse(col(g)))
-      def groupExprOf(sp: SummarySpec) =
-        sp.grainExprSql.map { case (n, sql) => n -> expr(sql) }
-      val p = design.plain.zipWithIndex.map { case ((bi, sp), i) =>
-        val out = s"$outDir/crossp_${i}"
-        Rollup.materializeExpr(bases(bi), grainExprsOf(sp), sp.measures,
-            sp.distinctCols, sp.sketchK, sp.histCols)
-          .write.mode("overwrite").parquet(out)
-        RollupRewrite.register(bases(bi), graft.sources.Pq.read(spark, out),
-          sp.grainCols, sp.measures, sp.distinctCols, sp.sketchK,
-          groupExprOf(sp), histCols = sp.histCols)
-        out
-      }
-      val j = design.joined.zipWithIndex.map { case ((ji, sp), i) =>
-        val (f, d, keys) = joins(ji)
-        val out = s"$outDir/crossj_${i}"
-        Rollup.materializeExpr(Rollup.starJoin(f, Seq(d -> keys)), grainExprsOf(sp), sp.measures,
-            sp.distinctCols, sp.sketchK, sp.histCols)
-          .write.mode("overwrite").parquet(out)
-        RollupRewrite.registerJoined(f, d, keys, graft.sources.Pq.read(spark, out),
-          sp.grainCols, sp.measures, sp.distinctCols, sp.sketchK,
-          sp.histCols, groupExprOf = groupExprOf(sp))
-        out
-      }
-      val st = design.star.zipWithIndex.map { case ((si, sp), i) =>
-        val (f, ds) = stars(si)
-        val out = s"$outDir/crosss_${i}"
-        Rollup.materializeExpr(Rollup.starJoin(f, ds), grainExprsOf(sp), sp.measures,
-            sp.distinctCols, sp.sketchK, sp.histCols)
-          .write.mode("overwrite").parquet(out)
-        RollupRewrite.registerStar(f, ds, graft.sources.Pq.read(spark, out),
-          sp.grainCols, sp.measures, sp.distinctCols, sp.sketchK,
-          sp.histCols, groupExprOf = groupExprOf(sp))
-        out
-      }
-      (p, j, st)
-    }
-
-  /** Materialize + register every designed STAR spec under `outDir`
-    * (`designs_<i>_<grain digest>` parquet each). */
-  def buildAndRegisterStar(spark: SparkSession, fact: DataFrame,
-                           dims: Seq[(DataFrame, Seq[(String, String)])],
-                           specs: Seq[SummarySpec], outDir: String)
-      : Seq[String] =
-    RollupRewrite.withCaptureSuspended(specs.zipWithIndex.map { case (sp, i) =>
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(sp.grainCols.mkString(",")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString.take(8)
-      val out = s"$outDir/designs_${i}_$digest"
-      val grainExprs = sp.grainCols.map(g =>
-        g -> sp.grainExprSql.get(g).map(expr).getOrElse(col(g)))
-      Rollup.materializeExpr(Rollup.starJoin(fact, dims), grainExprs, sp.measures,
-          sp.distinctCols, sp.sketchK, sp.histCols)
-        .write.mode("overwrite").parquet(out)
-      RollupRewrite.registerStar(fact, dims, graft.sources.Pq.read(spark, out),
-        sp.grainCols, sp.measures, sp.distinctCols, sp.sketchK, sp.histCols,
-        groupExprOf = sp.grainExprSql.map { case (n, sql) => n -> expr(sql) })
-      out
-    })
+    (design.plain.zipWithIndex.map { case ((bi, sp), i) =>
+       build(spark, bases(bi), Nil, sp, s"$outDir/crossp_$i") },
+     design.joined.zipWithIndex.map { case ((ji, sp), i) =>
+       val (f, d, keys) = joins(ji)
+       build(spark, f, Seq(d -> keys), sp, s"$outDir/crossj_$i") },
+     design.star.zipWithIndex.map { case ((si, sp), i) =>
+       val (f, ds) = stars(si)
+       build(spark, f, ds, sp, s"$outDir/crosss_$i") })
 }

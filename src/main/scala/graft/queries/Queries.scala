@@ -4868,7 +4868,7 @@ object Queries {
           coarse.measures == Seq("o_totalprice") &&
           coarse.histCols == Seq("o_custkey"),
         s"designed layouts must carry exactly what their served queries need: $specs")
-      val outs = graft.plan.SummaryDesigner.buildAndRegister(s, orders,
+      val outs = graft.plan.SummaryDesigner.buildAndRegister(s, orders, Nil,
         specs, tmpRoot)
       val fineDir = outs(specs.indexOf(fine))
       val coarseDir = outs(specs.indexOf(coarse))
@@ -4932,7 +4932,7 @@ object Queries {
           specs.head.measures == Seq("o_custkey") &&
           specs.head.histCols == Seq("o_custkey"),
         s"the designed spec must carry the dashboard's full layout: $specs")
-      graft.plan.SummaryDesigner.buildAndRegister(s, base0, specs,
+      graft.plan.SummaryDesigner.buildAndRegister(s, base0, Nil, specs,
         s"$tmpRoot/designed")
       // APPEND → incremental refresh of the DESIGNED summary
       writeNamedSlice(orders.filter(col("o_orderkey") % 4 === 3),
@@ -5359,7 +5359,7 @@ object Queries {
   }
 
   /** SELF-DESIGNED AGGREGATE JOIN SUMMARIES ([[graft.plan
-    * .SummaryDesigner.designJoined]] — q201's capture→design→build→serve
+    * .SummaryDesigner.design]] over one dim — q201's capture→design→build→serve
     * loop closed for the JOIN shape): workload capture now records
     * JOIN-AGGREGATES too (bases + equi-keys oriented to the
     * measure-holding side, grain/filter/layout requirements like the
@@ -5420,13 +5420,13 @@ object Queries {
       w1.queryExecution.optimizedPlan
       w2.queryExecution.optimizedPlan
       w3.queryExecution.optimizedPlan
-      val observed = R.capturedJoinedEntries(
+      val observed = R.capturedEntries(
         R.scanRootPaths(fact.select("o_orderkey")),
-        R.scanRootPaths(dim.select("c_custkey")), keys)
+        Set((R.scanRootPaths(dim.select("c_custkey")), keys.toSet)))
       require(observed.count(_.servable) >= 3,
         s"cold join workload must be captured — got $observed")
       R.stopWorkloadCapture() // keep the log readable for the design
-      val specs = graft.plan.SummaryDesigner.designJoined(fact, dim, keys, 2)
+      val specs = graft.plan.SummaryDesigner.design(fact, Seq(dim -> keys), 2)
       require(specs.size == 2, s"expected a 2-grain AJI design: $specs")
       val coarse = specs.find(_.grainCols == Seq("c_mktsegment"))
         .getOrElse(throw new IllegalStateException(
@@ -5440,8 +5440,8 @@ object Queries {
         s"the coarse AJI must carry the sum measure AND the histogram: $coarse")
       require(fine.measures.contains("o_orderkey"),
         s"the fine AJI must carry the filtered legs' measure: $fine")
-      val outs = graft.plan.SummaryDesigner.buildAndRegisterJoined(
-        s, fact, dim, keys, specs, s"$tmpRoot/designed")
+      val outs = graft.plan.SummaryDesigner.buildAndRegister(
+        s, fact, Seq(dim -> keys), specs, s"$tmpRoot/designed")
       val coarseOut = outs(specs.indexOf(coarse))
       val fineOut = outs(specs.indexOf(fine))
       def requireOn(df: DataFrame, path: String, name: String): DataFrame = {
@@ -5628,12 +5628,12 @@ object Queries {
   }
 
   /** SELF-DESIGNED STAR SUMMARIES ([[graft.plan.SummaryDesigner
-    * .designStar]] — q208's capture→design→build→serve loop at STAR
+    * .design]] over two dims — q208's capture→design→build→serve loop at STAR
     * width, making the whole summary taxonomy self-tuning): workload
     * capture records STAR-join aggregates (center + per-dim
     * (paths, keys), inferred isnotnull(key) conjuncts excluded), the
     * designer runs the HRU advisor over the flattened
-    * `lineitem ⋈ part ⋈ supplier` join, and buildAndRegisterStar
+    * `lineitem ⋈ part ⋈ supplier` join, and buildAndRegister
     * materializes the chosen grains. The cold 3-query workload — a
     * nation-grained count+sum (w1), a nation-FILTERED brand min/max
     * (w2, whose filter column forces the (p_brand, s_nationkey)
@@ -5693,11 +5693,11 @@ object Queries {
       val dimSides = Set(
         (R.scanRootPaths(d1), Set("l_partkey" -> "p_partkey")),
         (R.scanRootPaths(d2), Set("l_suppkey" -> "s_suppkey")))
-      val observed = R.capturedStarEntries(R.scanRootPaths(fact), dimSides)
+      val observed = R.capturedEntries(R.scanRootPaths(fact), dimSides)
       require(observed.count(_.servable) >= 3,
         s"cold star workload must be captured — got $observed")
       R.stopWorkloadCapture() // keep the log readable for the design
-      val specs = graft.plan.SummaryDesigner.designStar(fact, dims, 2)
+      val specs = graft.plan.SummaryDesigner.design(fact, dims, 2)
       require(specs.size == 2, s"expected a 2-grain star design: $specs")
       val coarse = specs.find(_.grainCols == Seq("s_nationkey"))
         .getOrElse(throw new IllegalStateException(
@@ -5709,7 +5709,7 @@ object Queries {
       require(coarse.measures.contains("l_orderkey") &&
           coarse.histCols == Seq("l_orderkey"),
         s"the coarse star summary must carry the sum AND the histogram: $coarse")
-      val outs = graft.plan.SummaryDesigner.buildAndRegisterStar(
+      val outs = graft.plan.SummaryDesigner.buildAndRegister(
         s, fact, dims, specs, s"$tmpRoot/designed")
       val coarseOut = outs(specs.indexOf(coarse))
       val fineOut = outs(specs.indexOf(fine))

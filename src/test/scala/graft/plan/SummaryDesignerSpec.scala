@@ -90,7 +90,7 @@ class SummaryDesignerSpec extends SparkSpec {
         s"coarse spec wrong: $coarse")
       // determinism: designing again from the same capture is identical
       assert(SummaryDesigner.design(base, k = 2) == specs)
-      val outs = SummaryDesigner.buildAndRegister(spark, base, specs,
+      val outs = SummaryDesigner.buildAndRegister(spark, base, Nil, specs,
         s"$dir/designed")
       assert(outs.size == 2)
       // every workload query now serves from a designed summary —
@@ -152,7 +152,7 @@ class SummaryDesignerSpec extends SparkSpec {
           specs.head.grainCols.head.startsWith("__g") &&
           specs.head.grainExprSql.values.toSeq.exists(_.contains("month")),
         s"the month() grain must design as a synthesized expression dim: $specs")
-      SummaryDesigner.buildAndRegister(spark, base, specs, s"$dir/designed")
+      SummaryDesigner.buildAndRegister(spark, base, Nil, specs, s"$dir/designed")
       val served = q(base)
       val scans = scanPaths(served)
       assert(scans.nonEmpty && scans.forall(_.contains("designed")),
@@ -229,10 +229,10 @@ class SummaryDesignerSpec extends SparkSpec {
       wA.queryExecution.optimizedPlan
       wB.queryExecution.optimizedPlan
       // orientation transparency: entries resolve from EITHER side order
-      val fw = RollupRewrite.capturedJoinedEntries(
-        scanPaths(fact), scanPaths(dim), keys)
-      val bw = RollupRewrite.capturedJoinedEntries(
-        scanPaths(dim), scanPaths(fact), keys.map(_.swap))
+      val fw = RollupRewrite.capturedEntries(
+        scanPaths(fact), Set((scanPaths(dim), keys.toSet)))
+      val bw = RollupRewrite.capturedEntries(
+        scanPaths(dim), Set((scanPaths(fact), keys.map(_.swap).toSet)))
       assert(fw.count(_.servable) >= 2 && fw.toSet == bw.toSet,
         s"joined capture must match either orientation: fw=$fw bw=$bw")
       // the isnotnull(k)/isnotnull(dk) inferred conjuncts must NOT leak
@@ -240,13 +240,13 @@ class SummaryDesignerSpec extends SparkSpec {
       assert(fw.forall(e => !e.filterCols.contains("k") &&
         !e.filterCols.contains("dk")), s"key isnotnulls leaked: $fw")
       RollupRewrite.stopWorkloadCapture() // keep the log readable
-      val specs = SummaryDesigner.designJoined(fact, dim, keys, k = 2)
+      val specs = SummaryDesigner.design(fact, Seq(dim -> keys), k = 2)
       assert(specs.size == 2 &&
           specs.exists(_.grainCols == Seq("seg")) &&
           specs.exists(_.grainCols.toSet == Set("seg", "st")),
         s"expected the (seg) + (seg, st) AJI design: $specs")
-      val outs = SummaryDesigner.buildAndRegisterJoined(
-        spark, fact, dim, keys, specs, s"$dir/designed")
+      val outs = SummaryDesigner.buildAndRegister(
+        spark, fact, Seq(dim -> keys), specs, s"$dir/designed")
       val coarseOut = outs(specs.indexWhere(_.grainCols == Seq("seg")))
       val fineOut = outs(specs.indexWhere(_.grainCols.size == 2))
       def onlyOn(df: DataFrame, path: String): Unit = {
@@ -295,21 +295,21 @@ class SummaryDesignerSpec extends SparkSpec {
       RollupRewrite.enable(spark)
       RollupRewrite.startWorkloadCapture()
       w.queryExecution.optimizedPlan
-      val cap = RollupRewrite.capturedJoinedEntries(
-        scanPaths(fact), scanPaths(dim), keys)
+      val cap = RollupRewrite.capturedEntries(
+        scanPaths(fact), Set((scanPaths(dim), keys.toSet)))
       assert(cap.exists(e => e.servable &&
           e.grain.exists(_.startsWith("month(")) && e.grain.contains("seg")),
         s"joined capture must record the expression grain by SQL: $cap")
       RollupRewrite.stopWorkloadCapture()
-      val specs = SummaryDesigner.designJoined(fact, dim, keys, k = 1)
+      val specs = SummaryDesigner.design(fact, Seq(dim -> keys), k = 1)
       assert(specs.size == 1, s"expected one designed AJI: $specs")
       val sp = specs.head
       assert(sp.grainCols.exists(_.startsWith("__g")) &&
           sp.grainCols.contains("seg") &&
           sp.grainExprSql.values.exists(_.contains("month(")),
         s"the design must synthesize the month() grain: $sp")
-      val outs = SummaryDesigner.buildAndRegisterJoined(
-        spark, fact, dim, keys, specs, s"$dir/designed")
+      val outs = SummaryDesigner.buildAndRegister(
+        spark, fact, Seq(dim -> keys), specs, s"$dir/designed")
       assert(scanPaths(w) == Set(s"file:${outs.head}"),
         s"the captured query must ride the designed expr-grain AJI: ${scanPaths(w)}")
       assert(w.queryExecution.optimizedPlan.collect {
@@ -353,11 +353,11 @@ class SummaryDesignerSpec extends SparkSpec {
         .agg(sum("m").as("s")).queryExecution.optimizedPlan
       val sides = Set((scanPaths(d1), Set("fk1" -> "d1k")),
         (scanPaths(d2), Set("fk2" -> "d2k")))
-      val obs = RollupRewrite.capturedStarEntries(scanPaths(fact), sides)
+      val obs = RollupRewrite.capturedEntries(scanPaths(fact), sides)
       assert(obs.exists(e => e.servable && e.filterCols == Set("g2")),
         s"the star filter column must be captured: $obs")
       RollupRewrite.stopWorkloadCapture()
-      val specs = SummaryDesigner.designStar(fact, dims, k = 1)
+      val specs = SummaryDesigner.design(fact, dims, k = 1)
       assert(specs.map(_.grainCols.toSet) == Seq(Set("g1", "g2")),
         s"the filter column must force the (g1, g2) grain at k=1: $specs")
     } finally {
@@ -460,7 +460,7 @@ class SummaryDesignerSpec extends SparkSpec {
       // per-tier union at the same budget: 2 + 4 + 1 = 7 rows
       val pf = SummaryDesigner.designUnderBudget(fact, 6)
       val pd = SummaryDesigner.designUnderBudget(dim, 6)
-      val pj = SummaryDesigner.designJoined(fact, dim, keys, k = 1)
+      val pj = SummaryDesigner.design(fact, Seq(dim -> keys), k = 1)
       assert(pf.map(_.grainCols) == Seq(Seq("k")) &&
           pd.map(_.grainCols.toSet) == Seq(Set("dk", "g")) &&
           pj.map(_.grainCols) == Seq(Seq("g")),
@@ -591,23 +591,23 @@ class SummaryDesignerSpec extends SparkSpec {
       wB.queryExecution.optimizedPlan
       val sides = Set((scanPaths(d1), Set("fk1" -> "d1k")),
         (scanPaths(d2), Set("fk2" -> "d2k")))
-      val obs = RollupRewrite.capturedStarEntries(scanPaths(fact), sides)
+      val obs = RollupRewrite.capturedEntries(scanPaths(fact), sides)
       assert(obs.count(_.servable) >= 2, s"star capture missing: $obs")
       assert(obs.forall(e => !e.filterCols.exists(
           Set("fk1", "fk2", "d1k", "d2k"))),
         s"key isnotnulls leaked into star filter requirements: $obs")
       RollupRewrite.stopWorkloadCapture()
-      val specs = SummaryDesigner.designStar(fact, dims, k = 2)
+      val specs = SummaryDesigner.design(fact, dims, k = 2)
       assert(specs.size == 2 &&
           specs.exists(_.grainCols == Seq("g1")) &&
           specs.exists(_.grainCols.toSet == Set("g1", "g2")),
         s"expected the (g1) + (g1, g2) star design: $specs")
       // the approx (cube-free) cardinality mode designs the same star
       // lattice — unfilled KMV sketches are exact at this size
-      assert(SummaryDesigner.designStar(fact, dims, k = 2,
+      assert(SummaryDesigner.design(fact, dims, k = 2,
           sketchCardK = Some(256)) == specs,
         "approx star design must match the exact one")
-      val outs = SummaryDesigner.buildAndRegisterStar(
+      val outs = SummaryDesigner.buildAndRegister(
         spark, fact, dims, specs, s"$dir/designed")
       val coarseOut = outs(specs.indexWhere(_.grainCols == Seq("g1")))
       val fineOut = outs(specs.indexWhere(_.grainCols.size == 2))
