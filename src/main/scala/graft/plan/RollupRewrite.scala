@@ -1345,19 +1345,20 @@ object RollupRewrite {
 
     /** An aggregate's child flattened for summary matching (see
       * [[flatten]]): file leaves, their locations, the inner equi-key
-      * pairs as (leaf index, leaf attribute) on both ends, the conjuncts
-      * collected at every level, and the alias substitution. */
+      * pairs as (leaf index, resolved key) on both ends — a leaf column,
+      * or an expression over one leaf's columns for a key computed below
+      * the join — the conjuncts collected at every level, and the alias
+      * substitution. */
     private class Flat(val leaves: Seq[LogicalRelation],
         val locs: Seq[org.apache.spark.sql.execution.datasources.FileIndex],
-        val pairs: Seq[((Int, AttributeReference), (Int, AttributeReference))],
+        val pairs: Seq[((Int, Expression), (Int, Expression))],
         val conds: Seq[Expression], val subst: Map[ExprId, Expression]) {
       val paths: Seq[Set[String]] = locs.map(_.rootPaths.map(_.toString).toSet)
 
-      /** The dims around fact leaf `c`, each with its key attribute pairs
-        * oriented (fact attr, dim attr): every key pair touches c on
+      /** The dims around fact leaf `c`, each with its resolved key pairs
+        * oriented (fact key, dim key): every key pair touches c on
         * exactly one side, and every other leaf links to c. */
-      def starAround(c: Int)
-          : Option[Map[Int, Seq[(AttributeReference, AttributeReference)]]] =
+      def starAround(c: Int): Option[Map[Int, Seq[(Expression, Expression)]]] =
         if (!pairs.forall { case ((la, _), (lb, _)) => (la == c) ^ (lb == c) }) None
         else {
           val byDim = pairs.groupBy { case ((la, _), (lb, _)) =>
@@ -1367,10 +1368,14 @@ object RollupRewrite {
           if (byDim.size == leaves.size - 1) Some(byDim) else None
         }
 
-      /** [[starAround]] by key column names — the registration form. */
+      /** [[starAround]] by key column names — the registration form;
+        * None when a key is computed. */
       def keyNamesAround(c: Int): Option[Map[Int, Set[(String, String)]]] =
         starAround(c).map(_.map { case (i, ps) =>
-          i -> ps.map { case (a, b) => (a.name, b.name) }.toSet })
+          i -> ps.map {
+            case (a: AttributeReference, b: AttributeReference) => (a.name, b.name)
+            case _ => return None
+          }.toSet })
 
       /** The one leaf holding every resolved reference of `e`. */
       def leafOf(e: Expression): Option[Int] = {
@@ -1382,31 +1387,33 @@ object RollupRewrite {
 
     /** The front end every summary rewrite shares: flatten `p` into file
       * leaves linked by inner equi-keys (a single leaf for a plain
-      * aggregate), resolve every key through renaming Projects to its
-      * leaf column, and drop the `isnotnull(key)` conjuncts — the inner
-      * joins a summary is built over (or navigation joins on) already
-      * exclude null keys, and InferFiltersFromConstraints plants exactly
-      * those next to every inner equi-join. */
+      * aggregate), resolve every key through Projects to its leaf column
+      * or to a deterministic expression over one leaf, and drop the
+      * `isnotnull(key)` conjuncts on column keys — the inner joins a
+      * summary is built over (or navigation joins on) already exclude
+      * null keys, and InferFiltersFromConstraints plants exactly those
+      * next to every inner equi-join. A computed key's `isnotnull`
+      * stays and serves through its grain like any filter. */
     private def flatten(p: LogicalPlan): Option[Flat] = {
       val (leaves, rawPairs, conds0, subst) = flattenJoins(p).getOrElse(return None)
       val locs = leaves.map(_.relation match {
         case fs: HadoopFsRelation => fs.location
         case _ => return None
       })
-      def keyOf(a: AttributeReference): Option[(Int, AttributeReference)] =
-        resolve(a, subst) match {
-          case r: AttributeReference =>
-            Some(leaves.indexWhere(_.outputSet.contains(r))).filter(_ >= 0)
-              .map(_ -> r)
-          case _ => None
-        }
+      def keyOf(a: AttributeReference): Option[(Int, Expression)] = {
+        val r = resolve(a, subst)
+        if (r.references.isEmpty || !r.deterministic) None
+        else Some(leaves.indexWhere(l => r.references.subsetOf(l.outputSet)))
+          .filter(_ >= 0).map(_ -> r)
+      }
       val pairs = rawPairs.map { case (a, b) =>
         (keyOf(a), keyOf(b)) match {
           case (Some(x), Some(y)) if x._1 != y._1 => (x, y)
           case _ => return None
         }
       }
-      val keyIds = pairs.flatMap { case ((_, a), (_, b)) => Seq(a.exprId, b.exprId) }.toSet
+      val keyIds = pairs.flatMap { case ((_, a), (_, b)) => Seq(a, b) }
+        .collect { case a: AttributeReference => a.exprId }.toSet
       val conds = conds0.flatMap(conjuncts).filterNot { c =>
         resolve(c, subst) match {
           case IsNotNull(a: AttributeReference) => keyIds.contains(a.exprId)
@@ -1517,12 +1524,12 @@ object RollupRewrite {
         })
       val aggRefs = agg.aggregateExpressions.flatMap(_.collect {
         case ae: AggregateExpression => ae }).flatMap(_.references)
-      val centers = f.leaves.indices.filter(f.starAround(_).isDefined)
-      centers.find(c => aggRefs.nonEmpty && aggRefs.forall(a =>
-          resolve(a, f.subst).references.subsetOf(f.leaves(c).outputSet)))
-        .orElse(centers.headOption).foreach { c =>
+      val centers = f.leaves.indices.flatMap(c => f.keyNamesAround(c).map(c -> _))
+      centers.find { case (c, _) => aggRefs.nonEmpty && aggRefs.forall(a =>
+          resolve(a, f.subst).references.subsetOf(f.leaves(c).outputSet)) }
+        .orElse(centers.headOption).foreach { case (c, byDim) =>
           capturedLog.add(CaptureEntry(f.paths(c),
-            f.keyNamesAround(c).get.map { case (i, ks) => (f.paths(i), ks) }.toSet,
+            byDim.map { case (i, ks) => (f.paths(i), ks) }.toSet,
             grains.flatten.toSet, filterCols, meas, dist, sk, hist, servable, skKs))
         }
     }
@@ -1845,7 +1852,8 @@ object RollupRewrite {
       * }}}
       * (min/max are duplication-invariant). Requirements (else leave the
       * plan alone): an inner equi-star over file relations, keys resolved
-      * through renaming Projects ([[flatten]]); the center is the leaf
+      * through Projects to a leaf column or a computed expression over
+      * one leaf ([[flatten]]); the center is the leaf
       * holding every undistincted aggregate input (the first possible
       * center when there are none — with two leaves, both are); each such
       * input is a registered plain-column measure of the center's summary

@@ -84,9 +84,9 @@ object SummaryDesigner {
     * entries (one sketch k per design — conflicting-k sketch entries are
     * skipped), advised over `Rollup.starJoin(fact, dims)`, each advised
     * grain carrying the union of the needs of the entries it serves.
-    * Join designs leave global (empty-grain) entries out of the workload
-    * while plain designs keep them; their requirement tokens still
-    * become advisor dims either way. */
+    * Global (empty-grain) entries stay out of the workload — an
+    * unfiltered one has no grain to design for — but their requirement
+    * tokens still become advisor dims. */
   private def designWith(fact: DataFrame,
       dims: Seq[(DataFrame, Seq[(String, String)])])(
       adviseFn: (DataFrame, Seq[(String, Column)], Seq[Set[String]]) =>
@@ -97,7 +97,7 @@ object SummaryDesigner {
       val sketchK = all.filter(_.servable).flatMap(_.sketchKs).headOption.getOrElse(64)
       val entries = all.filter(e => e.servable &&
         (e.sketchKs.isEmpty || e.sketchKs == Set(sketchK)))
-      val designable = if (dims.isEmpty) entries else entries.filter(_.grain.nonEmpty)
+      val designable = entries.filter(_.grain.nonEmpty)
       if (designable.isEmpty) Nil
       else {
         val reqOf: RollupRewrite.CaptureEntry => Set[String] =

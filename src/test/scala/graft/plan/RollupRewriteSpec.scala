@@ -2486,6 +2486,43 @@ class RollupRewriteSpec extends SparkSpec {
     }
   }
 
+  test("two-summary navigation matches a computed join key against a computed grain") {
+    val dir = java.nio.file.Files.createTempDirectory("joinnav_ckey").toString
+    try {
+      Seq((1L, 10L), (1L, 20L), (2L, 5L), (3L, 7L), (4L, 100L))
+        .toDF("k1", "m").write.parquet(s"$dir/fact")
+      // dk % 10 collides across dk values: the dim summary's computed
+      // key grain carries duplicates that navigation must weight exactly
+      Seq((11L, "x"), (21L, "x"), (2L, "y"), (12L, "y"), (3L, "z"), (5L, "z"))
+        .toDF("dk", "g").write.parquet(s"$dir/dim")
+      val fact = spark.read.parquet(s"$dir/fact")
+      val dim = spark.read.parquet(s"$dir/dim")
+      val keyExpr = col("dk") % 10
+      Rollup.materialize(fact, Seq("k1"), Seq("m")).write.parquet(s"$dir/fsum")
+      Rollup.materializeExpr(dim, Seq("k" -> keyExpr, "g" -> col("g")), Nil)
+        .write.parquet(s"$dir/dsum")
+      RollupRewrite.register(fact, spark.read.parquet(s"$dir/fsum"),
+        Seq("k1"), Seq("m"))
+      RollupRewrite.register(dim, spark.read.parquet(s"$dir/dsum"),
+        Seq("k", "g"), Nil, groupExprOf = Map("k" -> keyExpr))
+      RollupRewrite.enable(spark)
+      def q() = fact.join(dim.select(keyExpr.as("k"), col("g")),
+          col("k1") === col("k"))
+        .groupBy("g").agg(count(lit(1)).as("n"), sum("m").as("s"))
+      val served = q()
+      assert(scanPaths(served) == Set(s"file:$dir/fsum", s"file:$dir/dsum"),
+        s"computed-key join must navigate:\n${served.queryExecution.optimizedPlan}")
+      val got = served.collect().map(_.toSeq).toSet
+      RollupRewrite.disable(spark)
+      val want = q().collect().map(_.toSeq).toSet
+      assert(got == want && want.nonEmpty, s"got $got want $want")
+    } finally {
+      RollupRewrite.disable(spark)
+      RollupRewrite.clear()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
   test("CUBE serves DECIMAL sums and avgs bit-exactly across every grouping set") {
     val dir = java.nio.file.Files.createTempDirectory("cube_dec").toString
     try {

@@ -204,6 +204,21 @@ class SummaryDesignerSpec extends SparkSpec {
     }
   }
 
+  test("global aggregates design no empty-grain summary") {
+    withBase { (base, dir) =>
+      base.agg(sum("m").as("s")).queryExecution.optimizedPlan
+      assert(SummaryDesigner.design(base, k = 2) == Nil,
+        "a workload of global aggregates alone designs nothing")
+      base.groupBy("g").agg(min("m").as("mn")).queryExecution.optimizedPlan
+      val specs = SummaryDesigner.design(base, k = 2)
+      assert(specs.nonEmpty && specs.forall(_.grainCols.nonEmpty),
+        s"every designed grain must be buildable: $specs")
+      val built = SummaryDesigner.buildAndRegister(spark, base, Nil, specs,
+        s"$dir/designed")
+      assert(built.size == specs.size)
+    }
+  }
+
   test("designJoined + buildAndRegisterJoined: captured join workload re-serves from designed AJIs") {
     import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
     val dir = java.nio.file.Files.createTempDirectory("designer_j").toString

@@ -1,13 +1,12 @@
 #!/usr/bin/env python3
 """Count code lines of the Scala sources under src/main.
 
-Usage: python3 tools/loc.py [ROOT] [--files PATH ...]
+Usage: python3 tools/loc.py [ROOT]
 
 A code line is any line that is not blank, not a `//` line comment, and
 not inside a `/* ... */` block comment (scaladoc included). A line that
 holds code next to a comment counts as code. Prints one line per file
-(code lines, path), sorted by path, then the total. With --files, only
-the named files (relative to ROOT) are counted.
+(code lines, path), sorted by path, then the total.
 """
 import os
 import sys
@@ -41,20 +40,11 @@ def code_lines(text):
 
 
 def main(argv):
-    root = "."
-    files = None
-    args = list(argv)
-    if "--files" in args:
-        i = args.index("--files")
-        files = args[i + 1:]
-        args = args[:i]
-    if args:
-        root = args[0]
-    if files is None:
-        base = os.path.join(root, "src", "main")
-        files = sorted(
-            os.path.relpath(os.path.join(d, f), root)
-            for d, _, fs in os.walk(base) for f in fs if f.endswith(".scala"))
+    root = argv[0] if argv else "."
+    base = os.path.join(root, "src", "main")
+    files = sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, fs in os.walk(base) for f in fs if f.endswith(".scala"))
     total = 0
     for rel in files:
         with open(os.path.join(root, rel), encoding="utf-8") as fh:
