@@ -354,13 +354,29 @@ object Bm25 {
   }
 
   def loadIncIndex(spark: SparkSession, path: String): IncIndex = {
-    // 1-row sidecar: driver-local read, zero Spark jobs
-    val st = graft.sources.Pq.readSmall(spark, resolveTable(spark, path, "stats"))
-      .select(col("n_docs").cast("double"), col("total_dl").cast("double"))
-      .collect()(0)
+    val (nDocs, totalDl) = readStats(spark, resolveTable(spark, path, "stats"))
     IncIndex(graft.sources.Pq.read(spark, resolveTable(spark, path, "postings")),
       graft.sources.Pq.read(spark, resolveTable(spark, path, "dfs")),
-      st.getDouble(0), st.getDouble(1), tombstonesOpt(spark, path))
+      nDocs, totalDl, tombstonesOpt(spark, path))
+  }
+
+  /** `(n_docs, total_dl)` of the 1-row stats table at `dir`, as doubles.
+    * The row is decoded in process, with no Spark job and no Catalyst
+    * plan; a table that `Pq.localRows` refuses goes through the cluster
+    * read `Pq.read` and `cast("double")`. `Number.doubleValue` widens
+    * int, bigint and float as that cast does. */
+  private def readStats(spark: SparkSession, dir: String): (Double, Double) = {
+    val cols = Seq("n_docs", "total_dl")
+    val rows: Seq[Seq[Any]] = graft.sources.Pq.localRows(spark, 16L << 20, dir)
+      .map { case (schema, rs) => rs.map(r => cols.map(c => r(schema.fieldIndex(c)))) }
+      .getOrElse(graft.sources.Pq.read(spark, dir)
+        .select(cols.map(c => col(c).cast("double")): _*).collect().toSeq.map(_.toSeq))
+    require(rows.size == 1 && rows.head.forall(_.isInstanceOf[Number]),
+      s"BM25 stats table $dir must hold exactly one row with non-null numeric n_docs and " +
+        s"total_dl, found ${rows.size} row(s)${rows.headOption.fold("")(r => s", first $r")}; " +
+        "rebuild the derived tables with Bm25.repairIncIndex")
+    val row = rows.head.map(_.asInstanceOf[Number].doubleValue)
+    (row(0), row(1))
   }
 
   /** The tombstone table, once ids were committed to it: a crash inside

@@ -57,8 +57,12 @@ private[curate] object Bm25Local {
     * a full decode costs about four distributed requests, so a
     * compaction's reload pays for itself within four resident requests.
     * Measured on a 4-CPU host (40-token docs over a 3,000-word vocabulary;
-    * postings bytes → distributed request / full local load / resident
-    * request / decoded heap): 1.1 MB → 0.53 s / 0.29 s / 21 ms / 9 MB;
+    * postings bytes → distributed request / full local load after a
+    * compaction / resident request / decoded heap, each request timed
+    * from `loadIncIndex` to its collect): 1.2 MB (8,000 docs) → 0.34 s /
+    * 0.20 s / 22 ms / 9.5 MB, medians of 3 runs (0.34 s / 0.32 s / 62 ms
+    * when each parquet file open built a fresh Hadoop configuration, about
+    * 11 ms more per open). The larger rows were timed with those opens:
     * 4.5 MB → 0.50 s / 0.80 s / 23 ms / 30 MB; 13.6 MB → 0.56 s / 1.78 s /
     * 21 ms / 57 MB; 28.3 MB → 0.71 s / 2.92 s / 27 ms / 112 MB. */
   val MaxIndexBytes: Long = 16L << 20

@@ -394,12 +394,14 @@ class Bm25Spec extends SparkSpec {
     try {
       Bm25.buildAndSaveIncIndex(spark, docs.filter($"doc_id" <= 3), "doc_id", "text", tmp)
       Bm25.deleteFromIncIndex(spark, tmp, Seq(2L).toDF("doc_id"), "doc_id")
-      val idx = Bm25.loadIncIndex(spark, tmp)
       spark.sparkContext.addSparkListener(listener)
       val c0 = Bm25.serveCounters
       spark.sparkContext.setJobGroup(group, "local serve")
-      val served = try Bm25.topKAgainstIncIndex(idx, queries, "qid", "qtext", k = 3)
-        finally spark.sparkContext.clearJobGroup()
+      // the region covers the load: pointers, stats row and listings too
+      val (idx, served) = try {
+        val idx = Bm25.loadIncIndex(spark, tmp)
+        (idx, Bm25.topKAgainstIncIndex(idx, queries, "qid", "qtext", k = 3))
+      } finally spark.sparkContext.clearJobGroup()
       spark.sparkContext.setJobGroup(group, "local serve")
       val (rows, scores) = try (served.as[(Long, Int, Long, Double)].collect().toSet,
           Bm25.scoresAgainstIncIndex(idx, queries, "qid", "qtext").collect())
@@ -436,6 +438,50 @@ class Bm25Spec extends SparkSpec {
       spark.sparkContext.removeSparkListener(listener)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
     }
+  }
+
+  test("loadIncIndex reads nDocs and totalDl as a plain read of the resolved stats table") {
+    val docs = (1L to 12L).map(i => (i, Seq.tabulate((i % 5 + 1).toInt)(j => s"w${(i + j) % 7}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("bm25_stats").toString
+    def statsDir = Bm25.resolveTable(spark, tmp, "stats")
+    def check(stage: String): Unit = {
+      val idx = Bm25.loadIncIndex(spark, tmp)
+      val want = spark.read.parquet(statsDir)
+        .select($"n_docs".cast("double"), $"total_dl".cast("double")).as[(Double, Double)].collect()
+      assert(want.toSeq == Seq((idx.nDocs, idx.totalDl)), stage)
+    }
+    try {
+      Bm25.buildAndSaveIncIndex(spark, docs.filter($"doc_id" <= 8), "doc_id", "text", tmp)
+      check("build")
+      Bm25.appendIncIndex(spark, tmp, docs.filter($"doc_id" > 8), "doc_id", "text")
+      check("append")
+      Bm25.deleteFromIncIndex(spark, tmp, Seq(3L, 10L).toDF("doc_id"), "doc_id")
+      check("delete")
+      Bm25.compactIncIndex(spark, tmp)
+      check("compact")
+      assert(Bm25.loadIncIndex(spark, tmp).nDocs == 10.0)
+      // bigint columns (a total past 2^53 rounds as the cast rounds), and
+      // decimal ones, which only the cluster-read fallback decodes
+      Seq((10L, (1L << 53) + 1)).toDF("n_docs", "total_dl")
+        .write.mode("overwrite").parquet(statsDir)
+      check("bigint")
+      Seq((BigDecimal(10), BigDecimal(41))).toDF("n_docs", "total_dl")
+        .write.mode("overwrite").parquet(statsDir)
+      check("decimal")
+      // a bad stats table fails fast and names the repair
+      Seq.empty[(Long, Long)].toDF("n_docs", "total_dl").coalesce(1)
+        .write.mode("overwrite").parquet(statsDir)
+      val empty = intercept[IllegalArgumentException](Bm25.loadIncIndex(spark, tmp)).getMessage
+      assert(empty.contains(statsDir) && empty.contains("0 row(s)") &&
+        empty.contains("repairIncIndex"), empty)
+      Seq[(Option[Double], Option[Double])]((Some(10.0), None)).toDF("n_docs", "total_dl")
+        .write.mode("overwrite").parquet(statsDir)
+      val nulls = intercept[IllegalArgumentException](Bm25.loadIncIndex(spark, tmp)).getMessage
+      assert(nulls.contains(statsDir) && nulls.contains("repairIncIndex"), nulls)
+      Bm25.repairIncIndex(spark, tmp)
+      check("repair")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
   test("concurrent local serves of a cold index share the segment store and agree") {
