@@ -1144,15 +1144,30 @@ object RollupRewrite {
   /** Install the rewrite on a session (idempotent). Runs in
     * `spark.experimental.extraOptimizations` — after the main optimizer
     * batches, so it sees the canonical Aggregate/Project/Filter/Relation
-    * shape column pruning leaves behind. */
-  def enable(spark: SparkSession): Unit =
+    * shape column pruning leaves behind. The planner strategy of the
+    * driver-local serve regime ([[SummaryLocal]]) comes with it. */
+  def enable(spark: SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[RewriteRule]))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ new RewriteRule
+    if (!spark.experimental.extraStrategies.contains(SummaryLocal.Strategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ SummaryLocal.Strategy
+  }
 
-  def disable(spark: SparkSession): Unit =
+  def disable(spark: SparkSession): Unit = {
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations.filterNot(_.isInstanceOf[RewriteRule])
+    spark.experimental.extraStrategies =
+      spark.experimental.extraStrategies.filterNot(_ eq SummaryLocal.Strategy)
+  }
+
+  /** `agg` tagged with the serve kind that emitted it, for
+    * [[SummaryLocal.Strategy]]. */
+  private def served(agg: Aggregate, kind: String): Aggregate = {
+    agg.setTagValue(SummaryLocal.Serve, kind)
+    agg
+  }
 
   /** Root paths of every file scan in the optimized plan — for gates and
     * specs that must PROVE the rewrite fired (summary read, base not). */
@@ -1803,8 +1818,8 @@ object RollupRewrite {
         newCond.flatMap(_.references))
         .map(_.asInstanceOf[AttributeReference])
         .groupBy(_.exprId).map(_._2.head).toSeq
-      Some(Aggregate(agg.groupingExpressions, rewritten,
-        Expand(newProjections, newOutput, Project(needed, filtered))))
+      Some(served(Aggregate(agg.groupingExpressions, rewritten,
+        Expand(newProjections, newOutput, Project(needed, filtered))), SummaryLocal.CubeServe))
     }
 
     /** Flatten an INNER-equi-join TREE over stripped file relations
@@ -2004,7 +2019,7 @@ object RollupRewrite {
       val joinedPlan = dimIdx.foldLeft(pruned(center)) { (acc, di) =>
         LJoin(acc, pruned(di), Inner, Some(joinConds(di)), JoinHint.NONE)
       }
-      Some(Aggregate(groupAttrs, rewritten, joinedPlan))
+      Some(served(Aggregate(groupAttrs, rewritten, joinedPlan), SummaryLocal.NavigationServe))
     }
 
     /** Merged-partial derivation of one undistincted aggregate call —
@@ -2167,7 +2182,10 @@ object RollupRewrite {
       val needed = (newGroup ++ rewritten.flatMap(_.references) ++
         newCond.flatMap(_.references)).map(_.asInstanceOf[AttributeReference])
         .groupBy(_.exprId).map(_._2.head).toSeq
-      Some(Aggregate(newGroup, rewritten, Project(needed, filtered)))
+      // a compensated serve scans a union of the summary and its delta
+      Some(served(Aggregate(newGroup, rewritten, Project(needed, filtered)),
+        if (summary.isInstanceOf[LogicalRelation]) SummaryLocal.SummaryServe
+        else SummaryLocal.CompensatedServe))
     }
   }
 }

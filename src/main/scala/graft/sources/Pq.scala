@@ -50,41 +50,55 @@ object Pq {
   def holdsData(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+    fs.exists(p) && fs.listStatus(p).exists(st => !hidden(st.getPath.getName))
   }
 
+  /** Whether Spark's file sources treat `name` as hidden. */
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+
   /** Visible-file manifest under `paths` (hidden `_`/`.` entries skipped,
-    * matching Spark's own file-source visibility rule) plus the first
-    * visible parquet file (the cold-read footer probe target). */
-  private def manifestKey(spark: SparkSession,
-                          paths: Seq[String]): (String, Option[org.apache.hadoop.fs.Path]) = {
+    * matching Spark's own file-source visibility rule), the first
+    * visible parquet file (the cold-read footer probe target), and the
+    * paths to hand Spark: each root, except that a hidden-named root
+    * holding only visible files directly (a `Bm25.swapWrite`
+    * `.gen_<table>_<n>` generation) is replaced by those files. Spark
+    * reads such a root when it is named, but its `DataSource` first
+    * warns that all paths were ignored. */
+  private def manifestKey(spark: SparkSession, paths: Seq[String])
+      : (String, Option[org.apache.hadoop.fs.Path], Seq[String]) = {
     val conf = spark.sparkContext.hadoopConfiguration
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     var first: org.apache.hadoop.fs.Path = null
+    val rootFiles = scala.collection.mutable.ArrayBuffer.empty[String]
     // the hidden-name rule applies to DISCOVERED children only, never to
     // the explicitly passed roots — Spark reads a `.gen_*`-named dir fine
     // when it IS the path argument (Bm25.swapWrite generations); skipping
     // it here read every such dir as an EMPTY manifest and collapsed all
     // their memo keys into one (the r15 dfs-schema-served-for-stats bug)
     def walk(fs: org.apache.hadoop.fs.FileSystem,
-             st: org.apache.hadoop.fs.FileStatus, isRoot: Boolean): Unit = {
+             st: org.apache.hadoop.fs.FileStatus, depth: Int): Unit = {
       val name = st.getPath.getName
-      if (!isRoot && (name.startsWith("_") || name.startsWith("."))) return
+      if (depth > 0 && hidden(name)) return
       if (st.isDirectory)
-        fs.listStatus(st.getPath).foreach(walk(fs, _, isRoot = false))
+        fs.listStatus(st.getPath).foreach(walk(fs, _, depth + 1))
       else {
         buf += s"${st.getPath}|${st.getLen}|${st.getModificationTime}"
+        if (depth == 1) rootFiles += st.getPath.toString
         if (first == null && name.endsWith(".parquet") && st.getLen > 0)
           first = st.getPath
       }
     }
-    paths.foreach { p =>
+    val sparkPaths = paths.flatMap { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
       val fs = hp.getFileSystem(conf)
-      walk(fs, fs.getFileStatus(hp), isRoot = true)
+      val (listed, st) = (buf.size, fs.getFileStatus(hp))
+      rootFiles.clear()
+      walk(fs, st, depth = 0)
+      // every visible file of the root lies directly in it
+      if (st.isDirectory && hidden(hp.getName) && rootFiles.nonEmpty &&
+          rootFiles.size == buf.size - listed)
+        rootFiles.sorted
+      else Seq(p)
     }
     val md = java.security.MessageDigest.getInstance("MD5")
     // the root path list joins the digest so two reads are only ever
@@ -94,7 +108,7 @@ object Pq {
       md.update(s"root:$p\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     buf.sorted.foreach(e =>
       md.update(s"$e\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    (java.util.Base64.getEncoder.encodeToString(md.digest), Option(first))
+    (java.util.Base64.getEncoder.encodeToString(md.digest), Option(first), sparkPaths)
   }
 
   /** Open `file` with the read options of `conf`, the session's Hadoop
@@ -156,7 +170,7 @@ object Pq {
       def walk(fs: org.apache.hadoop.fs.FileSystem,
                st: org.apache.hadoop.fs.FileStatus, isRoot: Boolean): Unit = {
         val name = st.getPath.getName
-        if (!isRoot && (name.startsWith("_") || name.startsWith("."))) return
+        if (!isRoot && hidden(name)) return
         if (st.isDirectory)
           fs.listStatus(st.getPath).foreach(walk(fs, _, isRoot = false))
         else if (st.getLen > 0) { files += st.getPath; total += st.getLen }
@@ -174,19 +188,27 @@ object Pq {
           try footerSchema(first).filter(decodable).map { s => decode(first, s)(rows += _); s }
           finally first.close()
         schema.map { s =>
-          files.tail.foreach(decodeLocal(conf, _, s)(rows += _))
+          localRows(conf, files.tail.toSeq, s)(rows += _)
           (s, rows.toSeq)
         }
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Every record of `files`, a listing already made, passed to `emit`
+    * as [[decodeLocal]] emits it for the [[decodable]] `schema`, file by
+    * file. Throws where a file cannot be read as `schema`. */
+  private[graft] def localRows(conf: org.apache.hadoop.conf.Configuration,
+                               files: Seq[org.apache.hadoop.fs.Path],
+                               schema: StructType)(emit: Array[Any] => Unit): Unit =
+    files.foreach(decodeLocal(conf, _, schema)(emit))
+
   /** Whether [[decodeLocal]] reads every field of `schema`: flat
-    * primitives and arrays of them. */
-  private def decodable(schema: StructType): Boolean = {
+    * primitives (dates as INT32 epoch days) and arrays of them. */
+  private[graft] def decodable(schema: StructType): Boolean = {
     import org.apache.spark.sql.types._
     def primOk(dt: DataType): Boolean = dt match {
       case StringType | DoubleType | LongType | IntegerType |
-           BooleanType | FloatType => true
+           BooleanType | FloatType | DateType => true
       case _ => false
     }
     schema.fields.forall(f => f.dataType match {
@@ -203,8 +225,10 @@ object Pq {
     * file written from a projected frame can order them differently.
     * Each row group decodes column by column straight off parquet's
     * column readers (no record assembly); arrays are Spark's 3-level
-    * LIST shape. No Spark job; the array passed to `emit` is fresh per
-    * record. */
+    * LIST shape; a date is a `java.time.LocalDate`. A date column of a
+    * file Spark would rebase on read (legacy hybrid-calendar metadata, or
+    * no Spark version) is refused. No Spark job; the array passed to
+    * `emit` is fresh per record. */
   private[graft] def decodeLocal(conf: org.apache.hadoop.conf.Configuration,
                                  file: org.apache.hadoop.fs.Path,
                                  schema: StructType)(emit: Array[Any] => Unit): Unit = {
@@ -224,10 +248,16 @@ object Pq {
       case IntegerType => cr.getInteger
       case BooleanType => cr.getBoolean
       case FloatType => cr.getFloat
+      case DateType => java.time.LocalDate.ofEpochDay(cr.getInteger)
       case other => throw new IllegalArgumentException(s"not decodable: $other")
     }
     val meta = reader.getFooter.getFileMetaData
     val fileSchema = meta.getSchema
+    val kv = meta.getKeyValueMetaData
+    if (schema.fields.exists(_.dataType == DateType) &&
+        (kv.containsKey("org.apache.spark.legacyDateTime") ||
+          !kv.containsKey("org.apache.spark.version")))
+      throw new IllegalArgumentException("dates Spark would rebase on read")
     val root = new org.apache.parquet.example.data.simple.convert
       .GroupRecordConverter(fileSchema).getRootConverter
     val fields = schema.fields
@@ -332,7 +362,7 @@ object Pq {
       try manifestKey(spark, paths)
       catch { case scala.util.control.NonFatal(_) => null }
     if (keyAndFirst == null) return spark.read.parquet(paths: _*)
-    val (key, firstFile) = keyAndFirst
+    val (key, firstFile, sparkPaths) = keyAndFirst
     val dfKey = s"${System.identityHashCode(spark)}|$key"
     val cachedDf = dfMemo.get(dfKey)
     if (cachedDf != null) return cachedDf
@@ -340,7 +370,7 @@ object Pq {
     if (dfMemo.size > 1024) dfMemo.clear()
     val df = {
       val cached = memo.get(key)
-      if (cached != null) spark.read.schema(cached).parquet(paths: _*)
+      if (cached != null) spark.read.schema(cached).parquet(sparkPaths: _*)
       else {
         // cold read: one driver-side footer probe replaces the 1-task
         // inference job for Spark-written files (everything the engine
@@ -349,9 +379,9 @@ object Pq {
         firstFile.flatMap(probe(spark, _)) match {
           case Some(s) =>
             memo.putIfAbsent(key, s)
-            spark.read.schema(s).parquet(paths: _*)
+            spark.read.schema(s).parquet(sparkPaths: _*)
           case None =>
-            val inferred = spark.read.parquet(paths: _*)
+            val inferred = spark.read.parquet(sparkPaths: _*)
             memo.putIfAbsent(key, inferred.schema)
             inferred
         }

@@ -14,4 +14,21 @@ trait SparkSpec extends AnyFunSuite {
 
   def fixture(name: String): String =
     getClass.getClassLoader.getResource(name).getPath
+
+  /** The messages `logger` logs while `body` runs (at the levels the
+    * test logging configuration enables), and `body`'s result. */
+  def logged[A](logger: String)(body: => A): (A, Seq[String]) = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val lines = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val appender = new AbstractAppender(s"capture-${System.nanoTime()}", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val log = org.apache.logging.log4j.LogManager.getLogger(logger).asInstanceOf[Logger]
+    log.addAppender(appender)
+    try (body, scala.jdk.CollectionConverters.ListHasAsScala(lines).asScala.toSeq)
+    finally { log.removeAppender(appender); appender.stop() }
+  }
 }

@@ -121,6 +121,30 @@ class Bm25Spec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
+  test("append, delete and compact read swap-committed generations without Spark's all-paths-ignored warning") {
+    val docs = Seq((1L, "apple banana"), (2L, "cherry apple"), (3L, "durian fig"),
+      (4L, "banana cherry")).toDF("doc_id", "text")
+    val queries = Seq((100L, "apple cherry")).toDF("qid", "qtext")
+    val tmp = java.nio.file.Files.createTempDirectory("bm25_gen").toString
+    try {
+      val (served, lines) = logged("org.apache.spark.sql.execution.datasources.DataSource") {
+        Bm25.buildAndSaveIncIndex(spark, docs.filter($"doc_id" <= 2), "doc_id", "text", tmp)
+        Bm25.appendIncIndex(spark, tmp, docs.filter($"doc_id" > 2), "doc_id", "text")
+        Bm25.deleteFromIncIndex(spark, tmp, Seq(2L).toDF("doc_id"), "doc_id")
+        Bm25.compactIncIndex(spark, tmp)
+        Bm25.topKDistributed(Bm25.loadIncIndex(spark, tmp), queries, "qid", "qtext", k = 3)
+          .as[(Long, Int, Long, Double)].collect().toSet
+      }
+      val ignored = lines.filter(_.contains("All paths were ignored"))
+      assert(ignored.isEmpty, s"${ignored.size} warnings, first: ${ignored.headOption}")
+      val want = Bm25.topK(docs.filter($"doc_id" =!= 2L), "doc_id", "text", queries,
+        "qid", "qtext", k = 3).as[(Long, Int, Long, Double)].collect().toSet
+      assert(served == want && served.nonEmpty)
+      // the generations are hidden-named, as the pointers expect
+      assert(new java.io.File(tmp).list().exists(_.startsWith(".gen_")))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+  }
+
   test("inc-index serving broadcasts the query side; appends leave no cache entries") {
     spark.catalog.clearCache()
     val docs = Seq((1L, "aa bb"), (2L, "bb cc"), (3L, "cc aa")).toDF("doc_id", "text")

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
 /** Guards for the memoized parquet-read device (r15): the memo must be
@@ -113,6 +115,28 @@ class PqSpec extends SparkSpec {
     Seq((1L, (2L, "x"))).toDF("id", "s").write.parquet(dir)
     assert(Pq.readLocal(spark, 16L << 20, dir).isEmpty)
     assert(Pq.readSmall(spark, dir).count() == 1)
+  }
+
+  test("readLocal decodes a nullable date column as the cluster read does; decimals and timestamps stay refused") {
+    val dir = s"${tmp()}/dates"
+    Seq((1, Some("2024-02-29")), (2, None), (3, Some("1970-01-01")), (4, Some("1969-12-31")),
+        (5, Some("1900-03-01")), (6, Some("9999-12-31")))
+      .toDF("id", "d").select(col("id"), to_date(col("d")).as("transaction_date"))
+      .write.parquet(dir)
+    val local = Pq.readLocal(spark, 16L << 20, dir).get
+    val bare = spark.read.parquet(dir)
+    assert(local.schema == bare.schema)
+    assert(local.collect().map(_.toString).sorted.toSeq ==
+      bare.collect().map(_.toString).sorted.toSeq)
+    assert(local.filter(col("transaction_date").isNull).count() == 1)
+    val dec = s"${tmp()}/dec"
+    Seq((1, "1.50")).toDF("id", "v").select(col("id"), col("v").cast("decimal(10,2)"))
+      .write.parquet(dec)
+    assert(Pq.readLocal(spark, 16L << 20, dec).isEmpty)
+    val ts = s"${tmp()}/ts"
+    Seq((1, "2024-01-01 10:00:00")).toDF("id", "t")
+      .select(col("id"), to_timestamp(col("t")).as("t")).write.parquet(ts)
+    assert(Pq.readLocal(spark, 16L << 20, ts).isEmpty)
   }
 
   test("multi-path read unions the files under one memoized schema") {
