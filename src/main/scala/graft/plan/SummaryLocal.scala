@@ -2,6 +2,8 @@ package graft.plan
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -35,7 +37,7 @@ import graft.functions.expressions.{HistMergeAgg, KmvMergeAgg}
   * logged with its inputs and counted ([[counters]]).
   *
   * How: the leaf decodes the scan's frozen file listing (no new listing)
-  * through [[graft.sources.Pq.localRows]] and, as the rows stream from
+  * through [[graft.sources.Pq.decodeLocal]] and, as the rows stream from
   * the decoder, filters them with Spark's interpreted predicates, groups
   * them on the driver by the grains' unsafe bytes (the hash aggregate's
   * key equality), and runs each aggregate through Spark's own
@@ -65,7 +67,8 @@ object SummaryLocal {
     * (60,000) → 0.091–0.111 s / 0.143–0.158 s; 1.74 MB (100,000) →
     * 0.135–0.144 s / 0.121–0.147 s; 2.60 MB (150,000) → 0.125–0.196 s /
     * 0.124–0.126 s; 3.47 MB (200,000) → 0.145–0.252 s / 0.133–0.136 s;
-    * 5.19 MB (300,000) → 0.353 s / 0.130 s. */
+    * 5.19 MB (300,000) → 0.353 s / 0.130 s. No benchmark workload
+    * serves a batch over the cap, so nothing but this probe checks it. */
   val MaxSummaryBytes: Long = 2L << 20
 
   /** Read-only serve telemetry, cumulative over the JVM. */
@@ -82,6 +85,13 @@ object SummaryLocal {
     (if (regime == "local") localServes else distributedServes).incrementAndGet()
     log.info(s"summary serve regime=$regime files=$files bytes=$bytes " +
       s"cap=$MaxSummaryBytes$why")
+  }
+
+  /** A local decision taken back when the plan runs: the serve counts as
+    * distributed instead. */
+  private[plan] def retracted(files: Int, bytes: Long, why: String): Unit = {
+    localServes.decrementAndGet()
+    decided("distributed", files, bytes, why)
   }
 
   /** Plans a tagged aggregate as [[SummaryLocalExec]] where the local
@@ -105,7 +115,7 @@ object SummaryLocal {
       val refusal = scan match {
         case _ if kind != SummaryServe => Some(kind)
         case None => Some("plan shape")
-        case Some((needed, _, fs)) =>
+        case Some((needed, conds, fs)) =>
           val schema = StructType(needed.map(a => StructField(a.name, a.dataType)))
           if (!fs.fileFormat.isInstanceOf[ParquetFileFormat]) Some("not parquet")
           else if (!fs.location.isInstanceOf[PartitioningAwareFileIndex]) Some("file index")
@@ -114,6 +124,10 @@ object SummaryLocal {
           else if (!graft.sources.Pq.decodable(schema)) Some(s"undecodable schema ${schema.simpleString}")
           else if (!agg.groupingExpressions.forall(_.isInstanceOf[Attribute]) ||
               !agg.aggregateExpressions.forall(_.deterministic)) Some("plan shape")
+          // a subquery is planned and run by the physical plan that holds
+          // it; the leaf runs none
+          else if ((conds ++ agg.aggregateExpressions).exists(SubqueryExpression.hasSubquery))
+            Some("subquery")
           else agg.aggregateExpressions.flatMap(_.collect { case ae: AggregateExpression => ae })
             .find(!servable(_)).map(ae => s"aggregate ${ae.aggregateFunction.prettyName}")
       }
@@ -269,8 +283,8 @@ object SummaryLocal {
   * `files`. Collecting runs no Spark job; [[doExecute]] parallelizes the
   * collected rows. A file the driver-side decoder cannot read as the
   * scan's schema (a batch written with other column types, which Spark's
-  * reader may widen) serves through the distributed plan of `agg`
-  * instead. */
+  * reader may widen) makes this plan serve through the distributed plan
+  * of `agg` from then on. */
 final case class SummaryLocalExec(output: Seq[Attribute], groups: Seq[Attribute],
                                   results: Seq[NamedExpression], needed: Seq[Attribute],
                                   conds: Seq[Expression], files: Seq[FileStatus])(
@@ -286,28 +300,42 @@ final case class SummaryLocalExec(output: Seq[Attribute], groups: Seq[Attribute]
     s"SummaryLocal [${groups.mkString(", ")}] [${results.mkString(", ")}] " +
       s"files=${files.size} bytes=${files.map(_.getLen).sum}"
 
-  override def executeCollect(): Array[InternalRow] = {
-    val schema = StructType(needed.map(a => StructField(a.name, a.dataType)))
-    val toCatalyst = needed.map(a => CatalystTypeConverters.createToCatalystConverter(a.dataType))
-    // rows stream from the decoder into the aggregation; an error of the
-    // aggregation itself (an ANSI overflow) is the query's, one of the
-    // decoder makes the distributed plan serve
-    final class Aggregating(cause: Throwable) extends RuntimeException(cause)
-    def feed(f: InternalRow => Unit): Unit =
-      graft.sources.Pq.localRows(session.sparkContext.hadoopConfiguration,
-          files.map(_.getPath), schema) { vals =>
-        val row = new GenericInternalRow(Array.tabulate[Any](vals.length)(i => toCatalyst(i)(vals(i))))
-        try f(row) catch { case scala.util.control.NonFatal(e) => throw new Aggregating(e) }
+  @transient @volatile private var undecodable = false
+
+  @transient private lazy val distributed: SparkPlan =
+    session.sessionState.executePlan(agg.copy()).executedPlan
+
+  override def executeCollect(): Array[InternalRow] =
+    if (undecodable) distributed.executeCollect()
+    else {
+      val schema = StructType(needed.map(a => StructField(a.name, a.dataType)))
+      val toCatalyst = needed.map(a => CatalystTypeConverters.createToCatalystConverter(a.dataType))
+      val conf = session.sparkContext.hadoopConfiguration
+      // rows stream from the decoder into the aggregation; an error of the
+      // aggregation (an ANSI overflow) is the query's, one of the decoder
+      // makes the distributed plan serve
+      final class Aggregating(cause: Throwable) extends RuntimeException(cause)
+      final class Decoding(cause: Throwable) extends RuntimeException(cause)
+      def feed(f: InternalRow => Unit): Unit =
+        try files.foreach { st =>
+          graft.sources.Pq.decodeLocal(conf, st.getPath, schema) { vals =>
+            val row = new GenericInternalRow(Array.tabulate[Any](vals.length)(i => toCatalyst(i)(vals(i))))
+            try f(row) catch { case NonFatal(e) => throw new Aggregating(e) }
+          }
+        } catch {
+          case a: Aggregating => throw a
+          case NonFatal(e) => throw new Decoding(e)
+        }
+      try SummaryLocal.aggregate(feed, needed, conds, groups, results)
+      catch {
+        case a: Aggregating => throw a.getCause
+        case d: Decoding =>
+          undecodable = true
+          SummaryLocal.retracted(files.size, files.map(_.getLen).sum,
+            s" refused=undecodable file (${d.getCause})")
+          distributed.executeCollect()
       }
-    try SummaryLocal.aggregate(feed, needed, conds, groups, results)
-    catch {
-      case a: Aggregating => throw a.getCause
-      case scala.util.control.NonFatal(e) =>
-        SummaryLocal.decided("distributed", files.size, files.map(_.getLen).sum,
-          s" refused=undecodable file ($e)")
-        session.sessionState.executePlan(agg.copy()).executedPlan.executeCollect()
     }
-  }
 
   override protected def doExecute(): RDD[InternalRow] =
     sparkContext.parallelize(executeCollect().toSeq, 1)

@@ -61,9 +61,13 @@ object Pq {
     * visible parquet file (the cold-read footer probe target), and the
     * paths to hand Spark: each root, except that a hidden-named root
     * holding only visible files directly (a `Bm25.swapWrite`
-    * `.gen_<table>_<n>` generation) is replaced by those files. Spark
-    * reads such a root when it is named, but its `DataSource` first
-    * warns that all paths were ignored. */
+    * `.gen_<table>_<n>` generation) is replaced by those files while
+    * that leaves no more paths than the session's
+    * `parallelPartitionDiscovery.threshold`. Spark reads such a root
+    * when it is named, but its `DataSource` first warns that all paths
+    * were ignored; past the threshold its file index would list the
+    * paths with a Spark job, so the roots are kept and the warning with
+    * them. */
   private def manifestKey(spark: SparkSession, paths: Seq[String])
       : (String, Option[org.apache.hadoop.fs.Path], Seq[String]) = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -108,7 +112,9 @@ object Pq {
       md.update(s"root:$p\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     buf.sorted.foreach(e =>
       md.update(s"$e\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    (java.util.Base64.getEncoder.encodeToString(md.digest), Option(first), sparkPaths)
+    (java.util.Base64.getEncoder.encodeToString(md.digest), Option(first),
+      if (sparkPaths.size <= spark.sessionState.conf.parallelPartitionDiscoveryThreshold) sparkPaths
+      else paths)
   }
 
   /** Open `file` with the read options of `conf`, the session's Hadoop
@@ -188,19 +194,11 @@ object Pq {
           try footerSchema(first).filter(decodable).map { s => decode(first, s)(rows += _); s }
           finally first.close()
         schema.map { s =>
-          localRows(conf, files.tail.toSeq, s)(rows += _)
+          files.tail.foreach(decodeLocal(conf, _, s)(rows += _))
           (s, rows.toSeq)
         }
       }
     } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Every record of `files`, a listing already made, passed to `emit`
-    * as [[decodeLocal]] emits it for the [[decodable]] `schema`, file by
-    * file. Throws where a file cannot be read as `schema`. */
-  private[graft] def localRows(conf: org.apache.hadoop.conf.Configuration,
-                               files: Seq[org.apache.hadoop.fs.Path],
-                               schema: StructType)(emit: Array[Any] => Unit): Unit =
-    files.foreach(decodeLocal(conf, _, schema)(emit))
 
   /** Whether [[decodeLocal]] reads every field of `schema`: flat
     * primitives (dates as INT32 epoch days) and arrays of them. */

@@ -145,6 +145,52 @@ class Bm25Spec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
+  test("a compacted generation grown past the listing threshold by appends still loads and serves with zero Spark jobs") {
+    val docs = Seq((1L, "apple banana"), (2L, "cherry apple"), (3L, "durian fig"),
+      (4L, "banana cherry"), (5L, "fig grape"), (6L, "grape apple"), (7L, "kiwi banana"),
+      (8L, "lime cherry"), (9L, "mango fig"), (10L, "apple lime")).toDF("doc_id", "text")
+    val queries = Seq((100L, "apple cherry"), (101L, "fig lime")).toDF("qid", "qtext")
+    val tmp = java.nio.file.Files.createTempDirectory("bm25_threshold").toString
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val threshold = 3
+    spark.conf.set(key, threshold.toString)
+    val group = s"bm25-threshold-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    try {
+      Bm25.buildAndSaveIncIndex(spark, docs.filter($"doc_id" <= 2), "doc_id", "text", tmp)
+      Bm25.deleteFromIncIndex(spark, tmp, Seq(2L).toDF("doc_id"), "doc_id")
+      Bm25.compactIncIndex(spark, tmp)
+      val postings = new java.io.File(Bm25.resolveTable(spark, tmp, "postings"))
+      assert(postings.getName.startsWith(".gen_"), postings)
+      def visible = postings.list().count(n => !n.startsWith(".") && !n.startsWith("_"))
+      var next = 3L
+      while (visible <= threshold && next <= 10L) {
+        Bm25.appendIncIndex(spark, tmp, docs.filter($"doc_id" === next), "doc_id", "text")
+        next += 1
+      }
+      assert(visible > threshold, s"only $visible postings files")
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setJobGroup(group, "local serve")
+      val served = try Bm25.topKAgainstIncIndex(Bm25.loadIncIndex(spark, tmp), queries,
+          "qid", "qtext", k = 3).as[(Long, Int, Long, Double)].collect().toSet
+        finally spark.sparkContext.clearJobGroup()
+      Thread.sleep(1000) // the listener bus delivers events asynchronously
+      assert(jobs.get == 0, s"loading and serving ran ${jobs.get} Spark jobs")
+      val want = Bm25.topK(docs.filter($"doc_id" < next && $"doc_id" =!= 2L), "doc_id", "text",
+        queries, "qid", "qtext", k = 3).as[(Long, Int, Long, Double)].collect().toSet
+      assert(served == want && served.nonEmpty)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset(key)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    }
+  }
+
   test("inc-index serving broadcasts the query side; appends leave no cache entries") {
     spark.catalog.clearCache()
     val docs = Seq((1L, "aa bb"), (2L, "bb cc"), (3L, "cc aa")).toDF("doc_id", "text")

@@ -187,4 +187,51 @@ class SummaryLocalServeSpec extends SparkSpec {
       assert(servedDistributed("compensated serve")(comp()) == baseRows(comp()))
     }
   }
+
+  test("a grain filter on a scalar subquery stays distributed with the base's rows") {
+    withDir { dir =>
+      Seq(("a", 1L), ("a", 2L), ("b", 3L), ("c", 4L)).toDF("g", "m").write.parquet(s"$dir/base")
+      Seq("b", "a").toDF("pick").write.parquet(s"$dir/picks")
+      val base = spark.read.parquet(s"$dir/base")
+      registerPlain(base, dir, Seq("g"), Seq("m"))
+      base.createOrReplaceTempView("summary_local_base")
+      spark.read.parquet(s"$dir/picks").createOrReplaceTempView("summary_local_picks")
+      try {
+        def q() = spark.sql("SELECT sum(m) AS s, count(*) AS n FROM summary_local_base " +
+          "WHERE g = (SELECT max(pick) FROM summary_local_picks)")
+        assert(RollupRewrite.scanRootPaths(q()).exists(_.contains("summary")))
+        val got = servedDistributed("subquery")(q())
+        assert(got == baseRows(q()) && got == Set(Row(3L, 1L)))
+      } finally {
+        spark.catalog.dropTempView("summary_local_base")
+        spark.catalog.dropTempView("summary_local_picks")
+      }
+    }
+  }
+
+  test("a batch the driver cannot decode as the scan's types serves distributed, counted once") {
+    withDir { dir =>
+      Seq(("a", 1L), ("a", 2L), ("b", 3L)).toDF("g", "m").write.parquet(s"$dir/base")
+      val base = spark.read.parquet(s"$dir/base")
+      // the file holds int measures; the relation reads them as bigint
+      val summary = Rollup.materialize(base, Seq("g"), Seq("m"))
+      summary.select(summary.schema.fields.toSeq.map { f =>
+        if (f.dataType == org.apache.spark.sql.types.LongType) col(f.name).cast("int").as(f.name)
+        else col(f.name)
+      }: _*).write.parquet(s"$dir/summary")
+      RollupRewrite.register(base, spark.read.schema(summary.schema).parquet(s"$dir/summary"),
+        Seq("g"), Seq("m"))
+      RollupRewrite.enable(spark)
+      def q() = base.groupBy("g").agg(sum("m").as("s"), count(lit(1)).as("n"))
+      val before = SummaryLocal.counters
+      val (rows, decisions) = serveDecisions(q().collect().toSet)
+      val after = SummaryLocal.counters
+      assert(after.localServes == before.localServes, decisions)
+      assert(after.distributedServes == before.distributedServes + 1, decisions)
+      assert(decisions.size == 2 && decisions.head.startsWith("summary serve regime=local") &&
+        decisions(1).startsWith("summary serve regime=distributed") &&
+        decisions(1).contains("refused=undecodable file"), decisions)
+      assert(rows == baseRows(q()) && rows == Set(Row("a", 3L, 2L), Row("b", 3L, 1L)))
+    }
+  }
 }
