@@ -766,56 +766,12 @@ object RollupRewrite {
     * file granularity. Fresh registrations are skipped; results come in
     * registration order.
     *
-    * One algebra serves every side list. Order the sides fact, dim1, …,
-    * dimk; unprimed sides are the REGISTERED state, primed the CURRENT
-    * listing, and RETAINED the surviving registered files.
-    *
-    *  - APPENDS fold via the TELESCOPING inner-join decomposition
-    *    (VERDICT r12 #1):
-    *    {{{
-    *      (F∪ΔF) ⋈ ∏(Di∪ΔDi)
-    *        = F ⋈ ∏ Di                                  (the stored summary)
-    *        ∪ ΔF ⋈ D1' ⋈ … ⋈ Dk'                       (fact term)
-    *        ∪ F ⋈ D1 ⋈ … ⋈ D(i−1) ⋈ ΔDi ⋈ D(i+1)' ⋈ … (one term per
-    *                                                    appended dim i)
-    *    }}}
-    *    Every join tuple lands in exactly ONE term, classified by the
-    *    FIRST side whose row is new, so the terms are pairwise disjoint
-    *    and [[Rollup.mergeAll]] folds their aggregates into the stored
-    *    summary. With k = 0 this is the plain delta aggregate; with
-    *    k = 1 the two-term `ΔF ⋈ D'` + `F ⋈ ΔD` fold. Cost asymmetry,
-    *    stated honestly: the fact term is delta-fact-sized (each dim
-    *    streams/broadcasts against the delta); each DIM term reads the
-    *    retained fact files — a registered-fact scan per appended dim,
-    *    pruned to the delta's join keys ([[Rollup.semiPruneByKeys]]) — but
-    *    no old×old pair re-aggregates and the merge stays summary-sized,
-    *    far cheaper than the rebuild's full star join.
-    *  - DELETES performed through [[deleteFiles]] (bytes linger in the
-    *    trash dirs) RETRACT SEQUENTIALLY in the fixed side order: side
-    *    i's removed rows join the RETAINED earlier sides and the SAVED
-    *    (retained ∪ trash) later ones — set-difference distributivity
-    *    over the inner join, each step's removed tuples exactly the
-    *    remainder, so several sides compacted in one window never
-    *    double-retract — and [[Rollup.retract]] applies to the joined
-    *    frame. The retraction is asymmetric by nature: sums and counts
-    *    subtract EXACTLY and groups whose row count hits zero drop;
-    *    min/max keep the stored value when the removed extremum provably
-    *    did not reach it, otherwise the group RECOMPUTES from the
-    *    retained state filtered to exactly the affected grains; KMV
-    *    sketches are insert-only, so every touched group of a
-    *    sketch-carrying layout recomputes (the q171 losslessness
-    *    contract). A dim delete reads the retained fact — the same honest
-    *    asymmetry as the dim append.
-    *  - MIXED diffs (appends AND removes in one stale window — a
-    *    compaction or overwrite through the trash protocol, e.g.
-    *    [[graft.sources.PathLifecycle.compactParquetTrash]]) compose:
-    *    retract, then the append terms over the retained states (VERDICT
-    *    r13 #1) — valid because each side's
-    *    `current = (registered ∖ removed) ∪ appended` with the file sets
-    *    disjoint.
-    *
-    * Float sums merge and retract with the usual reassociation noise;
-    * integer/decimal measures stay bit-exact. Unrefreshable
+    * The fold itself is [[Rollup.foldDiff]] — the one file-diff fold
+    * both summary tiers run (every [[RollupVersioned]] refresh folds
+    * through it too): appends telescope, trash deletes retract
+    * sequentially, mixed diffs compose. Float sums merge and retract
+    * with the usual reassociation noise; integer/decimal measures stay
+    * bit-exact. Unrefreshable
     * (`refreshed = false`): a removal whose files cannot be resolved in
     * `trashDirs` (bytes truly gone ⇒ nothing to retract — rebuild
     * territory), a side registered without a manifest, and — the
@@ -874,74 +830,20 @@ object RollupRewrite {
     else Some((removedPaths, resolved.flatten))
   }
 
-  /** Fold one stale registration's diff (see [[refreshStale]]); None ⇒
-    * unrefreshable. `current` holds every side's current manifest. */
+  /** Fold one stale registration's diff through [[Rollup.foldDiff]],
+    * write the result under `outDir` and re-register it (see
+    * [[refreshStale]]); None ⇒ unrefreshable. `current` holds every
+    * side's current manifest. */
   private def refreshOne(spark: SparkSession, d: RollupDef,
       current: Seq[Set[String]], outDir: String,
       trashDirs: Seq[String]): Option[RefreshResult] = {
-    if (d.sides.exists(_.manifest.isEmpty)) return None // nothing to diff against
-    val n = d.sides.size
     def read(files: Seq[String]) = graft.sources.Pq.read(spark, files: _*)
-    val app = d.sides.zip(current).map { case (s, c) => c -- s.manifest }
-    val rem = d.sides.zip(current).map { case (s, c) => s.manifest -- c }
-    // removed files resolve in the trash (original paths, removed rows)
-    val trash: Seq[Option[(Seq[String], DataFrame)]] = rem.map { r =>
-      if (r.isEmpty) None
-      else resolveRemoved(spark, r, trashDirs).map { case (orig, t) =>
-        (orig, read(t)) }.orElse(return None)
-    }
     val currentFrames = d.sides.map(s => read(s.paths.toSeq))
-    // RETAINED rows: the surviving registered files of a changed side the
-    // fold reads at that state (it removed rows, or a later side changed);
-    // otherwise the current read stands in
-    val anyRemoved = rem.exists(_.nonEmpty)
-    val retained = (0 until n).map { i =>
-      if (app(i).isEmpty && rem(i).isEmpty ||
-          !anyRemoved && !app.drop(i + 1).exists(_.nonEmpty)) currentFrames(i)
-      else {
-        val files = filesOf(d.sides(i).manifest -- rem(i))
-        if (files.nonEmpty) read(files)
-        else trash(i).fold(currentFrames(i))(_._2).limit(0) // every file removed
-      }
-    }
-    val deltas = app.map(a => if (a.isEmpty) None else Some(read(filesOf(a))))
-    val needed = neededColumns(spark, d, currentFrames.tail)
-    if (!(0 until n).forall(i => (Seq(retained(i)) ++ trash(i).map(_._2) ++
-        deltas(i)).forall(df => needed(i).subsetOf(df.columns.toSet))))
-      return None
     val keys = d.dims.map(_.keyPairs.toSeq)
-    def joinSides(frames: Seq[DataFrame]): DataFrame =
-      Rollup.starJoin(frames.head, frames.tail.zip(keys))
-    def saved(j: Int): DataFrame =
-      trash(j).fold(retained(j))(t => retained(j).unionByName(t._2))
-    val groupExprs = grainExprsOfSql(d.groupCols, d.grainExprSql)
-    val stored = read(storedPathsOf(d))
-    // side i's removals against the RETAINED earlier sides and the SAVED
-    // later ones; recompute groups read the retained join
-    val retracted = (0 until n).foldLeft(stored) { (summary, i) =>
-      trash(i).fold(summary) { case (_, removedRows) =>
-        def around(sideI: DataFrame) = (0 until n).map(j =>
-          if (j < i) retained(j) else if (j == i) sideI else saved(j))
-        Rollup.retract(summary, joinSides(around(removedRows)),
-          joinSides(around(retained(i))), groupExprs, d.measures,
-          d.distinctCols, d.sketchK, d.histCols)
-      }
-    }
-    // side i's appended rows against the RETAINED earlier sides and the
-    // CURRENT later ones; a dim term prunes the fact read to the delta's
-    // join keys (exact inner-join semi-filter, parquet-pushed)
-    val parts = (0 until n).flatMap { i =>
-      deltas(i).map { delta =>
-        val frames = (0 until n).map(j =>
-          if (j < i) retained(j) else if (j == i) delta else currentFrames(j))
-        val pruned = if (i == 0) frames else frames.updated(0,
-          Rollup.semiPruneByKeys(frames.head, delta, d.sides(i).keyPairs))
-        Rollup.materializeExpr(joinSides(pruned), groupExprs, d.measures,
-          d.distinctCols, d.sketchK, d.histCols)
-      }
-    }
-    val summary = Rollup.mergeAll(retracted, parts, d.groupCols, d.measures,
-      d.distinctCols, d.sketchK, d.histCols)
+    val (summary, appended, removed) = Rollup.foldDiff(spark,
+      d.sides.map(_.manifest), current, currentFrames, keys, d.groupCols,
+      d.grainExprSql, d.measures, d.distinctCols, d.sketchK, d.histCols,
+      read(storedPathsOf(d)), trashDirs).getOrElse(return None)
     val tag = Seq("", "j", "s")(math.min(d.dims.size, 2))
     val out = s"$outDir/refresh${tag}_${identDigest(d)}_" +
       manifestDigest(current.head ++ current.tail.zipWithIndex.flatMap {
@@ -952,47 +854,11 @@ object RollupRewrite {
       d.groupCols, d.measures, d.distinctCols, d.sketchK, d.histCols,
       d.grainExprSql.map { case (g, s) => g -> expr(s) })
     Some(RefreshResult(d.allPaths, d.groupCols, refreshed = true,
-      app.flatMap(filesOf), out, trash.flatten.flatMap(_._1)))
+      appended, out, removed))
   }
 
   private[plan] def filesOf(entries: Set[String]): Seq[String] =
     entries.toSeq.sorted.map(_.split("\\|")(0))
-
-  /** Per side (fact first), every column its bare reads of changed files
-    * must carry: the layout's grain references, measures and sketch
-    * columns living on that side, plus its join keys. A Hive partition
-    * column is absent from a bare (partition-discovery-free) read, so
-    * refreshes and compensation refuse instead of throwing
-    * mid-aggregation (ADVICE r11). */
-  private def neededColumns(spark: SparkSession, d: RollupDef,
-      dimFrames: Seq[DataFrame]): Seq[Set[String]] = {
-    val carried = (d.groupCols.filterNot(d.grainExprSql.contains) ++
-      grainRefNames(spark, d.grainExprSql) ++ d.measures ++
-      d.distinctCols ++ d.histCols).toSet
-    val dimCols = dimFrames.map(_.columns.toSet)
-    (carried.filterNot(c => dimCols.exists(_.contains(c))) ++
-      d.dims.flatMap(_.keyPairs.map(_._1))) +:
-      d.dims.indices.map(i =>
-        carried.filter(dimCols(i).contains) ++ d.dims(i).keyPairs.map(_._2))
-  }
-
-  /** Grain column expressions from (groupCols, snapshotted grain SQL):
-    * computed grains re-parse their SQL, plain grains are bare
-    * columns. */
-  private def grainExprsOfSql(groupCols: Seq[String],
-      grainExprSql: Map[String, String])
-      : Seq[(String, org.apache.spark.sql.Column)] =
-    groupCols.map(g => g -> grainExprSql.get(g).map(expr).getOrElse(col(g)))
-
-  /** Base columns a set of computed grains references — what the bare
-    * delta/trash reads must carry instead of the grain names. */
-  private def grainRefNames(spark: SparkSession,
-      grainExprSql: Map[String, String]): Seq[String] =
-    grainExprSql.values.toSeq.flatMap(s =>
-      spark.sessionState.sqlParser.parseExpression(s).collect {
-        case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          u.nameParts.last
-      })
 
   private def storedPathsOf(d: RollupDef): Seq[String] = {
     val paths = d.summary.collect {
@@ -1580,10 +1446,12 @@ object RollupRewrite {
         spliceDeltaUnion(key, d.summary, {
           val delta = graft.sources.Pq.read(spark, filesOf(appended): _*)
           val dims = d.dims.map(s => graft.sources.Pq.read(spark, s.paths.toSeq: _*))
-          if (!neededColumns(spark, d, dims).head.subsetOf(delta.columns.toSet)) None
+          val needed = Rollup.neededColumns(spark, d.groupCols, d.grainExprSql,
+            d.measures, d.distinctCols, d.histCols, d.dims.map(_.keyPairs), dims)
+          if (!needed.head.subsetOf(delta.columns.toSet)) None
           else Some(Rollup.materializeExpr(
             Rollup.starJoin(delta, dims.zip(d.dims.map(_.keyPairs))),
-            grainExprsOfSql(d.groupCols, d.grainExprSql), d.measures,
+            Rollup.grainExprs(d.groupCols, d.grainExprSql), d.measures,
             d.distinctCols, d.sketchK, d.histCols))
         })
       } finally inCompensation.set(java.lang.Boolean.FALSE)
@@ -1964,6 +1832,7 @@ object RollupRewrite {
             case _: org.apache.spark.sql.types.DecimalType =>
               Multiply(acc,
                 Cast(cnt, org.apache.spark.sql.types.DecimalType(20, 0)))
+            case dt if dt == cnt.dataType => Multiply(acc, cnt)
             case dt => Multiply(acc, Cast(cnt, dt))
           }
         }
@@ -2302,9 +2171,9 @@ object Rollup {
     }
 
   /** Retract `removedDf`'s ROWS from `stored` (a [[materialize]] /
-    * [[materializeExpr]] output over `groupExprs`) — the shared
-    * retraction arithmetic behind [[RollupRewrite.refreshStale]]'s
-    * delete path (q194) and [[RollupVersioned.refreshRemoved]]:
+    * [[materializeExpr]] output over `groupExprs`) — the retraction
+    * arithmetic behind [[foldDiff]]'s delete path (q194/q217), so every
+    * refresh of both summary tiers:
     *
     *  - sums and counts subtract EXACTLY; groups whose row count hits
     *    zero drop entirely;
@@ -2445,4 +2314,171 @@ object Rollup {
       deltas.foldLeft(stored)(_ unionByName _)
         .groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
     }
+
+  /** Grain column expressions from (groupCols, grain SQL): computed
+    * grains re-parse their SQL, plain grains are bare columns. */
+  private[plan] def grainExprs(groupCols: Seq[String],
+      grainSql: Map[String, String]): Seq[(String, org.apache.spark.sql.Column)] =
+    groupCols.map(g => g -> grainSql.get(g).map(expr).getOrElse(col(g)))
+
+  /** Per side (fact first), every column its bare reads of changed files
+    * must carry: the layout's grain references (the base columns a
+    * computed grain's SQL names), measures and sketch columns living on
+    * that side, plus its join keys. A Hive partition column is absent
+    * from a bare (partition-discovery-free) read, so refreshes and
+    * compensation refuse instead of throwing mid-aggregation
+    * (ADVICE r11). */
+  private[plan] def neededColumns(spark: SparkSession, groupCols: Seq[String],
+      grainSql: Map[String, String], measures: Seq[String],
+      distinctCols: Seq[String], histCols: Seq[String],
+      keys: Seq[Iterable[(String, String)]],
+      dimFrames: Seq[DataFrame]): Seq[Set[String]] = {
+    val grainRefs = grainSql.values.toSeq.flatMap(s =>
+      spark.sessionState.sqlParser.parseExpression(s).collect {
+        case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+          u.nameParts.last
+      })
+    val carried = (groupCols.filterNot(grainSql.contains) ++ grainRefs ++
+      measures ++ distinctCols ++ histCols).toSet
+    val dimCols = dimFrames.map(_.columns.toSet)
+    (carried.filterNot(c => dimCols.exists(_.contains(c))) ++
+      keys.flatMap(_.map(_._1))) +:
+      dimCols.indices.map(i => carried.filter(dimCols(i).contains) ++ keys(i).map(_._2))
+  }
+
+  /** THE FILE-DIFF FOLD behind both summary tiers —
+    * [[RollupRewrite.refreshStale]] and every [[RollupVersioned]]
+    * refresh: fold the diff of a side list `fact ⋈ dim1 ⋈ … ⋈ dimk`
+    * from its `saved` to its `current` `path|len|mtime` manifests (fact
+    * first) into `stored`, the summary over the saved state. `frames`
+    * read each side's current state, `keys(i)` are dim i+1's (fact col,
+    * dim col) pairs, and the layout is the [[materializeExpr]] one
+    * (`grainSql` holds computed grains' SQL). Writes nothing: returns
+    * (folded summary, appended files, removed original paths), and the
+    * caller commits the summary its own way — then releases its
+    * retraction checkpoints ([[Checkpoints.releaseInputs]]).
+    *
+    * One algebra serves every side list. Order the sides fact, dim1, …,
+    * dimk; unprimed sides are the SAVED state (`saved`), primed the CURRENT
+    * listing (`current`), and RETAINED the surviving saved files.
+    *
+    *  - APPENDS fold via the TELESCOPING inner-join decomposition
+    *    (VERDICT r12 #1):
+    *    {{{
+    *      (F∪ΔF) ⋈ ∏(Di∪ΔDi)
+    *        = F ⋈ ∏ Di                                  (the stored summary)
+    *        ∪ ΔF ⋈ D1' ⋈ … ⋈ Dk'                       (fact term)
+    *        ∪ F ⋈ D1 ⋈ … ⋈ D(i−1) ⋈ ΔDi ⋈ D(i+1)' ⋈ … (one term per
+    *                                                    appended dim i)
+    *    }}}
+    *    Every join tuple lands in exactly ONE term, classified by the
+    *    FIRST side whose row is new, so the terms are pairwise disjoint
+    *    and [[Rollup.mergeAll]] folds their aggregates into the stored
+    *    summary. With k = 0 this is the plain delta aggregate; with
+    *    k = 1 the two-term `ΔF ⋈ D'` + `F ⋈ ΔD` fold. Cost asymmetry,
+    *    stated honestly: the fact term is delta-fact-sized (each dim
+    *    streams/broadcasts against the delta); each DIM term reads the
+    *    retained fact files — a saved-fact scan per appended dim,
+    *    pruned to the delta's join keys ([[Rollup.semiPruneByKeys]]) — but
+    *    no old×old pair re-aggregates and the merge stays summary-sized,
+    *    far cheaper than the rebuild's full star join.
+    *  - DELETES performed through [[deleteFiles]] (bytes linger in the
+    *    trash dirs) RETRACT SEQUENTIALLY in the fixed side order: side
+    *    i's removed rows join the RETAINED earlier sides and the SAVED
+    *    (retained ∪ trash) later ones — set-difference distributivity
+    *    over the inner join, each step's removed tuples exactly the
+    *    remainder, so several sides compacted in one window never
+    *    double-retract — and [[Rollup.retract]] applies to the joined
+    *    frame. The retraction is asymmetric by nature: sums and counts
+    *    subtract EXACTLY and groups whose row count hits zero drop;
+    *    min/max keep the stored value when the removed extremum provably
+    *    did not reach it, otherwise the group RECOMPUTES from the
+    *    retained state filtered to exactly the affected grains; KMV
+    *    sketches are insert-only, so every touched group of a
+    *    sketch-carrying layout recomputes (the q171 losslessness
+    *    contract). A dim delete reads the retained fact — the same honest
+    *    asymmetry as the dim append.
+    *  - MIXED diffs (appends AND removes in one stale window — a
+    *    compaction or overwrite through the trash protocol, e.g.
+    *    [[graft.sources.PathLifecycle.compactParquetTrash]]) compose:
+    *    retract, then the append terms over the retained states (VERDICT
+    *    r13 #1) — valid because each side's
+    *    `current = (registered ∖ removed) ∪ appended` with the file sets
+    *    disjoint.
+    *
+    * Float sums merge and retract with the usual reassociation noise;
+    * integer/decimal measures stay bit-exact. None ⇒ unfoldable: a side
+    * saved without a manifest, a removal whose files cannot be resolved
+    * in `trashDirs` (bytes truly gone ⇒ nothing to retract), or a bare
+    * read missing a needed column ([[neededColumns]]). */
+  private[plan] def foldDiff(spark: SparkSession,
+      saved: Seq[Set[String]], current: Seq[Set[String]],
+      frames: Seq[DataFrame], keys: Seq[Seq[(String, String)]],
+      groupCols: Seq[String], grainSql: Map[String, String],
+      measures: Seq[String], distinctCols: Seq[String], sketchK: Int,
+      histCols: Seq[String], stored: DataFrame, trashDirs: Seq[String])
+      : Option[(DataFrame, Seq[String], Seq[String])] = {
+    import RollupRewrite.{filesOf, resolveRemoved}
+    if (saved.exists(_.isEmpty)) return None // nothing to diff against
+    val n = frames.size
+    def read(files: Seq[String]) = graft.sources.Pq.read(spark, files: _*)
+    val app = current.zip(saved).map { case (c, s) => c -- s }
+    val rem = saved.zip(current).map { case (s, c) => s -- c }
+    // removed files resolve in the trash (original paths, removed rows)
+    val trash: Seq[Option[(Seq[String], DataFrame)]] = rem.map { r =>
+      if (r.isEmpty) None
+      else resolveRemoved(spark, r, trashDirs).map { case (orig, t) =>
+        (orig, read(t)) }.orElse(return None)
+    }
+    // RETAINED rows: the surviving saved files of a changed side the fold
+    // reads at that state (it removed rows, or a later side changed);
+    // otherwise the current frame stands in
+    val anyRemoved = rem.exists(_.nonEmpty)
+    val retained = (0 until n).map { i =>
+      if (app(i).isEmpty && rem(i).isEmpty ||
+          !anyRemoved && !app.drop(i + 1).exists(_.nonEmpty)) frames(i)
+      else {
+        val files = filesOf(saved(i) -- rem(i))
+        if (files.nonEmpty) read(files)
+        else trash(i).fold(frames(i))(_._2).limit(0) // every file removed
+      }
+    }
+    val deltas = app.map(a => if (a.isEmpty) None else Some(read(filesOf(a))))
+    val needed = neededColumns(spark, groupCols, grainSql, measures,
+      distinctCols, histCols, keys, frames.tail)
+    if (!(0 until n).forall(i => (Seq(retained(i)) ++ trash(i).map(_._2) ++
+        deltas(i)).forall(df => needed(i).subsetOf(df.columns.toSet))))
+      return None
+    def joinSides(sides: Seq[DataFrame]): DataFrame =
+      starJoin(sides.head, sides.tail.zip(keys))
+    def savedAt(j: Int): DataFrame =
+      trash(j).fold(retained(j))(t => retained(j).unionByName(t._2))
+    val groupExprs = grainExprs(groupCols, grainSql)
+    // side i's removals against the RETAINED earlier sides and the SAVED
+    // later ones; recompute groups read the retained join
+    val retracted = (0 until n).foldLeft(stored) { (summary, i) =>
+      trash(i).fold(summary) { case (_, removedRows) =>
+        def around(sideI: DataFrame) = (0 until n).map(j =>
+          if (j < i) retained(j) else if (j == i) sideI else savedAt(j))
+        retract(summary, joinSides(around(removedRows)),
+          joinSides(around(retained(i))), groupExprs, measures,
+          distinctCols, sketchK, histCols)
+      }
+    }
+    // side i's appended rows against the RETAINED earlier sides and the
+    // CURRENT later ones; a dim term prunes the fact read to the delta's
+    // join keys (exact inner-join semi-filter, parquet-pushed)
+    val parts = (0 until n).flatMap { i =>
+      deltas(i).map { delta =>
+        val sides = (0 until n).map(j =>
+          if (j < i) retained(j) else if (j == i) delta else frames(j))
+        val pruned = if (i == 0) sides else sides.updated(0,
+          semiPruneByKeys(sides.head, delta, keys(i - 1)))
+        materializeExpr(joinSides(pruned), groupExprs, measures,
+          distinctCols, sketchK, histCols)
+      }
+    }
+    Some((mergeAll(retracted, parts, groupCols, measures, distinctCols,
+      sketchK, histCols), app.flatMap(filesOf), trash.flatten.flatMap(_._1)))
+  }
 }

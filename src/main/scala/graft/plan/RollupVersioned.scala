@@ -1,7 +1,6 @@
 package graft.plan
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.sources.{Snapshots, VersionedPool}
 
@@ -55,19 +54,23 @@ import graft.sources.{Snapshots, VersionedPool}
   * ONE SIDE-LIST CORE (r14, VERDICT r13 #5): the plain, JOINED (AJI,
   * r13) and STAR (r13) shapes are one implementation over a
   * `fact ⋈ dim1 ⋈ … ⋈ dimk` side list — plain is k = 0, joined k = 1,
-  * star k ≥ 2. Appends fold via the q212 TELESCOPING decomposition
-  * (`ΔF ⋈ dims_cur` plus one `F_saved ⋈ dims<i SAVED ⋈ ΔDi ⋈ dims>i
-  * cur` term per appended dim — with k = 0 that degenerates to the
-  * plain delta aggregate, with k = 1 to the q206 two-term fold);
-  * single-side trash deletes retract via the q217 set-difference
-  * algebra ([[Rollup.retract]] applies verbatim to the joined frame,
-  * and with k = 0 to the base itself). Only the META DIALECT and the
-  * registration entry point differ per shape, kept byte-compatible
-  * with the r13 per-shape formats: plain metas carry no key/dim rows,
-  * joined metas `kind='key'`/`'dimfile'`, star metas
+  * star k ≥ 2 — and every refresh folds through ONE fold,
+  * [[Rollup.foldDiff]], the same fold [[RollupRewrite.refreshStale]]
+  * runs: appends via the q212 TELESCOPING decomposition (`ΔF ⋈
+  * dims_cur` plus one `F_saved ⋈ dims<i SAVED ⋈ ΔDi ⋈ dims>i cur` term
+  * per appended dim — with k = 0 the plain delta aggregate, with k = 1
+  * the q206 two-term fold), trash deletes via the q217 set-difference
+  * retraction ([[Rollup.retract]] over the joined frame), mixed diffs
+  * (q221) as sequential retraction ∘ append fold. The three entry kinds
+  * differ only in which diffs they accept — classified once, by the
+  * number of appended and removed sides — and they commit with
+  * [[Snapshots.publish]] instead of a re-registration. Only the META
+  * DIALECT and the registration entry point differ per shape, kept
+  * byte-compatible with the r13 per-shape formats: plain metas carry no
+  * key/dim rows, joined metas `kind='key'`/`'dimfile'`, star metas
   * `kind='keyI'`/`'dimfileI'`. */
 object RollupVersioned {
-  import RollupRewrite.{filesOf, resolveRemoved}
+  import RollupRewrite.filesOf
 
   /** The summary layout, fixed at [[init]] and carried in every
     * version's meta. */
@@ -255,8 +258,8 @@ object RollupVersioned {
   }
 
   // ---------------------------------------------------------------------
-  // the side-list core: init / telescoped append fold / single-side
-  // retraction — shared verbatim by all three shapes
+  // the side-list core: init and the refresh classification around
+  // Rollup.foldDiff — shared verbatim by all three shapes
   // ---------------------------------------------------------------------
 
   private def initCore(spark: SparkSession, root: String, fact: DataFrame,
@@ -270,242 +273,39 @@ object RollupVersioned {
       dims.map { case (d, keys) => (keys, baseEntries(d)) })
   }
 
-  /** The saved state + current diff every maintenance op needs. */
-  private case class SideState(layout: Layout, sketchK: Int,
-      keys: Seq[Seq[(String, String)]],
-      savedF: Set[String], savedD: Seq[Set[String]],
-      curF: Set[String], curDs: Seq[Set[String]],
-      neededFact: Set[String], neededDim: Seq[Set[String]])
-
-  private def sideState(spark: SparkSession, root: String,
-      fact: DataFrame, dims: Dims): Option[SideState] = {
+  /** Every refresh entry: read the latest version's meta ONCE, classify
+    * each side's current manifest against it, and — when the entry
+    * `accepts` (appended sides, removed sides) — fold the diff with
+    * [[Rollup.foldDiff]], the fold [[RollupRewrite.refreshStale]] runs,
+    * and publish the result as a new version. Grains are plain columns
+    * here. None when the entry refuses the diff kind, or the fold does
+    * (unresolvable trash, a bare read missing a needed column). */
+  private def refreshCore(spark: SparkSession, root: String,
+      fact: DataFrame, dims: Seq[DataFrame], trashDirs: Seq[String])(
+      accepts: (Int, Int) => Boolean): Option[Int] = {
     val meta = readMetaL(spark, root)
     val n = metaDimCount(meta)
     require(dims.size == n, s"expected $n dims, got ${dims.size}")
-    val layout = layoutOf(meta)
+    val (layout, sketchK) = (layoutOf(meta), sketchKOf(meta))
     val keys = (0 until n).map(metaKeysOf(meta, n, _))
-    val savedF = baseEntriesOf(meta)
-    val savedD = (0 until n).map(metaDimEntriesOf(meta, n, _))
-    if (savedF.isEmpty || savedD.exists(_.isEmpty)) return None
-    val dimCols = dims.flatMap(_._1.columns).toSet
-    val carried = (layout.groupCols ++ layout.measures ++
-      layout.distinctCols ++ layout.histCols).toSet
-    Some(SideState(layout, sketchKOf(meta), keys,
-      savedF, savedD,
-      baseEntries(fact).toSet, dims.map { case (d, _) => baseEntries(d).toSet },
-      carried.filterNot(dimCols.contains) ++ keys.flatten.map(_._1),
-      (0 until n).map(i =>
-        carried.filter(dims(i)._1.columns.contains).toSet ++
-          keys(i).map(_._2))))
+    val saved = baseEntriesOf(meta) +: (0 until n).map(metaDimEntriesOf(meta, n, _))
+    val frames = fact +: dims
+    val current = frames.map(baseEntries(_).toSet)
+    val appended = current.zip(saved).count { case (c, s) => (c -- s).nonEmpty }
+    val removed = saved.zip(current).count { case (s, c) => (s -- c).nonEmpty }
+    if (!accepts(appended, removed)) return None
+    Rollup.foldDiff(spark, saved, current, frames, keys, layout.groupCols,
+      Map.empty, layout.measures, layout.distinctCols, sketchK,
+      layout.histCols, summaryAt(spark, root, meta), trashDirs).map {
+      case (folded, _, _) => publishState(spark, root, layout, sketchK,
+        folded, current.head.toSeq, keys.zip(current.tail.map(_.toSeq)))
+    }
   }
 
-  /** The q212 TELESCOPING append fold over the side list — `ΔF ⋈
-    * dims_cur` plus one `F_saved ⋈ dims<i SAVED ⋈ ΔDi ⋈ dims>i cur`
-    * term per appended dim, pairwise disjoint by first-new-side; k = 0
-    * degenerates to the plain delta aggregate, k = 1 to the q206
-    * two-term fold. None on any removal, an empty diff, or a bare read
-    * missing a needed column. */
-  private def refreshAppendedCore(spark: SparkSession, root: String,
-      fact: DataFrame, dims: Dims): Option[Int] = {
-    val st = sideState(spark, root, fact, dims).getOrElse(return None)
-    val n = dims.size
-    val fApp = st.curF -- st.savedF
-    val dApps = (0 until n).map(i => st.curDs(i) -- st.savedD(i))
-    if ((st.savedF -- st.curF).nonEmpty ||
-        (0 until n).exists(i => (st.savedD(i) -- st.curDs(i)).nonEmpty))
-      return None
-    if (fApp.isEmpty && dApps.forall(_.isEmpty)) return None
-    def agg(df: DataFrame) = Rollup.materialize(df, st.layout.groupCols,
-      st.layout.measures, st.layout.distinctCols, st.sketchK,
-      st.layout.histCols)
-    val dimCur = (0 until n).map(i => dims(i)._1 -> st.keys(i))
-    lazy val dimSaved = (0 until n).map(i =>
-      graft.sources.Pq.read(spark, filesOf(st.savedD(i)): _*) -> st.keys(i))
-    val parts = Seq.newBuilder[DataFrame]
-    if (fApp.nonEmpty) {
-      val deltaFact = graft.sources.Pq.read(spark, filesOf(fApp): _*)
-      if (!st.neededFact.subsetOf(deltaFact.columns.toSet)) return None
-      parts += agg(Rollup.starJoin(deltaFact, dimCur))
-    }
-    if (dApps.exists(_.nonEmpty)) {
-      val savedFact = graft.sources.Pq.read(spark, filesOf(st.savedF): _*)
-      if (!st.neededFact.subsetOf(savedFact.columns.toSet)) return None
-      (0 until n).foreach { i =>
-        if (dApps(i).nonEmpty) {
-          val deltaDim = graft.sources.Pq.read(spark, filesOf(dApps(i)): _*)
-          if (!st.neededDim(i).subsetOf(deltaDim.columns.toSet)) return None
-          if ((0 until i).exists(j =>
-              !st.neededDim(j).subsetOf(dimSaved(j)._1.columns.toSet)))
-            return None
-          val sides = (0 until n).map { j =>
-            if (j < i) dimSaved(j)
-            else if (j == i) deltaDim -> st.keys(i)
-            else dimCur(j)
-          }
-          // prune the saved-fact read to ΔDi's join keys (exact inner-
-          // join semi-filter, parquet-pushed — Rollup.semiPruneByKeys)
-          parts += agg(Rollup.starJoin(
-            Rollup.semiPruneByKeys(savedFact, deltaDim, st.keys(i)), sides))
-        }
-      }
-    }
-    val merged = Rollup.mergeAll(summaryOf(spark, root, None),
-      parts.result(), st.layout.groupCols, st.layout.measures,
-      st.layout.distinctCols, st.sketchK, st.layout.histCols)
-    Some(publishState(spark, root, st.layout, st.sketchK, merged,
-      st.curF.toSeq,
-      (0 until n).map(i => (st.keys(i), st.curDs(i).toSeq))))
-  }
-
-  /** The q217 single-side retraction over the side list: the removed
-    * tuples are exactly `removed-side rows ⋈ every other side`
-    * (set-difference distributivity), so [[Rollup.retract]] applies
-    * verbatim to the joined frame — and with k = 0 to the base itself.
-    * None on mixed diffs, multi-side deletes, unresolvable trash, or a
-    * bare read missing a needed column. */
-  private def refreshRemovedCore(spark: SparkSession, root: String,
-      fact: DataFrame, dims: Dims, trashDirs: Seq[String]): Option[Int] = {
-    val st = sideState(spark, root, fact, dims).getOrElse(return None)
-    val n = dims.size
-    val fRem = st.savedF -- st.curF
-    val dRems = (0 until n).map(i => st.savedD(i) -- st.curDs(i))
-    if ((st.curF -- st.savedF).nonEmpty ||
-        (0 until n).exists(i => (st.curDs(i) -- st.savedD(i)).nonEmpty))
-      return None
-    val remSides = (if (fRem.nonEmpty) 1 else 0) + dRems.count(_.nonEmpty)
-    if (remSides != 1) return None
-    val rem = if (fRem.nonEmpty) fRem else dRems.find(_.nonEmpty).get
-    val trash = resolveRemoved(spark, rem, trashDirs).map(_._2)
-      .getOrElse(return None)
-    val removedDf = graft.sources.Pq.read(spark, trash: _*)
-    val dimCur = (0 until n).map(i => dims(i)._1 -> st.keys(i))
-    val removedJoined =
-      if (fRem.nonEmpty) {
-        if (!st.neededFact.subsetOf(removedDf.columns.toSet) ||
-            !st.neededFact.subsetOf(fact.columns.toSet)) return None
-        Rollup.starJoin(removedDf, dimCur)
-      } else {
-        val i = dRems.indexWhere(_.nonEmpty)
-        if (!st.neededDim(i).subsetOf(removedDf.columns.toSet)) return None
-        Rollup.starJoin(fact, (0 until n).map(j =>
-          if (j == i) removedDf -> st.keys(i) else dimCur(j)))
-      }
-    val retracted = Rollup.retract(summaryOf(spark, root, None),
-      removedJoined, Rollup.starJoin(fact, dimCur),
-      st.layout.groupCols.map(g => g -> col(g)), st.layout.measures,
-      st.layout.distinctCols, st.sketchK, st.layout.histCols)
-    Some(publishState(spark, root, st.layout, st.sketchK, retracted,
-      st.curF.toSeq,
-      (0 until n).map(i => (st.keys(i), st.curDs(i).toSeq))))
-  }
-
-  /** The q221 MIXED-diff composition over the side list (r14, fully
-    * generalized): ANY trash-resolvable diff folds into one new
-    * version. Removals retract SEQUENTIALLY in the fixed side order
-    * (fact, d1, …, dk) — fact removals against every dim at its SAVED
-    * state, each dim i's removals against the RETAINED states of
-    * earlier sides and SAVED states of later ones, so each step's
-    * removed tuples are exactly the remainder and nothing
-    * double-retracts even with several sides compacted in one window.
-    * SAVED = retained ∪ the removed rows read from TRASH (a removed
-    * side's original paths are gone; its bytes linger there). The
-    * append terms are the q212 telescoping over retained states. One
-    * batch + ONE publish. None on pure diffs (use the append/remove
-    * ops), unresolvable trash, or a bare read missing a needed
-    * column. */
-  private def refreshMixedCore(spark: SparkSession, root: String,
-      fact: DataFrame, dims: Dims, trashDirs: Seq[String]): Option[Int] = {
-    val st = sideState(spark, root, fact, dims).getOrElse(return None)
-    val n = dims.size
-    val fApp = st.curF -- st.savedF
-    val fRem = st.savedF -- st.curF
-    val dApps = (0 until n).map(i => st.curDs(i) -- st.savedD(i))
-    val dRems = (0 until n).map(i => st.savedD(i) -- st.curDs(i))
-    if (fRem.isEmpty && dRems.forall(_.isEmpty))
-      return None // pure appends → refreshAppended*
-    if (fApp.isEmpty && dApps.forall(_.isEmpty))
-      return None // pure delete → refreshRemoved*
-    def trashFrame(rem: Set[String]): Option[Option[DataFrame]] =
-      if (rem.isEmpty) Some(None)
-      else resolveRemoved(spark, rem, trashDirs).map(_._2)
-        .map(t => Some(graft.sources.Pq.read(spark, t: _*)))
-    val remFactOpt = trashFrame(fRem).getOrElse(return None)
-    val remDims = (0 until n).map(i =>
-      trashFrame(dRems(i)).getOrElse(return None))
-    def bare(files: Seq[String], fallback: => DataFrame): DataFrame =
-      if (files.nonEmpty) graft.sources.Pq.read(spark, files: _*) else fallback
-    val retF =
-      if (fRem.isEmpty) {
-        if (fApp.isEmpty) fact
-        else bare(filesOf(st.savedF), fact.limit(0))
-      } else bare(filesOf(st.savedF -- fRem), remFactOpt.get.limit(0))
-    val factSaved = remFactOpt.fold(retF)(retF.unionByName(_))
-    val retDsFrames = (0 until n).map { i =>
-      if (dRems(i).isEmpty) {
-        if (dApps(i).isEmpty) dims(i)._1
-        else bare(filesOf(st.savedD(i)), dims(i)._1.limit(0))
-      } else bare(filesOf(st.savedD(i) -- dRems(i)),
-        remDims(i).get.limit(0))
-    }
-    val dimSaved = (0 until n).map(i =>
-      remDims(i).fold(retDsFrames(i))(retDsFrames(i).unionByName(_)))
-    if (!(Seq(retF, factSaved) ++ remFactOpt).forall(df =>
-          st.neededFact.subsetOf(df.columns.toSet)) ||
-        (0 until n).exists(i =>
-          !(Seq(retDsFrames(i), dimSaved(i)) ++ remDims(i)).forall(df =>
-            st.neededDim(i).subsetOf(df.columns.toSet)))) return None
-    val retDims: Dims = (0 until n).map(i => retDsFrames(i) -> st.keys(i))
-    val dimCur = (0 until n).map(i => dims(i)._1 -> st.keys(i))
-    def agg(df: DataFrame) = Rollup.materialize(df, st.layout.groupCols,
-      st.layout.measures, st.layout.distinctCols, st.sketchK,
-      st.layout.histCols)
-    var summary = summaryOf(spark, root, None)
-    remFactOpt.foreach { rf =>
-      val savedSides: Dims = (0 until n).map(i => dimSaved(i) -> st.keys(i))
-      summary = Rollup.retract(summary, Rollup.starJoin(rf, savedSides),
-        Rollup.starJoin(retF, savedSides),
-        st.layout.groupCols.map(g => g -> col(g)), st.layout.measures,
-        st.layout.distinctCols, st.sketchK, st.layout.histCols)
-    }
-    (0 until n).foreach { i =>
-      remDims(i).foreach { rd =>
-        def mixSides(dimI: DataFrame): Dims = (0 until n).map { j =>
-          (if (j < i) retDsFrames(j)
-           else if (j == i) dimI
-           else dimSaved(j)) -> st.keys(j)
-        }
-        summary = Rollup.retract(summary, Rollup.starJoin(retF, mixSides(rd)),
-          Rollup.starJoin(retF, mixSides(retDsFrames(i))),
-          st.layout.groupCols.map(g => g -> col(g)), st.layout.measures,
-          st.layout.distinctCols, st.sketchK, st.layout.histCols)
-      }
-    }
-    val parts = Seq.newBuilder[DataFrame]
-    if (fApp.nonEmpty) {
-      val deltaFact = graft.sources.Pq.read(spark, filesOf(fApp): _*)
-      if (!st.neededFact.subsetOf(deltaFact.columns.toSet)) return None
-      parts += agg(Rollup.starJoin(deltaFact, dimCur))
-    }
-    (0 until n).foreach { i =>
-      if (dApps(i).nonEmpty) {
-        val deltaDim = graft.sources.Pq.read(spark, filesOf(dApps(i)): _*)
-        if (!st.neededDim(i).subsetOf(deltaDim.columns.toSet)) return None
-        val sides = (0 until n).map { j =>
-          if (j < i) retDims(j)
-          else if (j == i) deltaDim -> st.keys(i)
-          else dimCur(j)
-        }
-        parts += agg(Rollup.starJoin(
-          Rollup.semiPruneByKeys(retF, deltaDim, st.keys(i)), sides))
-      }
-    }
-    val merged = Rollup.mergeAll(summary, parts.result(),
-      st.layout.groupCols, st.layout.measures, st.layout.distinctCols,
-      st.sketchK, st.layout.histCols)
-    Some(publishState(spark, root, st.layout, st.sketchK, merged,
-      st.curF.toSeq,
-      (0 until n).map(i => (st.keys(i), st.curDs(i).toSeq))))
-  }
+  // the diff kinds each entry folds, by (appended sides, removed sides)
+  private val PureAppend = (a: Int, r: Int) => a > 0 && r == 0
+  private val SingleSideDelete = (a: Int, r: Int) => a == 0 && r == 1
+  private val Mixed = (a: Int, r: Int) => a > 0 && r > 0
 
   /** As-of state of version v (latest when None): the meta plus
     * explicit reads of exactly the manifests the version aggregated. */
@@ -539,7 +339,7 @@ object RollupVersioned {
     * empty. */
   def refreshAppended(spark: SparkSession, root: String,
                       base: DataFrame): Option[Int] =
-    refreshAppendedCore(spark, root, base, Nil)
+    refreshCore(spark, root, base, Nil, Nil)(PureAppend)
 
   /** Fold a PURE DELETE (files moved out of the base through
     * [[RollupRewrite.deleteFiles]]' trash protocol — bytes linger for
@@ -556,7 +356,7 @@ object RollupVersioned {
     * delete path). */
   def refreshRemoved(spark: SparkSession, root: String, base: DataFrame,
                      trashDirs: Seq[String]): Option[Int] =
-    refreshRemovedCore(spark, root, base, Nil, trashDirs)
+    refreshCore(spark, root, base, Nil, trashDirs)(SingleSideDelete)
 
   /** Fold a MIXED diff (removes AND appends in one window — a
     * trash-protocol compaction of the base, e.g.
@@ -567,15 +367,18 @@ object RollupVersioned {
     * a bare read missing a needed column. */
   def refreshMixed(spark: SparkSession, root: String, base: DataFrame,
                    trashDirs: Seq[String]): Option[Int] =
-    refreshMixedCore(spark, root, base, Nil, trashDirs)
+    refreshCore(spark, root, base, Nil, trashDirs)(Mixed)
 
   /** Version v's summary frame (latest when None) — a plain scan of its
     * immutable pool batch, serving-stable while maintenance publishes. */
   def summaryOf(spark: SparkSession, root: String,
-                version: Option[Int]): DataFrame = {
-    val batches = readMetaL(spark, root, version).keysOf("batch").sorted
-    graft.sources.Pq.read(spark, batches.map(VersionedPool.poolPath(root, _)).toIndexedSeq: _*)
-  }
+                version: Option[Int]): DataFrame =
+    summaryAt(spark, root, readMetaL(spark, root, version))
+
+  private def summaryAt(spark: SparkSession, root: String,
+                        meta: MetaL): DataFrame =
+    graft.sources.Pq.read(spark, meta.keysOf("batch").sorted
+      .map(VersionedPool.poolPath(root, _)).toIndexedSeq: _*)
 
   /** Register version v (latest when None) with [[RollupRewrite]] and
     * return the AS-OF base frame its dashboards should query: an
@@ -624,10 +427,8 @@ object RollupVersioned {
     * a fresh root), an empty diff, or a bare read missing a needed
     * column. Old versions stay readable and pinnable. */
   def refreshAppendedJoined(spark: SparkSession, root: String,
-                            fact: DataFrame, dim: DataFrame): Option[Int] = {
-    val keys = metaKeysOf(readMetaL(spark, root), 1, 0)
-    refreshAppendedCore(spark, root, fact, Seq(dim -> keys))
-  }
+                            fact: DataFrame, dim: DataFrame): Option[Int] =
+    refreshCore(spark, root, fact, Seq(dim), Nil)(PureAppend)
 
   /** Fold a PURE SINGLE-SIDE DELETE (files trash-moved through
     * [[RollupRewrite.deleteFiles]]) into a NEW version of the versioned
@@ -642,10 +443,8 @@ object RollupVersioned {
     * column. */
   def refreshRemovedJoined(spark: SparkSession, root: String,
                            fact: DataFrame, dim: DataFrame,
-                           trashDirs: Seq[String]): Option[Int] = {
-    val keys = metaKeysOf(readMetaL(spark, root), 1, 0)
-    refreshRemovedCore(spark, root, fact, Seq(dim -> keys), trashDirs)
-  }
+                           trashDirs: Seq[String]): Option[Int] =
+    refreshCore(spark, root, fact, Seq(dim), trashDirs)(SingleSideDelete)
 
   /** [[refreshMixed]] at AJI width: any trash-resolvable diff folds
     * as sequential retraction ∘ append-fold into one new version —
@@ -653,10 +452,8 @@ object RollupVersioned {
     * pure diffs (use the append/remove ops). */
   def refreshMixedJoined(spark: SparkSession, root: String,
                          fact: DataFrame, dim: DataFrame,
-                         trashDirs: Seq[String]): Option[Int] = {
-    val keys = metaKeysOf(readMetaL(spark, root), 1, 0)
-    refreshMixedCore(spark, root, fact, Seq(dim -> keys), trashDirs)
-  }
+                         trashDirs: Seq[String]): Option[Int] =
+    refreshCore(spark, root, fact, Seq(dim), trashDirs)(Mixed)
 
   /** Register version v of a versioned AJI (latest when None) and
     * return the AS-OF (fact, dim) frames its dashboards should join:
@@ -702,7 +499,7 @@ object RollupVersioned {
                           fact: DataFrame,
                           dims: Seq[(DataFrame, Seq[(String, String)])])
       : Option[Int] =
-    refreshAppendedCore(spark, root, fact, dims)
+    refreshCore(spark, root, fact, dims.map(_._1), Nil)(PureAppend)
 
   /** Fold a PURE SINGLE-SIDE trash delete (fact or ONE dim) into a NEW
     * version — the q217 star retraction as one atomic publish. Returns
@@ -712,7 +509,7 @@ object RollupVersioned {
                          fact: DataFrame,
                          dims: Seq[(DataFrame, Seq[(String, String)])],
                          trashDirs: Seq[String]): Option[Int] =
-    refreshRemovedCore(spark, root, fact, dims, trashDirs)
+    refreshCore(spark, root, fact, dims.map(_._1), trashDirs)(SingleSideDelete)
 
   /** [[refreshMixed]] at star width: any trash-resolvable diff folds
     * as sequential retraction ∘ append-fold into one new version.
@@ -721,7 +518,7 @@ object RollupVersioned {
                        fact: DataFrame,
                        dims: Seq[(DataFrame, Seq[(String, String)])],
                        trashDirs: Seq[String]): Option[Int] =
-    refreshMixedCore(spark, root, fact, dims, trashDirs)
+    refreshCore(spark, root, fact, dims.map(_._1), trashDirs)(Mixed)
 
   /** Register version v of a versioned STAR summary (latest when None)
     * and return the AS-OF (fact, dims) frames its dashboards should

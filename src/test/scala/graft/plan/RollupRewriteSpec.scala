@@ -2413,7 +2413,11 @@ class RollupRewriteSpec extends SparkSpec {
             r.getDecimal(8).toPlainString))).toMap
       val want = rows(direct)
       RollupRewrite.enable(spark)
-      val got = rows(served)
+      // the served hash aggregate's generated code compiles: a failed
+      // compile logs an ERROR and falls back to interpreted execution
+      val (got, codegenErrors) = logged(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator")(rows(served))
+      assert(codegenErrors.isEmpty, s"codegen failed: ${codegenErrors.mkString("\n")}")
       assert(got == want && want.nonEmpty,
         s"star navigation diverged: got $got want $want")
       // per-side filter routes to its own summary
