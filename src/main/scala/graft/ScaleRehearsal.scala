@@ -50,9 +50,9 @@ object ScaleRehearsal {
     * measure the distributed plan, whatever the local regime's cap. */
   private def servedDistributed(distributed: Long)(
       details: => (Boolean, String)): (Boolean, String) = {
-    val c0 = graft.curate.Bm25.serveCounters
+    val c0 = graft.sources.LocalServe.counters("bm25")
     val (ok, info) = details
-    val c1 = graft.curate.Bm25.serveCounters
+    val c1 = graft.sources.LocalServe.counters("bm25")
     val (l, d) = (c1.localServes - c0.localServes,
       c1.distributedServes - c0.distributedServes)
     (ok && l == 0 && d == distributed,

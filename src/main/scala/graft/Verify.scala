@@ -19,15 +19,23 @@ object Verify {
     // sets it, so recorded rounds always dump the full battery)
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // each query's driver-local serves per regime, local/distributed
+    val regimes = Seq("summary", "bm25")
+    def served() = regimes.map(graft.sources.LocalServe.counters)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      val before = served()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       finally spark.catalog.clearCache()
+      System.err.println(s"[regimes] $name " + regimes.lazyZip(before).lazyZip(served()).map {
+        (r, b, a) =>
+          s"$r=${a.localServes - b.localServes}/${a.distributedServes - b.distributedServes}"
+      }.mkString(" "))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -55,8 +55,8 @@ import graft.functions.{TextFunctions => T}
   * order is free, as it is between two partitionings of the distributed
   * plan. `Bm25ServePropertySpec` pins local ≡ distributed ≡ one-shot
   * [[topK]] over random maintenance sequences on both tiers. Every
-  * regime decision is logged with its inputs and counted
-  * ([[serveCounters]]).
+  * regime decision is logged, with its refusal reason, and counted
+  * under the regime name `bm25` by [[graft.sources.LocalServe]].
   */
 object Bm25 {
 
@@ -367,7 +367,7 @@ object Bm25 {
     * int, bigint and float as that cast does. */
   private def readStats(spark: SparkSession, dir: String): (Double, Double) = {
     val cols = Seq("n_docs", "total_dl")
-    val rows: Seq[Seq[Any]] = graft.sources.Pq.localRows(spark, 16L << 20, dir)
+    val rows: Seq[Seq[Any]] = graft.sources.Pq.localRows(spark, dir)
       .map { case (schema, rs) => rs.map(r => cols.map(c => r(schema.fieldIndex(c)))) }
       .getOrElse(graft.sources.Pq.read(spark, dir)
         .select(cols.map(c => col(c).cast("double")): _*).collect().toSeq.map(_.toSeq))
@@ -561,8 +561,4 @@ object Bm25 {
     topKFromScores(
       scoresDistributed(index, queries, queryId, queryText, k1, b),
       k, scoreDecimals)
-
-  /** Serve-regime telemetry: local and distributed serves, segment
-    * loads and reuses, resident bytes ([[Bm25Local]]). */
-  private[graft] def serveCounters: Bm25Local.Counters = Bm25Local.counters
 }

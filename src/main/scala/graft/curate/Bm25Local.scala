@@ -1,18 +1,16 @@
 package graft.curate
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{TextFunctions => T}
+import graft.sources.LocalServe
 
 /** The driver-local serving regime of a stored index ([[Bm25.IncIndex]]):
   * a bounded request against a small index, answered without a Spark job.
@@ -21,11 +19,14 @@ import graft.functions.{TextFunctions => T}
   * [[LocalRelation]]; every postings, dfs and tombstones frame is a
   * file-backed parquet relation or a local relation; and the index files' visible bytes
   * stay under [[MaxIndexBytes]]. Anything else is served by the
-  * distributed plan, unchanged. Each decision is logged with its inputs
-  * and counted ([[counters]]).
+  * distributed plan, unchanged. Each decision is logged and counted
+  * under the regime name `bm25` by [[graft.sources.LocalServe]], with
+  * the refusal reason (`index not local`, `over cap`, `query side not
+  * local`, `undecodable file`, `rows outside the local model`) and the
+  * segments reused, loaded and resident.
   *
   * How: each parquet file of the relations' frozen listings (no new
-  * listing) is decoded once, through [[graft.sources.Pq.decodeLocal]],
+  * listing) is decoded once, through [[graft.sources.LocalServe.decode]],
   * into a term-grouped columnar segment — per term, the `doc_id`, `tf`
   * and `dl` arrays — and held in one store bounded by
   * [[MaxResidentBytes]] (least recently used first out), keyed by file
@@ -71,20 +72,7 @@ private[curate] object Bm25Local {
     * four indexes at the cap. */
   val MaxResidentBytes: Long = 256L << 20
 
-  /** Read-only serve telemetry, cumulative over the JVM. */
-  final case class Counters(localServes: Long, distributedServes: Long,
-                            segmentLoads: Long, segmentReuses: Long,
-                            residentBytes: Long)
-
-  private val localServes = new AtomicLong
-  private val distributedServes = new AtomicLong
-  private val segmentLoads = new AtomicLong
-  private val segmentReuses = new AtomicLong
-
-  def counters: Counters = Counters(localServes.get, distributedServes.get,
-    segmentLoads.get, segmentReuses.get, Store.bytes)
-
-  private val log = org.slf4j.LoggerFactory.getLogger("graft.curate.Bm25")
+  private val Regime = "bm25"
 
   // ------------------------------------------------------------ segments
 
@@ -108,6 +96,8 @@ private[curate] object Bm25Local {
   private case object TombstonesKind extends Kind { val cols = Seq("doc_id") }
 
   private val Unmodeled = Segment(null, null, null, 64L, modeled = false)
+  /** A file the driver-side decoder refused. */
+  private val Undecodable = Segment(null, null, null, 64L, modeled = false)
 
   /** Build a segment from rows given as accessors over `cols` order. */
   private final class Builder(kind: Kind) {
@@ -217,24 +207,14 @@ private[curate] object Bm25Local {
         Some(attrs.map(_.head))
       else None
     }
-    def files(l: LogicalRelation, named: Seq[(String, Attribute)]): Option[Leaf] =
-      l.relation match {
-        case fsr: HadoopFsRelation if fsr.fileFormat.isInstanceOf[ParquetFileFormat] &&
-            fsr.partitionSchema.isEmpty =>
-          fsr.location match {
-            case idx: PartitioningAwareFileIndex =>
-              pick(named).map(as => FileLeaf(idx.allFiles().filter(_.getLen > 0),
-                StructType(as.map(a => StructField(a.name, a.dataType)))))
-            case _ => None
-          }
-        case _ => None
-      }
     df.queryExecution.optimizedPlan match {
       case l: LocalRelation =>
         pick(l.output.map(a => a.name -> a)).map(as =>
           RowsLeaf(l.data, as.map(a => l.output.indexWhere(_.exprId == a.exprId)),
             as.map(_.dataType)))
-      case l: LogicalRelation => files(l, l.output.map(a => a.name -> a))
+      case l @ LogicalRelation(fsr: HadoopFsRelation, _, _, _, _) =>
+        for (files <- LocalServe.files(fsr).toOption; as <- pick(l.output.map(a => a.name -> a)))
+          yield FileLeaf(files, StructType(as.map(a => StructField(a.name, a.dataType))))
       case _ => None
     }
   }
@@ -265,27 +245,18 @@ private[curate] object Bm25Local {
         else {
           val b = new Builder(kind)
           loaded += 1
-          try {
-            graft.sources.Pq.decodeLocal(conf, st.getPath, schema) { v =>
-              b.add(i => v(i) == null, i => v(i).asInstanceOf[Double],
-                i => v(i) match { case x: Int => x.toLong; case x => x.asInstanceOf[Long] },
-                i => v(i).asInstanceOf[String])
-            }
-            val seg = b.result()
-            Store.put(key, seg)
-            seg
-          } catch {
-            // a file this decoder cannot read as `schema` — e.g. an
-            // int-id batch appended to a bigint-id index, which Spark's
-            // reader widens: the distributed plan reads it by Spark's rules
-            case scala.util.control.NonFatal(e) =>
-              log.info(s"bm25 serve: ${st.getPath} not decodable driver-side: $e")
-              Unmodeled
+          // a refused file (an int-id batch appended to a bigint-id index,
+          // which Spark's reader widens) is read by the distributed plan
+          val refused = LocalServe.decode(Regime, conf, st.getPath, schema) { v =>
+            b.add(i => v(i) == null, i => v(i).asInstanceOf[Double],
+              i => v(i) match { case x: Int => x.toLong; case x => x.asInstanceOf[Long] },
+              i => v(i).asInstanceOf[String])
           }
+          if (refused.isDefined) Undecodable
+          else { val seg = b.result(); Store.put(key, seg); seg }
         }
       }
-      segmentReuses.addAndGet(reused)
-      segmentLoads.addAndGet(loaded)
+      LocalServe.reused(Regime, reused)
       (segs, reused, loaded)
   }
 
@@ -304,14 +275,12 @@ private[curate] object Bm25Local {
     val dfs = leafOf(index.dfs, DfsKind.cols, Seq(strType, dblType))
     val tombstones = index.tombstones.map(ts =>
       leafOf(ts, TombstonesKind.cols, Seq(t => postingsIdType.contains(t))))
-    val fileBytes = (postings.toSeq ++ dfs ++ tombstones.flatten).map {
-      case FileLeaf(fs, _) => fs.map(_.getLen).sum
-      case _ => 0L
-    }.sum
-    val postingsBytes = postings.collect { case FileLeaf(fs, _) => fs.map(_.getLen).sum }
-      .getOrElse(0L)
+    val files = (postings.toSeq ++ dfs ++ tombstones.flatten).flatMap {
+      case FileLeaf(fs, _) => fs
+      case _ => Nil
+    }
     val indexLocal = postings.isDefined && dfs.isDefined && tombstones.forall(_.isDefined)
-    val qplan = if (!indexLocal || fileBytes > MaxIndexBytes) None
+    val qplan = if (!indexLocal || files.map(_.getLen).sum > MaxIndexBytes) None
       else Some(queries.select(col(queryId).as("qid"),
         array_distinct(T.tokens(col(queryText))).as("terms")).queryExecution.optimizedPlan)
     val queryLocal = qplan.exists {
@@ -319,15 +288,12 @@ private[curate] object Bm25Local {
         .contains(l.output.head.dataType)
       case _ => false
     }
-    def decide(regime: String, reused: Int, loaded: Int, why: String): Unit =
-      log.info(s"bm25 serve regime=$regime postings_bytes=$postingsBytes " +
-        s"index_bytes=$fileBytes cap=$MaxIndexBytes index_local=$indexLocal " +
-        s"query_local=${if (qplan.isEmpty) "unchecked" else queryLocal} " +
-        s"segments_reused=$reused segments_loaded=$loaded " +
-        s"resident_bytes=${Store.bytes}$why")
+    def decide(refusal: Option[String], reused: Int, loaded: Int): Unit =
+      LocalServe.decided(Regime, files, MaxIndexBytes, refusal, s" segments_reused=$reused " +
+        s"segments_loaded=$loaded resident_bytes=${Store.bytes}")
     if (!queryLocal) {
-      distributedServes.incrementAndGet()
-      decide("distributed", 0, 0, "")
+      decide(Some(if (!indexLocal) "index not local" else if (qplan.isEmpty) "over cap"
+        else "query side not local"), 0, 0)
       None
     } else {
       val conf = queries.sparkSession.sparkContext.hadoopConfiguration
@@ -337,17 +303,13 @@ private[curate] object Bm25Local {
       val reused = r1 + r2 + tSegs.map(_._2).sum
       val loaded = l1 + l2 + tSegs.map(_._3).sum
       val all = pSegs ++ dSegs ++ tSegs.toSeq.flatMap(_._1)
-      if (!all.forall(_.modeled)) {
-        distributedServes.incrementAndGet()
-        decide("distributed", reused, loaded, " (rows outside the local model)")
-        None
-      } else {
-        val out = score(index, qplan.get.asInstanceOf[LocalRelation], pSegs, dSegs,
-          tSegs.toSeq.flatMap(_._1), k1, b, top, queries, postingsIdType.get)
-        localServes.incrementAndGet()
-        decide("local", reused, loaded, "")
-        Some(out)
-      }
+      val refusal = if (all.exists(_ eq Undecodable)) Some("undecodable file")
+        else if (!all.forall(_.modeled)) Some("rows outside the local model") else None
+      val out = if (refusal.isDefined) None
+        else Some(score(index, qplan.get.asInstanceOf[LocalRelation], pSegs, dSegs,
+          tSegs.toSeq.flatMap(_._1), k1, b, top, queries, postingsIdType.get))
+      decide(refusal, reused, loaded)
+      out
     }
   }
 

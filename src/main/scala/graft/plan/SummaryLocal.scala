@@ -1,9 +1,5 @@
 package graft.plan
 
-import java.util.concurrent.atomic.AtomicLong
-
-import scala.util.control.NonFatal
-
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -13,11 +9,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPl
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.functions.expressions.{HistMergeAgg, KmvMergeAgg}
+import graft.sources.LocalServe
 
 /** The driver-local serving regime of a summary hit: an aggregate the
   * [[RollupRewrite]] served from one summary scan, answered without a
@@ -34,10 +30,11 @@ import graft.functions.expressions.{HistMergeAgg, KmvMergeAgg}
   * merge. Cube, navigation and compensated serves, and anything else,
   * keep the distributed plan, unchanged. The optimized logical plan is
   * the same in both regimes: the tag is not part of it. Each decision is
-  * logged with its inputs and counted ([[counters]]).
+  * logged and counted under the regime name [[Regime]] by
+  * [[graft.sources.LocalServe]], which also lists the scan's files.
   *
   * How: the leaf decodes the scan's frozen file listing (no new listing)
-  * through [[graft.sources.Pq.decodeLocal]] and, as the rows stream from
+  * through [[graft.sources.LocalServe.decode]] and, as the rows stream from
   * the decoder, filters them with Spark's interpreted predicates, groups
   * them on the driver by the grains' unsafe bytes (the hash aggregate's
   * key equality), and runs each aggregate through Spark's own
@@ -71,28 +68,9 @@ object SummaryLocal {
     * serves a batch over the cap, so nothing but this probe checks it. */
   val MaxSummaryBytes: Long = 2L << 20
 
-  /** Read-only serve telemetry, cumulative over the JVM. */
-  final case class Counters(localServes: Long, distributedServes: Long)
-
-  private val localServes = new AtomicLong
-  private val distributedServes = new AtomicLong
-
-  def counters: Counters = Counters(localServes.get, distributedServes.get)
-
-  private val log = org.slf4j.LoggerFactory.getLogger("graft.plan.RollupRewrite")
-
-  private[plan] def decided(regime: String, files: Int, bytes: Long, why: String): Unit = {
-    (if (regime == "local") localServes else distributedServes).incrementAndGet()
-    log.info(s"summary serve regime=$regime files=$files bytes=$bytes " +
-      s"cap=$MaxSummaryBytes$why")
-  }
-
-  /** A local decision taken back when the plan runs: the serve counts as
-    * distributed instead. */
-  private[plan] def retracted(files: Int, bytes: Long, why: String): Unit = {
-    localServes.decrementAndGet()
-    decided("distributed", files, bytes, why)
-  }
+  /** This regime's name in [[graft.sources.LocalServe]]'s log and
+    * counters. */
+  private[plan] val Regime = "summary"
 
   /** Plans a tagged aggregate as [[SummaryLocalExec]] where the local
     * regime holds; otherwise leaves it to Spark's own strategies. */
@@ -105,48 +83,41 @@ object SummaryLocal {
     /** The first reason `agg` keeps the distributed plan, judged on its
       * inputs: the files of every scan under it. */
     private def local(agg: Aggregate, kind: String): Option[SparkPlan] = {
-      val files = agg.collect { case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location }
-        .flatMap {
-          case idx: PartitioningAwareFileIndex => idx.allFiles().filter(_.getLen > 0).toSeq
-          case _ => Nil
-        }
-      val bytes = files.map(_.getLen).sum
+      val listings = agg.collect { case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        LocalServe.files(fs) }
+      val files = listings.flatMap(_.getOrElse(Nil))
       val scan = scanOf(agg)
       val refusal = scan match {
         case _ if kind != SummaryServe => Some(kind)
         case None => Some("plan shape")
-        case Some((needed, conds, fs)) =>
+        case Some((needed, conds)) =>
           val schema = StructType(needed.map(a => StructField(a.name, a.dataType)))
-          if (!fs.fileFormat.isInstanceOf[ParquetFileFormat]) Some("not parquet")
-          else if (!fs.location.isInstanceOf[PartitioningAwareFileIndex]) Some("file index")
-          else if (fs.partitionSchema.nonEmpty) Some("partition columns")
-          else if (bytes > MaxSummaryBytes) Some("over cap")
-          else if (!graft.sources.Pq.decodable(schema)) Some(s"undecodable schema ${schema.simpleString}")
-          else if (!agg.groupingExpressions.forall(_.isInstanceOf[Attribute]) ||
-              !agg.aggregateExpressions.forall(_.deterministic)) Some("plan shape")
-          // a subquery is planned and run by the physical plan that holds
-          // it; the leaf runs none
-          else if ((conds ++ agg.aggregateExpressions).exists(SubqueryExpression.hasSubquery))
-            Some("subquery")
-          else agg.aggregateExpressions.flatMap(_.collect { case ae: AggregateExpression => ae })
-            .find(!servable(_)).map(ae => s"aggregate ${ae.aggregateFunction.prettyName}")
+          // the scan is the plan's one relation
+          listings.collectFirst { case scala.util.Left(why) => why }.orElse {
+            if (files.map(_.getLen).sum > MaxSummaryBytes) Some("over cap")
+            else if (!graft.sources.Pq.decodable(schema))
+              Some(s"undecodable schema ${schema.simpleString}")
+            else if (!agg.groupingExpressions.forall(_.isInstanceOf[Attribute]) ||
+                !agg.aggregateExpressions.forall(_.deterministic)) Some("plan shape")
+            // a subquery is planned and run by the physical plan that holds
+            // it; the leaf runs none
+            else if ((conds ++ agg.aggregateExpressions).exists(SubqueryExpression.hasSubquery))
+              Some("subquery")
+            else agg.aggregateExpressions.flatMap(_.collect { case ae: AggregateExpression => ae })
+              .find(!servable(_)).map(ae => s"aggregate ${ae.aggregateFunction.prettyName}")
+          }
       }
-      refusal match {
-        case Some(reason) =>
-          decided("distributed", files.size, bytes, s" refused=$reason")
-          None
-        case None =>
-          decided("local", files.size, bytes, "")
-          val (needed, conds, _) = scan.get
-          Some(SummaryLocalExec(agg.output, agg.groupingExpressions.map(_.asInstanceOf[Attribute]),
-            agg.aggregateExpressions, needed, conds, files)(agg))
+      LocalServe.decided(Regime, files, MaxSummaryBytes, refusal)
+      scan.filter(_ => refusal.isEmpty).map { case (needed, conds) =>
+        SummaryLocalExec(agg.output, agg.groupingExpressions.map(_.asInstanceOf[Attribute]),
+          agg.aggregateExpressions, needed, conds, files)(agg)
       }
     }
   }
 
-  /** The scan under `Project(needed, Filter*(relation))`: the needed
-    * columns, the filter conjuncts and the file relation. */
-  private def scanOf(agg: Aggregate): Option[(Seq[Attribute], Seq[Expression], HadoopFsRelation)] = {
+  /** The scan under `Project(needed, Filter*(file relation))`: the
+    * needed columns and the filter conjuncts. */
+  private def scanOf(agg: Aggregate): Option[(Seq[Attribute], Seq[Expression])] = {
     def filters(p: LogicalPlan, conds: List[Expression]): (LogicalPlan, List[Expression]) =
       p match {
         case Filter(c, child) => filters(child, c :: conds)
@@ -155,9 +126,9 @@ object SummaryLocal {
     agg.child match {
       case Project(needed, child) if needed.forall(_.isInstanceOf[Attribute]) =>
         filters(child, Nil) match {
-          case (LogicalRelation(fs: HadoopFsRelation, _, _, _, _), conds)
+          case (LogicalRelation(_: HadoopFsRelation, _, _, _, _), conds)
               if conds.forall(_.deterministic) =>
-            Some((needed.map(_.toAttribute), conds, fs))
+            Some((needed.map(_.toAttribute), conds))
           case _ => None
         }
       case _ => None
@@ -311,29 +282,18 @@ final case class SummaryLocalExec(output: Seq[Attribute], groups: Seq[Attribute]
       val schema = StructType(needed.map(a => StructField(a.name, a.dataType)))
       val toCatalyst = needed.map(a => CatalystTypeConverters.createToCatalystConverter(a.dataType))
       val conf = session.sparkContext.hadoopConfiguration
-      // rows stream from the decoder into the aggregation; an error of the
-      // aggregation (an ANSI overflow) is the query's, one of the decoder
-      // makes the distributed plan serve
-      final class Aggregating(cause: Throwable) extends RuntimeException(cause)
-      final class Decoding(cause: Throwable) extends RuntimeException(cause)
-      def feed(f: InternalRow => Unit): Unit =
-        try files.foreach { st =>
-          graft.sources.Pq.decodeLocal(conf, st.getPath, schema) { vals =>
-            val row = new GenericInternalRow(Array.tabulate[Any](vals.length)(i => toCatalyst(i)(vals(i))))
-            try f(row) catch { case NonFatal(e) => throw new Aggregating(e) }
-          }
-        } catch {
-          case a: Aggregating => throw a
-          case NonFatal(e) => throw new Decoding(e)
-        }
-      try SummaryLocal.aggregate(feed, needed, conds, groups, results)
-      catch {
-        case a: Aggregating => throw a.getCause
-        case d: Decoding =>
-          undecodable = true
-          SummaryLocal.retracted(files.size, files.map(_.getLen).sum,
-            s" refused=undecodable file (${d.getCause})")
-          distributed.executeCollect()
+      // rows stream from the decoder into the aggregation; a file the
+      // decoder refuses stops the feed and the distributed plan serves
+      var refusal: Option[String] = None
+      val rows = SummaryLocal.aggregate(f => refusal = files.iterator.flatMap(st =>
+          LocalServe.decode(SummaryLocal.Regime, conf, st.getPath, schema) { vals =>
+            f(new GenericInternalRow(Array.tabulate[Any](vals.length)(i => toCatalyst(i)(vals(i)))))
+          }).nextOption(),
+        needed, conds, groups, results)
+      refusal.fold(rows) { reason =>
+        undecodable = true
+        LocalServe.retracted(SummaryLocal.Regime, files, SummaryLocal.MaxSummaryBytes, reason)
+        distributed.executeCollect()
       }
     }
 

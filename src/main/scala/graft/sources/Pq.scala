@@ -71,37 +71,15 @@ object Pq {
   private def manifestKey(spark: SparkSession, paths: Seq[String])
       : (String, Option[org.apache.hadoop.fs.Path], Seq[String]) = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    var first: org.apache.hadoop.fs.Path = null
-    val rootFiles = scala.collection.mutable.ArrayBuffer.empty[String]
-    // the hidden-name rule applies to DISCOVERED children only, never to
-    // the explicitly passed roots — Spark reads a `.gen_*`-named dir fine
-    // when it IS the path argument (Bm25.swapWrite generations); skipping
-    // it here read every such dir as an EMPTY manifest and collapsed all
-    // their memo keys into one (the r15 dfs-schema-served-for-stats bug)
-    def walk(fs: org.apache.hadoop.fs.FileSystem,
-             st: org.apache.hadoop.fs.FileStatus, depth: Int): Unit = {
-      val name = st.getPath.getName
-      if (depth > 0 && hidden(name)) return
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).foreach(walk(fs, _, depth + 1))
-      else {
-        buf += s"${st.getPath}|${st.getLen}|${st.getModificationTime}"
-        if (depth == 1) rootFiles += st.getPath.toString
-        if (first == null && name.endsWith(".parquet") && st.getLen > 0)
-          first = st.getPath
-      }
-    }
-    val sparkPaths = paths.flatMap { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(conf)
-      val (listed, st) = (buf.size, fs.getFileStatus(hp))
-      rootFiles.clear()
-      walk(fs, st, depth = 0)
+    val listed = paths.map(p => p -> visibleFiles(conf, p))
+    val all = listed.flatMap(_._2.map(_._1))
+    val first = all.find(st => st.getPath.getName.endsWith(".parquet") && st.getLen > 0)
+      .map(_.getPath)
+    val sparkPaths = listed.flatMap { case (p, files) =>
       // every visible file of the root lies directly in it
-      if (st.isDirectory && hidden(hp.getName) && rootFiles.nonEmpty &&
-          rootFiles.size == buf.size - listed)
-        rootFiles.sorted
+      if (hidden(new org.apache.hadoop.fs.Path(p).getName) && files.nonEmpty &&
+          files.forall(_._2 == 1))
+        files.map(_._1.getPath.toString).sorted
       else Seq(p)
     }
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -110,11 +88,31 @@ object Pq {
     // in particular two different empty dirs can never share a key
     paths.sorted.foreach(p =>
       md.update(s"root:$p\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    buf.sorted.foreach(e =>
+    all.map(st => s"${st.getPath}|${st.getLen}|${st.getModificationTime}").sorted.foreach(e =>
       md.update(s"$e\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    (java.util.Base64.getEncoder.encodeToString(md.digest), Option(first),
+    (java.util.Base64.getEncoder.encodeToString(md.digest), first,
       if (sparkPaths.size <= spark.sessionState.conf.parallelPartitionDiscoveryThreshold) sparkPaths
       else paths)
+  }
+
+  /** The visible files under `root`, zero-length ones included, each
+    * with its depth below `root` (0 when `root` is itself a file), in
+    * listing order. The hidden-name rule applies to DISCOVERED children
+    * only, never to the root passed in — Spark reads a `.gen_*`-named dir
+    * fine when it IS the path argument (Bm25.swapWrite generations);
+    * skipping it here read every such dir as an EMPTY manifest and
+    * collapsed all their memo keys into one (the r15
+    * dfs-schema-served-for-stats bug). */
+  private def visibleFiles(conf: org.apache.hadoop.conf.Configuration,
+                           root: String): Seq[(org.apache.hadoop.fs.FileStatus, Int)] = {
+    val hp = new org.apache.hadoop.fs.Path(root)
+    val fs = hp.getFileSystem(conf)
+    def walk(st: org.apache.hadoop.fs.FileStatus,
+             depth: Int): Seq[(org.apache.hadoop.fs.FileStatus, Int)] =
+      if (depth > 0 && hidden(st.getPath.getName)) Nil
+      else if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk(_, depth + 1))
+      else Seq(st -> depth)
+    walk(fs.getFileStatus(hp), 0)
   }
 
   /** Open `file` with the read options of `conf`, the session's Hadoop
@@ -143,6 +141,10 @@ object Pq {
       .map(json => deepNullable(org.apache.spark.sql.types.DataType
         .fromJson(json).asInstanceOf[StructType]))
 
+  /** Visible bytes of a table up to which [[readLocal]] reads it on the
+    * driver: the metadata-table cap. */
+  val MaxLocalBytes: Long = 16L << 20
+
   /** Driver-side read of a SMALL, FLAT parquet table into a local-
     * relation DataFrame — ZERO Spark jobs (guide §7.3: driver overhead).
     * For metadata-bounded tables (version meta, manifests, 1-row stats)
@@ -155,10 +157,9 @@ object Pq {
     * Returns None (caller falls back to the cluster read) unless every
     * visible file is Spark-written parquet (footer schema present), the
     * schema is flat with primitive types only, and the total visible
-    * bytes stay under `maxBytes`. */
-  def readLocal(spark: SparkSession, maxBytes: Long,
-                paths: String*): Option[DataFrame] =
-    localRows(spark, maxBytes, paths: _*).map { case (schema, rows) =>
+    * bytes stay under [[MaxLocalBytes]]. */
+  def readLocal(spark: SparkSession, paths: String*): Option[DataFrame] =
+    localRows(spark, paths: _*).map { case (schema, rows) =>
       spark.createDataFrame(java.util.Arrays.asList(
         rows.map(vals => org.apache.spark.sql.Row(vals.toIndexedSeq: _*)): _*), schema)
     }
@@ -167,26 +168,13 @@ object Pq {
     * schema of the first file and every record as [[decodeLocal]] emits
     * it. None where [[readLocal]] refuses the table. Each file is opened
     * once: the first file's reader gives the schema and then its rows. */
-  private[graft] def localRows(spark: SparkSession, maxBytes: Long,
+  private[graft] def localRows(spark: SparkSession,
                                paths: String*): Option[(StructType, Seq[Array[Any]])] =
     try {
       val conf = spark.sparkContext.hadoopConfiguration
-      val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-      var total = 0L
-      def walk(fs: org.apache.hadoop.fs.FileSystem,
-               st: org.apache.hadoop.fs.FileStatus, isRoot: Boolean): Unit = {
-        val name = st.getPath.getName
-        if (!isRoot && hidden(name)) return
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).foreach(walk(fs, _, isRoot = false))
-        else if (st.getLen > 0) { files += st.getPath; total += st.getLen }
-      }
-      paths.foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val fs = hp.getFileSystem(conf)
-        walk(fs, fs.getFileStatus(hp), isRoot = true)
-      }
-      if (files.isEmpty || total > maxBytes) None
+      val listed = paths.flatMap(visibleFiles(conf, _)).map(_._1).filter(_.getLen > 0)
+      val files = listed.map(_.getPath)
+      if (files.isEmpty || listed.map(_.getLen).sum > MaxLocalBytes) None
       else {
         val rows = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
         val first = openReader(conf, files.head)
@@ -215,9 +203,9 @@ object Pq {
     })
   }
 
-  /** The one driver-side parquet decoder — [[readLocal]] and the BM25
-    * resident segments ([[graft.curate.Bm25Local]]) both read through
-    * it: `emit` receives every record of `file` as the values of
+  /** The one driver-side parquet decoder — [[readLocal]] and the
+    * driver-local serve regimes ([[LocalServe.decode]]) both read
+    * through it: `emit` receives every record of `file` as the values of
     * `schema`'s fields (a [[decodable]] schema), null where a value is
     * absent. Fields resolve by NAME against the file's own schema: a
     * file written from a projected frame can order them differently.
@@ -319,10 +307,9 @@ object Pq {
     }
   }
 
-  /** [[readLocal]] with the metadata-table default cap, falling back to
-    * the memoized cluster read. */
+  /** [[readLocal]], falling back to the memoized cluster read. */
   def readSmall(spark: SparkSession, paths: String*): DataFrame =
-    readLocal(spark, 16L << 20, paths: _*)
+    readLocal(spark, paths: _*)
       .getOrElse(read(spark, paths: _*))
 
   /** `DataType.asNullable` (private[spark]) re-spelled: what the file

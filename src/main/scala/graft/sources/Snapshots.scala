@@ -84,7 +84,7 @@ object Snapshots {
     val (f, root) = fs(spark, dir)
     val p = versionDir(root, v)
     require(f.exists(p), s"snapshot version $v does not exist under $dir")
-    Pq.readLocal(spark, 16L << 20, p.toString)
+    Pq.readLocal(spark, p.toString)
       .getOrElse(readVersion(spark, dir, v))
   }
 

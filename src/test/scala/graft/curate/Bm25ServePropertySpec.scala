@@ -3,6 +3,8 @@ package graft.curate
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
+import graft.sources.LocalServe
+
 /** The serving regimes of a stored BM25 index agree EXACTLY: over random
   * small corpora and maintenance sequences (append, delete, compact, and
   * a rebuild at the same root) on both tiers, the driver-local regime,
@@ -97,9 +99,9 @@ object Bm25ServePropertySpec extends Properties("Bm25ServeRegimes") {
         graft.plan.Checkpoints.release()
         Seq("plain" -> Bm25.loadIncIndex(spark, plain),
             "versioned" -> Bm25Versioned.load(spark, versioned)).foreach { case (tier, idx) =>
-          val before = Bm25.serveCounters.localServes
+          val before = LocalServe.counters("bm25").localServes
           val local = Bm25.topKAgainstIncIndex(idx, queries, "qid", "qtext", t.k)
-          val tookLocal = Bm25.serveCounters.localServes == before + 1
+          val tookLocal = LocalServe.counters("bm25").localServes == before + 1
           val dist = Bm25.topKDistributed(idx, queries, "qid", "qtext", t.k)
           val (l, d) = (rows(local), rows(dist))
           if (!tookLocal) failures += s"$step/$tier: the local regime was not taken"

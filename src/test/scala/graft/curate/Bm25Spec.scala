@@ -3,6 +3,7 @@ package graft.curate
 import org.apache.spark.sql.functions.lit
 
 import graft.SparkSpec
+import graft.sources.LocalServe
 
 /** Pins [[Bm25]] against the Okapi formula computed by hand, the
   * quantized-score tie-break, and the blank-doc exclusion from corpus
@@ -465,7 +466,7 @@ class Bm25Spec extends SparkSpec {
       Bm25.buildAndSaveIncIndex(spark, docs.filter($"doc_id" <= 3), "doc_id", "text", tmp)
       Bm25.deleteFromIncIndex(spark, tmp, Seq(2L).toDF("doc_id"), "doc_id")
       spark.sparkContext.addSparkListener(listener)
-      val c0 = Bm25.serveCounters
+      val c0 = LocalServe.counters("bm25")
       spark.sparkContext.setJobGroup(group, "local serve")
       // the region covers the load: pointers, stats row and listings too
       val (idx, served) = try {
@@ -478,7 +479,7 @@ class Bm25Spec extends SparkSpec {
         finally spark.sparkContext.clearJobGroup()
       Thread.sleep(1000) // the listener bus delivers events asynchronously
       assert(jobs.get == 0, s"the default serve of a small index ran ${jobs.get} Spark jobs")
-      val c1 = Bm25.serveCounters
+      val c1 = LocalServe.counters("bm25")
       assert(c1.localServes == c0.localServes + 2 && c1.distributedServes == c0.distributedServes)
       // the second serve decoded nothing: every file was resident
       val dist = Bm25.topKDistributed(idx, queries, "qid", "qtext", k = 3)
@@ -489,25 +490,58 @@ class Bm25Spec extends SparkSpec {
       assert(scores.map(_.toString).toSet == dScores.collect().map(_.toString).toSet)
       // an append loads only the new postings file and the new dfs
       Bm25.appendIncIndex(spark, tmp, docs.filter($"doc_id" > 3), "doc_id", "text")
-      val c2 = Bm25.serveCounters
+      val c2 = LocalServe.counters("bm25")
       val after = Bm25.topKAgainstIncIndex(Bm25.loadIncIndex(spark, tmp), queries,
         "qid", "qtext", k = 3).as[(Long, Int, Long, Double)].collect().toSet
-      val c3 = Bm25.serveCounters
+      val c3 = LocalServe.counters("bm25")
       assert(c3.localServes == c2.localServes + 1)
-      assert(c3.segmentReuses - c2.segmentReuses >= 2, s"$c2 -> $c3") // old postings + tombstones
+      assert(c3.filesReused - c2.filesReused >= 2, s"$c2 -> $c3") // old postings + tombstones
       assert(after == Bm25.topK(docs.filter($"doc_id" =!= 2L), "doc_id", "text",
         queries, "qid", "qtext", k = 3).as[(Long, Int, Long, Double)].collect().toSet)
       graft.plan.Checkpoints.release()
       // a query side that is not local takes the distributed plan
-      val c4 = Bm25.serveCounters
-      Bm25.topKAgainstIncIndex(Bm25.loadIncIndex(spark, tmp),
-        spark.range(100, 101).select($"id".as("qid"), lit("apple").as("qtext")),
-        "qid", "qtext", k = 3).collect()
-      assert(Bm25.serveCounters.distributedServes == c4.distributedServes + 1)
+      val c4 = LocalServe.counters("bm25")
+      val (_, c4Lines) = logged("graft.sources.LocalServe") {
+        Bm25.topKAgainstIncIndex(Bm25.loadIncIndex(spark, tmp),
+          spark.range(100, 101).select($"id".as("qid"), lit("apple").as("qtext")),
+          "qid", "qtext", k = 3).collect()
+      }
+      assert(LocalServe.counters("bm25").distributedServes == c4.distributedServes + 1)
+      assert(c4Lines.exists(l => l.startsWith("bm25 serve regime=distributed") &&
+        l.contains("refused=query side not local")), c4Lines)
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
     }
+  }
+
+  test("a postings file the driver-side decoder refuses (int ids under a bigint index) serves the distributed rows") {
+    val docs = Seq((1L, "apple banana"), (2L, "banana cherry"), (3L, "cherry apple apple"))
+      .toDF("doc_id", "text")
+    val queries = Seq((100L, "apple"), (101L, "banana cherry")).toDF("qid", "qtext")
+    val tmp = java.nio.file.Files.createTempDirectory("bm25_undecodable").toString
+    try {
+      Bm25.buildAndSaveIncIndex(spark, docs, "doc_id", "text", tmp)
+      val built = Bm25.loadIncIndex(spark, tmp)
+      val postingsDir = Bm25.resolveTable(spark, tmp, "postings")
+      // a batch written with int ids, which Spark's reader widens to bigint
+      Seq((9, 2.0, "apple", 1.0), (9, 2.0, "fig", 1.0)).toDF("doc_id", "dl", "term", "tf")
+        .coalesce(1).write.mode("append").parquet(postingsDir)
+      val idx = built.copy(postings = spark.read.schema(built.postings.schema).parquet(postingsDir))
+      val c0 = LocalServe.counters("bm25")
+      val (served, lines) = logged("graft.sources.LocalServe") {
+        Bm25.topKAgainstIncIndex(idx, queries, "qid", "qtext", k = 3)
+          .as[(Long, Int, Long, Double)].collect().toSet
+      }
+      val c1 = LocalServe.counters("bm25")
+      assert(c1.localServes == c0.localServes && c1.distributedServes == c0.distributedServes + 1,
+        s"$c0 -> $c1")
+      assert(lines.exists(l => l.startsWith("bm25 serve regime=distributed") &&
+        l.contains("refused=undecodable file")), lines)
+      val dist = Bm25.topKDistributed(idx, queries, "qid", "qtext", k = 3)
+        .as[(Long, Int, Long, Double)].collect().toSet
+      assert(served == dist && dist.exists(_._3 == 9L), dist)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
   test("loadIncIndex reads nDocs and totalDl as a plain read of the resolved stats table") {
@@ -565,7 +599,7 @@ class Bm25Spec extends SparkSpec {
       val queries = (0 until 8).map(q => (q.toLong, s"w$q w${q + 5}"))
       val want = Bm25.topKDistributed(idx, queries.toDF("qid", "qtext"), "qid", "qtext", k = 5)
         .as[(Long, Int, Long, Double)].collect().toSet
-      val c0 = Bm25.serveCounters
+      val c0 = LocalServe.counters("bm25")
       val tasks = (0 until 16).map { i =>
         pool.submit(new java.util.concurrent.Callable[Set[(Long, Int, Long, Double)]] {
           def call(): Set[(Long, Int, Long, Double)] =
@@ -574,7 +608,7 @@ class Bm25Spec extends SparkSpec {
         })
       }
       tasks.foreach(t => assert(t.get() == want))
-      assert(Bm25.serveCounters.localServes == c0.localServes + 16)
+      assert(LocalServe.counters("bm25").localServes == c0.localServes + 16)
     } finally {
       pool.shutdown()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))

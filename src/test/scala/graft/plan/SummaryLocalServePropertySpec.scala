@@ -8,7 +8,7 @@ import graft.curate.Curate.portableHash60
 import graft.functions.expressions.HistAgg.histSketch
 import graft.functions.expressions.KmvDistinctAgg.kmvSketch
 import graft.plan.{RollupRewrite => R, RollupVersioned => RV}
-import graft.sources.Pq
+import graft.sources.{LocalServe, Pq}
 
 /** The serving regimes of a summary hit agree: over plain, joined and
   * star [[RollupVersioned]] summaries driven through random append,
@@ -179,10 +179,10 @@ object SummaryLocalServePropertySpec extends Properties("SummaryLocalServe") {
           val scans = R.scanRootPaths(served)
           if (scans.isEmpty || !scans.forall(_.contains("/pool/b")))
             failures += s"$step/q$i ${q.shape}: not served from a summary ($scans)"
-          val before = SummaryLocal.counters.localServes
+          val before = LocalServe.counters("summary").localServes
           spark.sparkContext.setJobGroup(group, "local summary serve")
           val got = try served.collect().toSeq finally spark.sparkContext.clearJobGroup()
-          if (SummaryLocal.counters.localServes != before + 1)
+          if (LocalServe.counters("summary").localServes != before + 1)
             failures += s"$step/q$i ${q.shape}: the local regime was not taken"
           R.disable(spark)
           val want = try build(q).collect().toSeq finally R.enable(spark)

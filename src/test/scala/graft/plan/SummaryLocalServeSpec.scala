@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.LocalServe
 
 /** Edge cases of the driver-local summary serve ([[SummaryLocal]]): the
   * rows and errors it gives where the distributed plan's are easy to
@@ -34,7 +35,7 @@ class SummaryLocalServeSpec extends SparkSpec {
   }
 
   private def serveDecisions[A](body: => A): (A, Seq[String]) = {
-    val (out, lines) = logged("graft.plan.RollupRewrite")(body)
+    val (out, lines) = logged("graft.sources.LocalServe")(body)
     (out, lines.filter(_.startsWith("summary serve regime=")))
   }
 
@@ -65,10 +66,10 @@ class SummaryLocalServeSpec extends SparkSpec {
 
   /** `q` served locally with zero jobs; its rows. */
   private def servedLocally(q: => DataFrame): Set[Row] = {
-    val before = SummaryLocal.counters
+    val before = LocalServe.counters("summary")
     val ((rows, decisions), jobs) = jobsOf(serveDecisions(q.collect().toSet))
     assert(jobs == 0, s"a local summary serve ran $jobs Spark jobs")
-    assert(SummaryLocal.counters.localServes == before.localServes + 1, decisions)
+    assert(LocalServe.counters("summary").localServes == before.localServes + 1, decisions)
     assert(decisions.nonEmpty && decisions.forall(_.startsWith("summary serve regime=local")),
       decisions)
     rows
@@ -77,10 +78,10 @@ class SummaryLocalServeSpec extends SparkSpec {
   /** `q` served from a summary by the distributed plan, refused for
     * `reason`; its rows. */
   private def servedDistributed(reason: String)(q: => DataFrame): Set[Row] = {
-    val before = SummaryLocal.counters
+    val before = LocalServe.counters("summary")
     val (rows, decisions) = serveDecisions(q.collect().toSet)
-    assert(SummaryLocal.counters.localServes == before.localServes, decisions)
-    assert(SummaryLocal.counters.distributedServes > before.distributedServes, decisions)
+    assert(LocalServe.counters("summary").localServes == before.localServes, decisions)
+    assert(LocalServe.counters("summary").distributedServes > before.distributedServes, decisions)
     assert(decisions.nonEmpty && decisions.forall(d =>
         d.startsWith("summary serve regime=distributed") && d.contains(s"refused=$reason")),
       decisions)
@@ -127,9 +128,9 @@ class SummaryLocalServeSpec extends SparkSpec {
           case t: org.apache.spark.SparkThrowable if t.getCondition != null &&
               !t.getCondition.startsWith("INTERNAL") => t.getCondition
         }.getOrElse(s"no condition: $e")
-      val before = SummaryLocal.counters.localServes
+      val before = LocalServe.counters("summary").localServes
       val local = intercept[Throwable](base.agg(sum("m")).collect())
-      assert(SummaryLocal.counters.localServes == before + 1)
+      assert(LocalServe.counters("summary").localServes == before + 1)
       RollupRewrite.disable(spark)
       val dist = intercept[Throwable](base.agg(sum("m")).collect())
       assert(condition(local) == condition(dist) && condition(local) == "ARITHMETIC_OVERFLOW",
@@ -223,9 +224,9 @@ class SummaryLocalServeSpec extends SparkSpec {
         Seq("g"), Seq("m"))
       RollupRewrite.enable(spark)
       def q() = base.groupBy("g").agg(sum("m").as("s"), count(lit(1)).as("n"))
-      val before = SummaryLocal.counters
+      val before = LocalServe.counters("summary")
       val (rows, decisions) = serveDecisions(q().collect().toSet)
-      val after = SummaryLocal.counters
+      val after = LocalServe.counters("summary")
       assert(after.localServes == before.localServes, decisions)
       assert(after.distributedServes == before.distributedServes + 1, decisions)
       assert(decisions.size == 2 && decisions.head.startsWith("summary serve regime=local") &&

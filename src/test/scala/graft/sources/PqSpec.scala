@@ -72,7 +72,7 @@ class PqSpec extends SparkSpec {
       .map { case (k, s, d, l) => (k, s, d, l.map(Long.box).orNull) }
       .toDF("kind", "key", "num", "id")
       .write.parquet(dir)
-    val local = Pq.readLocal(spark, 16L << 20, dir).get
+    val local = Pq.readLocal(spark, dir).get
     val bare = spark.read.parquet(dir)
     assert(local.schema == bare.schema)
     assert(local.collect().map(_.toString).sorted.toSeq ==
@@ -86,7 +86,7 @@ class PqSpec extends SparkSpec {
     val dir = s"${tmp()}/cent"
     Seq((0, Seq(1.0, 2.0)), (1, Seq(3.0, 4.5))).toDF("cell", "centroid")
       .write.parquet(dir)
-    val local = Pq.readLocal(spark, 16L << 20, dir).get
+    val local = Pq.readLocal(spark, dir).get
     val got = local.orderBy("cell").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
     assert(got == Seq((0, Seq(1.0, 2.0)), (1, Seq(3.0, 4.5))))
@@ -103,7 +103,7 @@ class PqSpec extends SparkSpec {
       }, if (i % 5 == 0) null else s"t$i")
     }.toDF("cell", "v", "name")
       .coalesce(1).write.option("parquet.block.size", "4096").parquet(dir)
-    val local = Pq.readLocal(spark, 16L << 20, dir).get
+    val local = Pq.readLocal(spark, dir).get
     val bare = spark.read.parquet(dir)
     assert(local.schema == bare.schema)
     assert(local.collect().map(_.toString).sorted.toSeq ==
@@ -113,7 +113,7 @@ class PqSpec extends SparkSpec {
   test("readLocal refuses unsupported shapes; readSmall falls back") {
     val dir = s"${tmp()}/nested"
     Seq((1L, (2L, "x"))).toDF("id", "s").write.parquet(dir)
-    assert(Pq.readLocal(spark, 16L << 20, dir).isEmpty)
+    assert(Pq.readLocal(spark, dir).isEmpty)
     assert(Pq.readSmall(spark, dir).count() == 1)
   }
 
@@ -123,7 +123,7 @@ class PqSpec extends SparkSpec {
         (5, Some("1900-03-01")), (6, Some("9999-12-31")))
       .toDF("id", "d").select(col("id"), to_date(col("d")).as("transaction_date"))
       .write.parquet(dir)
-    val local = Pq.readLocal(spark, 16L << 20, dir).get
+    val local = Pq.readLocal(spark, dir).get
     val bare = spark.read.parquet(dir)
     assert(local.schema == bare.schema)
     assert(local.collect().map(_.toString).sorted.toSeq ==
@@ -132,11 +132,11 @@ class PqSpec extends SparkSpec {
     val dec = s"${tmp()}/dec"
     Seq((1, "1.50")).toDF("id", "v").select(col("id"), col("v").cast("decimal(10,2)"))
       .write.parquet(dec)
-    assert(Pq.readLocal(spark, 16L << 20, dec).isEmpty)
+    assert(Pq.readLocal(spark, dec).isEmpty)
     val ts = s"${tmp()}/ts"
     Seq((1, "2024-01-01 10:00:00")).toDF("id", "t")
       .select(col("id"), to_timestamp(col("t")).as("t")).write.parquet(ts)
-    assert(Pq.readLocal(spark, 16L << 20, ts).isEmpty)
+    assert(Pq.readLocal(spark, ts).isEmpty)
   }
 
   test("multi-path read unions the files under one memoized schema") {
